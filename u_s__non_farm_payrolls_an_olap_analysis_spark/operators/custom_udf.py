@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.plan_cache import plan_memo
 from ..functions.timeparts import year_of
 from ..io import read_table
 
@@ -67,6 +68,7 @@ def dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (gaps-and-islands): new session when the gap
     to the previous event reaches 30 minutes; session id = running count

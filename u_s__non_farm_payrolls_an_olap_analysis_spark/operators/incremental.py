@@ -14,14 +14,15 @@ streaming/stateful.py).
 The reference recomputes its aggregate dashboard from the full frame on
 every run (`dashboard_nfp.py:44-63` — eager pandas, no incremental
 notion); this module is the engine-side answer. The MV state is
-materialized once per (session, sf_dir) like the other derived layouts
-(layout.py memo pattern); the DuckDB oracle recomputes the SAME answer
-from the full table, so the parity gate proves delta-folding ==
-full-recompute.
+materialized once per (session, sf_dir, ``orders`` source signature)
+like the other derived layouts (layout.py memo pattern); the DuckDB
+oracle recomputes the SAME answer from the full table, so the parity
+gate proves delta-folding == full-recompute.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +32,7 @@ from pyspark.sql import types as T
 from ..functions.numerics import SCALE, dsum_scaled, dsum_sql
 from ..functions.timeparts import month_start
 from ..io import read_table
+from ..streaming.stream_windows import _source_sig
 from .layout import _derived_path
 
 # Everything strictly BEFORE the cutoff is "already in the MV"; the delta
@@ -60,11 +62,17 @@ def _mv_state(
     spark: SparkSession, sf_dir: str, cutoff: str = MV_CUTOFF
 ) -> DataFrame:
     """The stored MV: monthly partials over the pre-cutoff base, written
-    once per session+sf_dir+cutoff (the path carries the cutoff so the
-    invariance test can build states at several cutoffs side by side).
-    Read back with an explicit schema — an empty base writes no parquet
-    footers (layout.py has the same guard)."""
-    d = _derived_path(sf_dir, f"mv_monthly_state_{cutoff.replace('-', '')}")
+    once per session+sf_dir+cutoff+source signature (the path carries the
+    cutoff so the invariance test can build states at several cutoffs
+    side by side, and the ``orders`` signature so a rewritten table —
+    an upsert swapped in at the same path — rebuilds the state instead of
+    serving pre-write partials). Read back with an explicit schema — an
+    empty base writes no parquet footers (layout.py has the same guard)."""
+    sig = _source_sig(os.path.abspath(f"{sf_dir}/orders.parquet"))
+    tag = hashlib.sha1(repr(sig).encode()).hexdigest()[:12]
+    d = _derived_path(
+        sf_dir, f"mv_monthly_state_{cutoff.replace('-', '')}_{tag}"
+    )
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         base = read_table(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") < F.lit(cutoff).cast("timestamp")

@@ -260,6 +260,7 @@ def rollup_quarter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def rollup_year_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — yearly roll-up (``dashboard_nfp.py:250``)."""
     return (
@@ -281,6 +282,7 @@ def rollup_decade_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def dice_q4_avg_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 — Q4 growth by month name. SQL-expander semantics chosen per
     SURVEY §2.5: lag over the FULL series first (so October vs September is
@@ -331,6 +333,7 @@ def argmax_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def window_pct_change_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — lag-1 pct change over the whole series (``etl.py:37``),
     null first row retained (callers drop per P7)."""
@@ -415,6 +418,7 @@ def top1_by_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@plan_memo
 def drill_sharpest_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drill-down Q2 — the month with the sharpest MoM drop
     (``dashboard_nfp.py:398-401``)."""
@@ -436,6 +440,7 @@ def drill_sharpest_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@plan_memo
 def dice_recovery_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 — the recovery analysis, the reference's one nontrivial query and
     its worst anti-pattern: a per-drop ``iterrows`` loop
