@@ -45,8 +45,8 @@ print(f"data={D} buckets={BUCKETS} warehouse={wh}")
 
 import hashlib  # noqa: E402
 
-from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.layout import (  # noqa: E402
-    _table_sig,
+from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.derived import (  # noqa: E402
+    table_sig,
 )
 
 # the tag carries (data_dir, bucket count, SOURCE CONTENT signature):
@@ -59,8 +59,8 @@ _TAG = hashlib.md5(
     repr((
         os.path.abspath(D),
         BUCKETS,
-        _table_sig(os.path.join(D, "orders.parquet")),
-        _table_sig(os.path.join(D, "lineitem.parquet")),
+        table_sig(os.path.join(D, "orders.parquet")),
+        table_sig(os.path.join(D, "lineitem.parquet")),
     )).encode()
 ).hexdigest()[:8]
 

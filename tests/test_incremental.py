@@ -57,39 +57,20 @@ def test_weighted_median_matches_expanded_median(spark):
 
 def test_mv_refresh_after_upsert_matches_full_recompute(spark, tmp_path):
     """The stored MV state must follow a rewrite of ``orders``: refresh,
-    upsert pre-cutoff rows that change totals, refresh again — the second
-    answer must equal the full recompute on the NEW table, not fold the
-    delta into pre-write partials."""
-    import os
-    import shutil
-
-    import duckdb
-
+    upsert rows that change totals on both sides of the cutoff, refresh
+    again — the second answer must equal the full recompute on the NEW
+    table, not fold the delta into pre-write partials."""
     from scripts.check_parity import canon_frame
-    from u_s__non_farm_payrolls_an_olap_analysis_spark import io
+    from tests.conftest import duck_over, upsert_orders, writable_orders_copy
 
     d = str(tmp_path)
-    target = os.path.join(d, "orders.parquet")
-    os.makedirs(target)
-    shutil.copy(f"{SF}/orders.parquet", os.path.join(target, "part-0.parquet"))
+    writable_orders_copy(d)
     before = sorted(incremental.mv_incremental_refresh(spark, d).collect())
 
-    orders = pd.read_parquet(f"{SF}/orders.parquet")
-    pre = orders[orders["o_orderdate"] < pd.Timestamp(incremental.MV_CUTOFF)]
-    upd = pre.iloc[::5].copy()
-    upd["o_totalprice"] = upd["o_totalprice"] + 1000.25
-    tgt = io.read_table(spark, d, "orders")
-    merged = io.upsert_by_key(
-        tgt, spark.createDataFrame(upd, schema=tgt.schema), ["o_orderkey"]
-    )
-    io.write_upsert_parquet(target, merged)
-    io.clear_table_cache()
+    upsert_orders(spark, d)
 
     after = incremental.mv_incremental_refresh(spark, d)
     assert sorted(after.collect()) != before
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{target}/*.parquet')"
-    )
+    con = duck_over(d)
     want = con.execute(incremental.ORACLE["mv_incremental_refresh"]).fetchdf()
     assert canon_frame(after.toPandas()) == canon_frame(want)

@@ -9,17 +9,13 @@ the new table, checked against its DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import duckdb
-import pandas as pd
 import pytest
 
 import bench
 from scripts.check_parity import canon_frame
 from tests.conftest import SF_SMOKE as SF
-from u_s__non_farm_payrolls_an_olap_analysis_spark import io, registry
+from tests.conftest import duck_over, upsert_orders, writable_orders_copy
+from u_s__non_farm_payrolls_an_olap_analysis_spark import registry
 from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.plan_cache import (
     plan_memo,
 )
@@ -65,34 +61,13 @@ def test_memo_invalidated_by_upsert(spark, tmp_path):
     olap/custom_udf panel may serve its pre-write plan."""
     assert {"rollup_year_sum", "sessionize_batch"} <= set(MEMOIZED_PANELS)
     d = str(tmp_path)
-    target = os.path.join(d, "orders.parquet")
-    os.makedirs(target)
-    shutil.copy(f"{SF}/orders.parquet", os.path.join(target, "part-0.parquet"))
-    os.symlink(f"{SF}/events.parquet", os.path.join(d, "events.parquet"))
+    writable_orders_copy(d)
     queries = registry.queries()
     before = {k: sorted(queries[k](spark, d).collect()) for k in MEMOIZED_PANELS}
 
-    # reprice every 7th order (all years, all months) and add new orders
-    orders = pd.read_parquet(f"{SF}/orders.parquet")
-    upd = orders.iloc[::7].copy()
-    upd["o_totalprice"] = upd["o_totalprice"] * 3 + 1000.25
-    new = orders.iloc[:40].copy()
-    new["o_orderkey"] += int(orders["o_orderkey"].max()) + 1
-    upd = pd.concat([upd, new], ignore_index=True)
-    tgt = io.read_table(spark, d, "orders")
-    merged = io.upsert_by_key(
-        tgt, spark.createDataFrame(upd, schema=tgt.schema), ["o_orderkey"]
-    )
-    io.write_upsert_parquet(target, merged)
-    io.clear_table_cache()
+    upsert_orders(spark, d)
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{target}/*.parquet')"
-    )
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF}/events.parquet')"
-    )
+    con = duck_over(d)
     oracles = registry.oracle_sql()
     stale = []
     for k in MEMOIZED_PANELS:

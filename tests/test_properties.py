@@ -266,11 +266,14 @@ def test_nearest_long_away_matches_c_round_on_edges(spark):
 def test_layout_dir_distinct_for_same_basename(tmp_path):
     """Two sf_dirs sharing a basename must not share a layout directory
     (ADVICE r4: basename-only tags silently overwrite)."""
-    from u_s__non_farm_payrolls_an_olap_analysis_spark.operators import layout
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.derived import (
+        derived_path,
+    )
 
     a = tmp_path / "a" / "sf0.01"
     b = tmp_path / "b" / "sf0.01"
-    assert layout._layout_dir(str(a)) != layout._layout_dir(str(b))
+    kind = ("orders_by_year", ("orders",))
+    assert derived_path(str(a), *kind) != derived_path(str(b), *kind)
 
 
 # micros epochs covering 1900-2100 wall range plus the negative-epoch edge

@@ -19,7 +19,6 @@ def test_registry_shape():
                          "dedup_embedding_cosine_prod",
                          "agg_approx_count_distinct",
                          "agg_approx_percentiles",
-                         "sim_search_ann_ivf_kmeans",
                          "agg_hll_sketch_merge"}
 
 
@@ -205,3 +204,74 @@ def test_every_oracle_sql_executes_in_duckdb():
         except Exception as e:  # noqa: BLE001 - collect every breakage
             failures.append(f"{name}: {str(e)[:150]}")
     assert not failures, "\n".join(failures)
+
+
+def _private_state_devices(src: str, rel: str) -> list[str]:
+    """Ways an engine module can grow its own derived-state policy: a
+    per-process temp base (``tempfile.mkdtemp``), an exit hook
+    (``atexit``), or a module-level path-memo dict (``*MEMO*``). The two
+    serving-path memos, invalidated by ``io.clear_table_cache()``, are
+    allowed."""
+    import ast
+
+    allowed = {("io.py", "_TABLE_MEMO"), ("functions/plan_cache.py", "_MEMO")}
+    tree = ast.parse(src)
+    out = []
+    for node in ast.walk(tree):
+        names = []
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [node.module] + [a.name for a in node.names]
+        elif isinstance(node, ast.Attribute):
+            names = [node.attr]
+        out += [
+            f"{rel}:{node.lineno}: {n}"
+            for n in names
+            if n in ("atexit", "mkdtemp")
+        ]
+    for node in tree.body:
+        if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+            continue
+        v = node.value
+        if not isinstance(v, ast.Dict) and not (
+            isinstance(v, ast.Call) and getattr(v.func, "id", None) == "dict"
+        ):
+            continue
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        out += [
+            f"{rel}:{node.lineno}: module-level {t.id}"
+            for t in targets
+            if isinstance(t, ast.Name)
+            and "MEMO" in t.id
+            and (rel, t.id) not in allowed
+        ]
+    return out
+
+
+def test_derived_state_has_one_owner():
+    """Every on-disk copy of a source table is keyed by that table's
+    content signature in ONE place, ``functions/derived.py`` (the path is
+    the memo, so a write rebuilds the state). Any other engine module
+    that calls ``tempfile.mkdtemp``, registers an ``atexit`` hook or
+    keeps a module-level path memo is a private freshness policy — the
+    shape that left five keys answering from pre-write tables.
+    Self-tested against a synthetic repro of each device."""
+    import pathlib
+
+    repro = (
+        "import atexit, tempfile\n"
+        "_DIR_MEMO: dict[str, str] = {}\n"
+        "_OTHER_MEMO = dict()\n"
+        "def f():\n"
+        "    d = tempfile.mkdtemp()\n"
+        "    atexit.register(print, d)\n"
+    )
+    assert len(_private_state_devices(repro, "x.py")) == 4
+    pkg = pathlib.Path(registry.__file__).resolve().parent
+    problems = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "functions/derived.py":
+            problems += _private_state_devices(path.read_text(), rel)
+    assert not problems, "\n".join(problems)

@@ -269,8 +269,8 @@ def test_compaction_collapses_file_count(spark):
     from u_s__non_farm_payrolls_an_olap_analysis_spark.operators import layout
 
     layout.layout_compact_small_files(spark, SF).collect()  # build layouts
-    frag = layout._derived_path(SF, "orders_fragmented")
-    comp = layout._derived_path(SF, "orders_compacted")
+    frag = layout._fragmented_orders(spark, SF)
+    comp = layout._compacted_orders(spark, SF)
 
     def parts(d):
         return [f for f in os.listdir(d) if f.endswith(".parquet")]

@@ -308,8 +308,8 @@ def test_stream_left_outer_null_extension(spark):
 
 def test_horizon_memo_restages_on_source_rewrite(spark, tmp_path):
     """A rewritten events.parquet at the SAME path must re-stage the
-    horizon dir (memo keyed by source signature), not serve the stale
-    copy — the drift guard _stream_src_dir applies, mirrored here."""
+    horizon dir (derived state keyed by the source's content signature),
+    not serve the stale copy."""
     import datetime as dt
 
     from u_s__non_farm_payrolls_an_olap_analysis_spark.streaming.stream_windows import (

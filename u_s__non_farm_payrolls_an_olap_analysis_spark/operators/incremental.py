@@ -13,27 +13,25 @@ streaming/stateful.py).
 
 The reference recomputes its aggregate dashboard from the full frame on
 every run (`dashboard_nfp.py:44-63` — eager pandas, no incremental
-notion); this module is the engine-side answer. The MV state is
-materialized once per (session, sf_dir, ``orders`` source signature)
-like the other derived layouts (layout.py memo pattern); the DuckDB
+notion); this module is the engine-side answer. The MV state is derived
+state (``functions/derived.py``), materialized once per ``orders``
+content signature, so a rewritten table rebuilds it; the DuckDB
 oracle recomputes the SAME answer from the full table, so the parity
 gate proves delta-folding == full-recompute.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.derived import derived_path
 from ..functions.numerics import SCALE, dsum_scaled, dsum_sql
 from ..functions.timeparts import month_start
 from ..io import read_table
-from ..streaming.stream_windows import _source_sig
-from .layout import _derived_path
 
 # Everything strictly BEFORE the cutoff is "already in the MV"; the delta
 # scan carries the sargable raw-column predicate (>= cutoff) so at scale
@@ -62,17 +60,13 @@ def _mv_state(
     spark: SparkSession, sf_dir: str, cutoff: str = MV_CUTOFF
 ) -> DataFrame:
     """The stored MV: monthly partials over the pre-cutoff base, written
-    once per session+sf_dir+cutoff+source signature (the path carries the
-    cutoff so the invariance test can build states at several cutoffs
-    side by side, and the ``orders`` signature so a rewritten table —
-    an upsert swapped in at the same path — rebuilds the state instead of
-    serving pre-write partials). Read back with an explicit schema — an
-    empty base writes no parquet footers (layout.py has the same guard)."""
-    sig = _source_sig(os.path.abspath(f"{sf_dir}/orders.parquet"))
-    tag = hashlib.sha1(repr(sig).encode()).hexdigest()[:12]
-    d = _derived_path(
-        sf_dir, f"mv_monthly_state_{cutoff.replace('-', '')}_{tag}"
-    )
+    once per ``orders`` content + cutoff (the cutoff is a build parameter
+    so the invariance test can build states at several cutoffs side by
+    side; the content signature means a rewritten table — an upsert
+    swapped in at the same path — rebuilds the state instead of serving
+    pre-write partials). Read back with an explicit schema — an empty
+    base writes no parquet footers (layout.py has the same guard)."""
+    d = derived_path(sf_dir, "mv_monthly_state", ("orders",), cutoff)
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         base = read_table(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") < F.lit(cutoff).cast("timestamp")

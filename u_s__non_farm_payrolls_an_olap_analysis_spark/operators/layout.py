@@ -7,9 +7,10 @@ directories before a single byte is read (static partition pruning — the
 `PartitionFilters` entry in the scan node, asserted in
 `tests/test_plans.py`).
 
-The partitioned copy is materialized once per (session, sf_dir) into a
-temp directory (same memo pattern as the streaming source) — the test
-fixtures are read-only, so the layout variant lives beside them. Results
+Every layout copy is derived state (``functions/derived.py``): it is
+materialized once per source-table content signature under the process
+scratch base — the test fixtures are read-only, so the layout variants
+live beside them, and a rewritten source gets a fresh copy. Results
 are identical to the unpartitioned scan by construction; the DuckDB oracle
 reads the ORIGINAL parquet, so the parity gate proves layout does not
 change semantics.
@@ -17,60 +18,42 @@ change semantics.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.derived import derived_path, scratch_path
 from ..functions.numerics import dsum, dsum_sql
 from ..io import read_table
 
-_PART_DIR_MEMO: dict[tuple[str, str], str] = {}
 
-# One private mkdtemp base per process, removed at interpreter exit (same
-# lifecycle as streaming's drain dir). A fixed predictable path in shared
-# /tmp would let concurrent runs on the same sf_dir race each other's
-# overwrite (and is the classic pre-creatable-tempfile pattern); mkdtemp
-# is per-process-private, and atexit bounds the leak to crashed runs.
-_LAYOUT_BASE: str | None = None
+def _built(d: str) -> bool:
+    """Spark writes ``_SUCCESS`` last: a directory without it is a
+    half-finished build and is rewritten, never served."""
+    return os.path.exists(os.path.join(d, "_SUCCESS"))
 
 
-def _sf_tag(sf_dir: str) -> str:
-    # basename alone collides when two distinct sf_dirs share a leaf name
-    # (e.g. /a/sf0.01 and /b/sf0.01) — the second write would overwrite the
-    # first while the memo still serves it. Key by basename + abspath hash.
-    ap = os.path.abspath(sf_dir)
-    return f"{os.path.basename(ap)}_{hashlib.md5(ap.encode()).hexdigest()[:12]}"
-
-
-def _derived_path(sf_dir: str, kind: str) -> str:
-    global _LAYOUT_BASE
-    if _LAYOUT_BASE is None or not os.path.exists(_LAYOUT_BASE):
-        _LAYOUT_BASE = tempfile.mkdtemp(prefix="layout_")
-        atexit.register(shutil.rmtree, _LAYOUT_BASE, ignore_errors=True)
-    return os.path.join(_LAYOUT_BASE, f"{kind}_{_sf_tag(sf_dir)}")
-
-
-def _layout_dir(sf_dir: str) -> str:
-    return _derived_path(sf_dir, "orders_by_year")
+def _table_built(spark: SparkSession, path: str) -> bool:
+    """Catalog twin of :func:`_built` for tables saved at ``path`` under
+    its basename: the catalog entry is session-scoped but the files are
+    process-scoped, so both must exist; a stale half is dropped."""
+    name = os.path.basename(path)
+    if spark.catalog.tableExists(name) and os.path.exists(path):
+        return True
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    return False
 
 
 def partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-partitioned copy of ``orders`` (directory layout
-    ``o_year=<y>/part-*.parquet``), built once per session+sf_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    ``o_year=<y>/part-*.parquet``), built once per ``orders`` content."""
     with_year = read_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    d = _PART_DIR_MEMO.get(key)
-    if d is None or not os.path.exists(d):
-        d = _layout_dir(sf_dir)
+    d = derived_path(sf_dir, "orders_by_year", ("orders",))
+    if not _built(d):
         with_year.write.mode("overwrite").partitionBy("o_year").parquet(d)
-        _PART_DIR_MEMO[key] = d
     # explicit schema: an EMPTY source writes only _SUCCESS (no footers), and
     # schema inference on that raises — a real failure mode for pruned-to-
     # nothing intermediate tables at scale. The schema is known; state it.
@@ -123,8 +106,8 @@ def _year_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiny year dimension derived from orders (one row per distinct
     order year, with a selective boolean attribute), materialized once to
     parquet so the DPP filter side is a clean scan+filter relation."""
-    d = _derived_path(sf_dir, "year_dim")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+    d = derived_path(sf_dir, "year_dim", ("orders",))
+    if not _built(d):
         (
             read_table(spark, sf_dir, "orders")
             .select(F.year("o_orderdate").alias("d_year"))
@@ -191,22 +174,14 @@ N_BUCKETS = 8
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + customer bucketed by custkey as external tables
-    (once per session+sf_dir); returns the two catalog table names."""
-    tag = "".join(c if c.isalnum() else "_" for c in _sf_tag(sf_dir))
-    names = (f"orders_bkt_{tag}", f"customer_bkt_{tag}")
-    paths = (
-        _derived_path(sf_dir, "bkt_orders"),
-        _derived_path(sf_dir, "bkt_customer"),
-    )
-    for name, path, table, key in (
-        (names[0], paths[0], "orders", "o_custkey"),
-        (names[1], paths[1], "customer", "c_custkey"),
-    ):
-        # the catalog entry is session-scoped but the files live in the
-        # process-scoped layout dir — rebuild when either half is missing
-        if spark.catalog.tableExists(name) and os.path.exists(path):
+    (once per source content); returns the two catalog table names."""
+    names = []
+    for table, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        path = derived_path(sf_dir, f"bkt_{table}", (table,), N_BUCKETS)
+        name = os.path.basename(path)
+        names.append(name)
+        if _table_built(spark, path):
             continue
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             read_table(spark, sf_dir, table)
             .write.mode("overwrite")
@@ -215,7 +190,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .sortBy(key)
             .saveAsTable(name)
         )
-    return names
+    return tuple(names)
 
 
 def _bucketed_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,40 +250,6 @@ ORACLE["join_bucketed_zero_shuffle"] = (
 Q8_N_BUCKETS = 32
 
 
-def _file_content_sig(path: str) -> str:
-    """md5 of the parquet footer region (last <=64 KiB). The footer holds
-    the row-group metadata + column statistics, so any regeneration with
-    different contents changes it even at identical byte size; unlike
-    mtime it survives git checkouts / copies, which do NOT preserve
-    timestamps (round-10 ADVICE: the mtime signature forced a silent
-    re-bucket on every fresh clone)."""
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(max(0, size - 65536))
-        return hashlib.md5(f.read()).hexdigest()[:12]
-
-
-def _table_sig(path: str) -> tuple:
-    """Content-derived change signature of a parquet table (file or
-    directory): sorted (name, size, footer-hash). Folded into the
-    bucketed table tag so a source dir regenerated IN PLACE (bench.py
-    rewrites .bench_sf3x when SPARK_GRAFT_SFN_REP changes) re-buckets
-    instead of silently reusing a stale layout (round-9 ADVICE), while
-    byte-identical data keeps its signature across clones/copies
-    (round-10 ADVICE)."""
-    if os.path.isdir(path):
-        names = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        return tuple(
-            (f, os.path.getsize(os.path.join(path, f)),
-             _file_content_sig(os.path.join(path, f)))
-            for f in names
-        )
-    try:
-        return (os.path.getsize(path), _file_content_sig(path))
-    except OSError:
-        return ()
-
-
 def _q8_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + lineitem bucketed/sorted by orderkey as external
     tables (once per session + source content); returns catalog names.
@@ -316,26 +257,19 @@ def _q8_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Columns are projected to q8's working set before the write — at rest
     you would bucket the FULL table once and let parquet column pruning
     serve every query; the projection only bounds fixture write cost."""
-    sig = hashlib.md5(
-        repr((
-            _table_sig(os.path.join(sf_dir, "orders.parquet")),
-            _table_sig(os.path.join(sf_dir, "lineitem.parquet")),
-            Q8_N_BUCKETS,
-        )).encode()
-    ).hexdigest()[:10]
-    tag = "".join(c if c.isalnum() else "_" for c in _sf_tag(sf_dir))
-    names = (f"orders_q8bkt_{tag}_{sig}", f"lineitem_q8bkt_{tag}_{sig}")
-    specs = (
-        (names[0], _derived_path(sf_dir, f"q8bkt_orders_{sig}"), "orders",
-         "o_orderkey", ("o_orderkey", "o_custkey", "o_orderdate")),
-        (names[1], _derived_path(sf_dir, f"q8bkt_lineitem_{sig}"), "lineitem",
-         "l_orderkey",
+    names = []
+    for table, key, cols in (
+        ("orders", "o_orderkey", ("o_orderkey", "o_custkey", "o_orderdate")),
+        ("lineitem", "l_orderkey",
          ("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")),
-    )
-    for name, path, table, key, cols in specs:
-        if spark.catalog.tableExists(name) and os.path.exists(path):
+    ):
+        path = derived_path(
+            sf_dir, f"q8bkt_{table}", (table,), Q8_N_BUCKETS, cols
+        )
+        name = os.path.basename(path)
+        names.append(name)
+        if _table_built(spark, path):
             continue
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             read_table(spark, sf_dir, table)
             .select(*cols)
@@ -358,7 +292,7 @@ def _q8_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .sortBy(key)
             .saveAsTable(name)
         )
-    return names
+    return tuple(names)
 
 
 def tpch_q8_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,8 +432,8 @@ _FRAGMENT_FILES = 64              # fixture-scale "ingest damage"
 
 
 def _fragmented_orders(spark: SparkSession, sf_dir: str) -> str:
-    d = _derived_path(sf_dir, "orders_fragmented")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+    d = derived_path(sf_dir, "orders_fragmented", ("orders",), _FRAGMENT_FILES)
+    if not _built(d):
         (
             read_table(spark, sf_dir, "orders")
             .repartition(_FRAGMENT_FILES)
@@ -507,6 +441,17 @@ def _fragmented_orders(spark: SparkSession, sf_dir: str) -> str:
             .parquet(d)
         )
     return d
+
+
+def _compacted_orders(spark: SparkSession, sf_dir: str) -> str:
+    frag = _fragmented_orders(spark, sf_dir)
+    dst = derived_path(
+        sf_dir, "orders_compacted", ("orders",), _FRAGMENT_FILES,
+        COMPACT_TARGET_BYTES,
+    )
+    if not _built(dst):
+        compact_parquet_dir(spark, frag, dst, "o_orderkey")
+    return dst
 
 
 def compact_parquet_dir(
@@ -538,11 +483,7 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole point — compaction is a physical rewrite, never a semantic
     change. The measured benefit (64 files -> ceil(bytes/128 MB)) lives
     in tests/test_scale_patterns.py."""
-    frag = _fragmented_orders(spark, sf_dir)
-    dst = _derived_path(sf_dir, "orders_compacted")
-    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        compact_parquet_dir(spark, frag, dst, "o_orderkey")
-    orders = spark.read.parquet(dst)
+    orders = spark.read.parquet(_compacted_orders(spark, sf_dir))
     return (
         orders.groupBy(F.year("o_orderdate").cast("int").alias("year"))
         .agg(
@@ -626,33 +567,28 @@ ORACLE["table_stats_collect"] = " UNION ALL ".join(
 # stats → SortMergeJoin, ANALYZE'd stats + CBO → BroadcastHashJoin.
 
 def _cbo_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Catalog copies of orders + customer with ANALYZE'd column stats
-    (once per session + source content); returns the table names."""
-    sig = hashlib.md5(
-        repr((
-            _table_sig(os.path.join(sf_dir, "orders.parquet")),
-            _table_sig(os.path.join(sf_dir, "customer.parquet")),
-        )).encode()
-    ).hexdigest()[:10]
-    tag = "".join(c if c.isalnum() else "_" for c in _sf_tag(sf_dir))
-    names = (f"orders_cbo_{tag}_{sig}", f"customer_cbo_{tag}_{sig}")
-    for name, table in zip(names, ("orders", "customer")):
-        path = _derived_path(sf_dir, f"cbo_{table}_{sig}")
-        if spark.catalog.tableExists(name) and os.path.exists(path):
+    """Catalog copies of orders + customer with ANALYZE'd stats (once per
+    source content, in the build: the stats live in the catalog entry
+    built with the table); returns the table names. The column ANALYZE
+    also stores the table-level row count."""
+    names = []
+    for table, stats in (
+        ("orders", ""),
+        ("customer", " FOR COLUMNS c_mktsegment, c_custkey"),
+    ):
+        path = derived_path(sf_dir, f"cbo_{table}", (table,))
+        name = os.path.basename(path)
+        names.append(name)
+        if _table_built(spark, path):
             continue
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
         (
             read_table(spark, sf_dir, table)
             .write.mode("overwrite")
             .option("path", path)
             .saveAsTable(name)
         )
-        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
-    spark.sql(
-        f"ANALYZE TABLE {names[1]} COMPUTE STATISTICS "
-        "FOR COLUMNS c_mktsegment, c_custkey"
-    )
-    return names
+        spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS{stats}")
+    return tuple(names)
 
 
 def _cbo_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -752,7 +688,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution read (``mergeSchema``): a table directory whose
     older files LACK a column the newer files carry — the standard
     lakehouse situation after an additive schema change. Built once per
-    session+sf_dir: pre-1996 order files without ``o_priority_flag``,
+    ``orders`` content: pre-1996 order files without ``o_priority_flag``,
     1996+ files with it. The merged scan surfaces the missing column as
     NULL for old files, and the per-year aggregate proves exactly which
     rows carried it. Scale note: schema merging reads FOOTERS only
@@ -763,10 +699,9 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (flag = high-value order, 1996+ only), so DuckDB reproduces
     the merged result straight from ``orders`` — no derived files leak
     into the oracle."""
-    d = _derived_path(sf_dir, "orders_evolved")
-    key = (spark.sparkContext.applicationId, sf_dir, "evolved")
-    built = _PART_DIR_MEMO.get(key)
-    if built is None or not os.path.exists(built):
+    d = derived_path(sf_dir, "orders_evolved", ("orders",))
+    # v2 is written last, so its _SUCCESS marks the whole build
+    if not _built(os.path.join(d, "v2")):
         orders = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", F.year("o_orderdate").alias("o_year")
         )
@@ -776,7 +711,6 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         old.write.mode("overwrite").parquet(os.path.join(d, "v1"))
         new.write.mode("overwrite").parquet(os.path.join(d, "v2"))
-        _PART_DIR_MEMO[key] = d
     # per-side footer check: an empty slice writes only _SUCCESS, and a
     # v2-empty source would otherwise merge to a schema WITHOUT the
     # evolved column (count/sum on it fails analysis)
@@ -823,10 +757,7 @@ def layout_partition_overwrite_dynamic(
     proves 1997 shrank while every other year is bit-identical. At
     scale this is the nightly-restatement pattern: the write plans one
     task set for the NEW data only, never rewrites the table."""
-    import uuid as _uuid
-
-    base = _derived_path(sf_dir, "overwrite_demo")
-    d = os.path.join(base, _uuid.uuid4().hex[:8])
+    d = scratch_path("overwrite_demo")
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", F.year("o_orderdate").alias("o_year")
     )
@@ -907,19 +838,12 @@ def _events_user_bucketed_table(spark: SparkSession, sf_dir: str) -> str:
     # cost nothing to readers that don't project them. The column tuple
     # is part of the signature so pre-round-13 memoized tables restage.
     cols = ("user_id", "ts", "event_id", "event_type", "value")
-    sig = hashlib.md5(
-        repr((
-            _table_sig(os.path.join(sf_dir, "events.parquet")),
-            EVENTS_N_BUCKETS,
-            cols,
-        )).encode()
-    ).hexdigest()[:10]
-    tag = "".join(c if c.isalnum() else "_" for c in _sf_tag(sf_dir))
-    name = f"events_userbkt_{tag}_{sig}"
-    path = _derived_path(sf_dir, f"userbkt_events_{sig}")
-    if spark.catalog.tableExists(name) and os.path.exists(path):
+    path = derived_path(
+        sf_dir, "userbkt_events", ("events",), EVENTS_N_BUCKETS, cols
+    )
+    name = os.path.basename(path)
+    if _table_built(spark, path):
         return name
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         read_table(spark, sf_dir, "events")
         .select(*cols)

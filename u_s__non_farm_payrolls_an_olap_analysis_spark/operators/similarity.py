@@ -144,76 +144,6 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
 KMEANS_ITERS = 3
 
 
-def _train_kmeans_codebook(cand: DataFrame, k: int, iters: int) -> DataFrame:
-    """Distributed Lloyd's iterations, entirely as DataFrame ops (no
-    ``collect`` — the codebook never visits the driver until broadcast).
-
-    - init: the ``k`` lowest-vec_id candidates (deterministic seed).
-    - assign: broadcast centroids, max-cosine argmax via a rank window.
-    - update: ``posexplode`` each member vector, per-(centroid, dim) mean,
-      re-assemble ordered with ``sort_array(collect_list(struct(pos, m)))``.
-
-    Empty clusters drop out (k shrinks) — standard Lloyd's behavior. At
-    100 TB each iteration would be ``persist()``-ed to cut lineage and the
-    codebook trained on a sample; the operator structure is unchanged.
-    """
-    cent = cand.orderBy("neighbor_id").limit(k).select(
-        F.col("neighbor_id").alias("cent_id"), F.col("ce").alias("cent_e")
-    )
-    for _ in range(iters):
-        scored = cand.join(F.broadcast(cent)).select(
-            "neighbor_id",
-            "ce",
-            "cent_id",
-            dround(cosine(F.col("ce"), F.col("cent_e")), 6).alias("cc"),
-        )
-        w = Window.partitionBy("neighbor_id").orderBy(F.col("cc").desc(), "cent_id")
-        members = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("neighbor_id", "ce", "cent_id")
-        )
-        cent = (
-            members.select(
-                "cent_id", F.posexplode("ce").alias("pos", "val")
-            )
-            .groupBy("cent_id", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .groupBy("cent_id")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("cent_e")
-            )
-            # round 15: checkpoint each generation's k-row codebook —
-            # the next iteration BROADCASTS it, and a mid-plan broadcast
-            # build re-executes the whole chain above it (the
-            # graph_hits_scores finding; rule 5)
-            .localCheckpoint(eager=True)
-        )
-    return cent
-
-
-def sim_search_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-star ANN, trained-codebook variant: IVF over a k-means
-    codebook learned with distributed Lloyd's iterations instead of the
-    fixed first-K seed. Better-centered lists → higher recall at the same
-    probe budget (``tests/test_dedup_similarity.py`` measures it against
-    the exact baseline). Rows-only check: cross-engine FP means differ in
-    the last bits, which can flip assignments — the recall test, not a
-    hash, is the correctness statement here."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    cent = _train_kmeans_codebook(cand, IVF_K, KMEANS_ITERS)
-    return _ivf_search(q, cand, cent)
-
-
 # micro-unit scale for the deterministic Lloyd's update: member components
 # are summed as scaled int64 (exact, order-independent), so the centroid
 # means are bit-identical across engines and partitionings
@@ -223,15 +153,22 @@ KMEANS_SCALE = 1_000_000.0
 def _train_kmeans_codebook_exact(
     cand: DataFrame, k: int, iters: int
 ) -> DataFrame:
-    """Lloyd's iterations with a DETERMINISTIC update: per-(centroid, dim)
-    means accumulate as scaled int64 (``dround`` to micro-units — exact,
-    commutative, partition-order-independent) and divide back once, so
-    the trained codebook is bit-identical across engines — the FP-mean
-    variant (:func:`_train_kmeans_codebook`) differs in the last bits per
-    summation order, which is why its operator is rows-only. Structure
-    (init / assign / update) is otherwise identical."""
-    from ..functions.numerics import dround
+    """Distributed Lloyd's iterations, entirely as DataFrame ops (no
+    ``collect`` — the codebook never visits the driver until broadcast).
 
+    - init: the ``k`` lowest-vec_id candidates (deterministic seed).
+    - assign: broadcast centroids, max-cosine argmax via a rank window.
+    - update: ``posexplode`` each member vector; per-(centroid, dim)
+      means accumulate as scaled int64 (``dround`` to micro-units —
+      exact, commutative, partition-order-independent) and divide back
+      once, so the trained codebook is bit-identical across engines and
+      partitionings (an FP mean differs in the last bits per summation
+      order, which can flip assignments); re-assemble ordered with
+      ``sort_array(collect_list(struct(pos, m)))``.
+
+    Empty clusters drop out (k shrinks) — standard Lloyd's behavior. At
+    100 TB the codebook would be trained on a sample; the operator
+    structure is unchanged."""
     cent = cand.orderBy("neighbor_id").limit(k).select(
         F.col("neighbor_id").alias("cent_id"),
         F.transform(F.col("ce"), lambda x: x.cast("double")).alias("cent_e"),
@@ -283,18 +220,16 @@ def _train_kmeans_codebook_exact(
     return cent
 
 
-def sim_search_ann_ivf_kmeans_exact(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Hash-checked harness for the k-means IVF geometry (round-9
-    companion to the rows-only :func:`sim_search_ann_ivf_kmeans`): the
-    same Lloyd's-trained-codebook search, but with the deterministic
-    scaled-int64 centroid update, so the ENTIRE pipeline — init, three
-    assign/update rounds, invert, probe, rank — is reproducible bit for
-    bit and DuckDB-checkable (the oracle unrolls the same three Lloyd's
-    iterations as CTE stages). This is the oracle evidence that the
-    trained-codebook pipeline shape is correct; the FP-mean twin remains
-    the documented rows-only variant (recall-tested instead)."""
+def sim_search_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """North-star ANN, trained-codebook variant: IVF over a k-means
+    codebook learned with distributed Lloyd's iterations instead of the
+    fixed first-K seed. Better-centered lists → higher recall at the same
+    probe budget (``tests/test_dedup_similarity.py`` measures it against
+    the exact baseline). The deterministic scaled-int64 centroid update
+    makes the ENTIRE pipeline — init, three assign/update rounds, invert,
+    probe, rank — reproducible bit for bit and DuckDB-checkable (the
+    oracle unrolls the same three Lloyd's iterations as CTE stages); the
+    ``sim_search_ann_ivf_kmeans_exact`` key serves the same operator."""
     emb = read_table(spark, sf_dir, "embeddings")
     cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
@@ -465,7 +400,7 @@ QUERIES = {
     "sim_search_int8_mips": sim_search_int8_mips,
     "sim_search_ann_ivf": sim_search_ann_ivf,
     "sim_search_ann_ivf_kmeans": sim_search_ann_ivf_kmeans,
-    "sim_search_ann_ivf_kmeans_exact": sim_search_ann_ivf_kmeans_exact,
+    "sim_search_ann_ivf_kmeans_exact": sim_search_ann_ivf_kmeans,
     "embedding_quantize_int8": embedding_quantize_int8,
     "embedding_matryoshka_truncate": embedding_matryoshka_truncate,
 }
@@ -594,6 +529,7 @@ ORACLE = {
         "SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank "
         f"FROM r WHERE rank <= {TOP_K}"
     ),
+    "sim_search_ann_ivf_kmeans": _kmeans_exact_oracle_sql(),
     "sim_search_ann_ivf_kmeans_exact": _kmeans_exact_oracle_sql(),
     "embedding_quantize_int8": (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "

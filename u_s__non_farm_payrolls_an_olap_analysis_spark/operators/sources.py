@@ -22,12 +22,13 @@ path is covered by ``io.write_upsert_parquet`` tests.
 from __future__ import annotations
 
 import datetime as dt
-import uuid
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.derived import scratch_path
 from ..functions.numerics import dround
 from ..functions.timeparts import pct_change
 from ..io import read_table, upsert_by_key
@@ -114,7 +115,7 @@ def source_api_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from offset tracking, checked by the resume test in
     tests/test_custom_source_stateful.py."""
     from ..sources.fred_datasource import FredSeriesDataSource
-    from ..streaming.stream_windows import _drain_dir, _drain_to_memory
+    from ..streaming.stream_windows import _drain_to_memory
 
     spark.dataSource.register(FredSeriesDataSource)  # idempotent re-register
     out = _drain_to_memory(
@@ -122,9 +123,7 @@ def source_api_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         output_mode="append",
         drain="process_all",
-        # under the session-lifetime drain base (atexit-cleaned) — a bare
-        # mkdtemp would leak one checkpoint WAL per invocation
-        checkpoint=_drain_dir(f"fred_ckpt_{uuid.uuid4().hex[:8]}"),
+        checkpoint=scratch_path("fred_ckpt"),
     )
     return out.select(
         F.col("date").cast("timestamp").alias("date"), "value"
@@ -353,22 +352,10 @@ ORACLE = {
 }
 
 
-# session-lifetime root for python-datasource sink outputs (one uuid subdir
-# per invocation; removed at interpreter exit)
-_SINK_BASE: str | None = None
-
-
 def _sink_dir() -> str:
-    global _SINK_BASE
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    if _SINK_BASE is None or not os.path.exists(_SINK_BASE):
-        _SINK_BASE = tempfile.mkdtemp(prefix="pyds_sink_")
-        atexit.register(shutil.rmtree, _SINK_BASE, ignore_errors=True)
-    d = os.path.join(_SINK_BASE, uuid.uuid4().hex[:8])
+    """A fresh, existing sink root per invocation (the committed-manifest
+    read-back needs the directory even when no task wrote a part)."""
+    d = scratch_path("pyds_sink")
     os.makedirs(d)
     return d
 

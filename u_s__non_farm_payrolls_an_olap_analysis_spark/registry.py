@@ -90,83 +90,62 @@ _MODULES = [
 # tests/test_registry_contract.py (subset, duplicate-free, leads
 # iteration) — prune entries once their round's JSON records them
 # (CLAUDE.md rule 7).
-# Round-13 rotation: all 50 keys recorded in CORRECTNESS_r12.json pruned
-# (the entire round-12 new-key batch plus holt got fresh green rows).
-# What remains is the r6-evidence TPC-H tail that rolled past the window
-# two rounds running; new round-13 keys slot in AHEAD of it (a new key
-# has no driver row anywhere, so it outranks keys with historical
-# evidence). Prune the r13-recorded keys next round.
 _SAMPLE_PRIORITY = [
-    # Round-15 rotation (VERDICT r14 item 1): the 50 keys recorded in
-    # CORRECTNESS_r14.json are pruned (all green; they fall back to
-    # module merge order). What remains is EXACTLY the 39 registry keys
-    # with no driver CORRECTNESS row in ANY round r1-r14 (reproducible:
-    # set(registry.queries()) - union of CORRECTNESS_r*.json keys), in
-    # their prior relative order. All 39 fit the driver's 50-key window,
-    # so after round 15 every registry key has a driver row; up to 11
-    # NEW keys may append behind them this round and still be sampled.
-    # Guarded by tests/test_registry_contract.py::test_sample_window_freshness.
-    "agg_srm_assignment_check",
-    "stream_interarrival_ewma",
-    "agg_extreme_value_gumbel",
-    "agg_mcnemar_yearly_activity",
-    "events_bounce_rate_daily",
-    "agg_capture_recapture_customers",
-    "timeseries_theta_forecast",
-    "events_markov_stationary",
-    "agg_lorenz_curve_deciles",
-    "text_js_divergence_by_source",
-    "timeseries_durbin_watson",
-    "agg_herfindahl_brand_hhi",
-    "multimodal_phash_dedup",
-    "timeseries_mann_kendall",
-    "agg_decision_stump_gini",
-    "sim_eval_ece",
-    "events_conversion_latency_quantiles",
-    "agg_price_index_laspeyres",
-    "source_csv_roundtrip",
-    "agg_odds_ratio_woolf",
-    "agg_ipw_treatment_effect",
-    "sql_asof_dialect_duckdb_native",
-    "agg_wilson_score_ci",
-    "text_mattr_diversity",
+    # Round-17 rotation: the 50 keys CORRECTNESS_r16.json records (the
+    # whole previous list) are pruned. Every registry key now has a driver
+    # row, so the window leads with keys whose last row predates a
+    # rewrite. First, the keys the r16 optimization rounds rewrote (last
+    # driver rows r08-r14, i.e. from before the rewrite):
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_simhash_planted",
+    "dedup_minhash_planted",
+    "dedup_exact_substring_spans",
+    "dedup_levenshtein_blocked",
+    "graph_connected_components",
+    "graph_kcore_peel",
+    "graph_bfs_hops",
+    "graph_degree_assortativity",
+    "graph_link_prediction_ra",
+    "graph_link_prediction_jaccard",
+    "graph_hits_scores",
     "graph_pagerank_personalized",
-    "dq_constraint_violations",
-    "events_new_vs_returning",
-    "sql_distinct_on_dialect",
-    "privacy_randomized_response",
-    "text_bigram_entropy_rate",
-    "stream_daily_new_users",
-    "agg_theil_atkinson_inequality",
-    "window_peer_zscore",
-    "events_sessions_per_user_hist",
-    "window_rolling_sharpe",
-    "timeseries_seasonal_subseries",
-    "agg_coefficient_of_variation",
-    "events_weekday_weekend_split",
-    # NEW in round 14 — live embedded-Derby df.write.jdbc round-trip
-    # (appended BEHIND the 88-key backlog: new keys wait their turn
-    # while the never-sampled debt clears)
-    "sink_jdbc_roundtrip_derby",
-    # NEW in round 15 — ANN measured-recall harness (VERDICT r14 item 7):
-    # appended BEHIND the backlog; with 39 backlog keys ahead they still
-    # land inside the 50-key window this round.
-    "sim_eval_recall_hamming",
-    "sim_eval_recall_pq_adc",
-    "sim_eval_recall_ivf",
-    "sim_eval_recall_int8",
-    # NEW in round 15 — resampling-inference family (Poisson bootstrap /
-    # random-relabel permutation / delete-1 jackknife) + rolling corr;
-    # 39 backlog + 8 new = 47 ≤ the 50-key window, all sampled this round
-    "agg_bootstrap_ci",
-    "agg_permutation_test",
-    "agg_jackknife_ratio_variance",
-    "window_rolling_corr",
-    # NEW in round 15 (batch 3) — drift detection / experimentation:
-    # 39 backlog + 11 new = EXACTLY the 50-key driver window
-    "timeseries_page_hinkley",
-    "agg_cuped_adjustment",
-    "agg_tukey_hsd",
+    "events_pattern_match",
+    "text_langid_ngram_profile",
+    "text_bigram_topk",
+    "text_winnow_fingerprint",
+    "quality_repetition_signals",
+    # the five derived-state keys that answered from pre-write tables
+    # until their state was keyed by source content (functions/derived.py;
+    # last driver rows r08/r09)
+    "scan_partition_pruned",
+    "scan_dpp_dim_filter",
+    "join_bucketed_zero_shuffle",
+    "layout_compact_small_files",
+    "scan_schema_evolution",
+    # rows-only until now: trained with the deterministic Lloyd's update,
+    # hash-checked against the same oracle as its _exact twin
+    "sim_search_ann_ivf_kmeans",
+    "sim_search_ann_ivf_kmeans_exact",
+    # the rest of the derived-state and scratch-path users moved onto
+    # functions/derived.py, oldest driver row first
+    "stream_tumbling_agg",
+    "stream_stream_join",
+    "layout_partition_overwrite_dynamic",
+    "mv_incremental_refresh",
+    "stream_left_outer_join",
+    "stream_full_outer_join",
+    "stream_sliding_agg",
+    "stream_session_window",
+    "stream_docs_dedup_fingerprint",
+    "stream_upsert_foreach_batch",
+    "source_api_stream",
+    "sink_python_datasource",
+    "stream_dedup_keys",
+    "tpch_q8_bucketed",
+    "join_cbo_stats_broadcast",
+    "sessionize_batch_clustered",
+    "events_pattern_match_clustered",
 ]
 
 

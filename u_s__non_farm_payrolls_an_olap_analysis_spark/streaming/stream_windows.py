@@ -17,6 +17,11 @@ deterministic replay admits. ``complete`` output mode is used so the final
 still bounds state for late data exactly as it would on an unbounded
 stream.
 
+On-disk state goes through ``functions/derived.py``: the staged stream
+sources (symlinked source dir, horizon replay) are keyed by the source
+table's content signature, so a rewritten fixture re-stages, and every
+drain or upsert target is a fresh ``scratch_path``.
+
 Scale posture: event-time windowed aggregation is hash-partitioned by
 (window, keys); watermarks bound state size; ``foreachBatch`` +
 ``upsert_by_key`` (see tests) gives the idempotent keyed-upsert sink that
@@ -25,16 +30,15 @@ mirrors the reference's ON CONFLICT semantics (``etl.py:68-71``).
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.derived import derived_path, scratch_path
 from ..functions.numerics import dsum, dsum_scaled, dsum_sql
 from ..functions.timeparts import ntz_from_epoch_micros, ntz_from_instant
 
@@ -74,36 +78,29 @@ EVENTS_STREAM_SCHEMA_MICROS = (
 )
 
 
-# one reusable symlink dir per source path — a fresh mkdtemp per call would
-# leak a directory every invocation of every streaming query
-_STREAM_DIR_MEMO: dict[str, str] = {}
-
-
-def _stream_src_dir(src: str, prefix: str) -> str:
+def _stream_src_dir(sf_dir: str, table: str) -> str:
     """The file-stream source lists a DIRECTORY; a single fixture parquet
-    file is exposed through a symlinked temp dir, memoized per source
-    path (shared by the events and documents streams). A DIRECTORY
-    source (Spark-written `table.parquet/part-*.parquet`, e.g. the
-    empty-fixture sweep) has its part files symlinked individually —
-    the stream source does not recurse into non-partition subdirs."""
-    d = _STREAM_DIR_MEMO.get(src)
-    if d is not None and os.path.exists(d) and os.path.isdir(src):
-        # a rewritten source dir (mode("overwrite") → new part-file uuids)
-        # leaves the memoized snapshot full of dangling symlinks — compare
-        # the link set against the live listing and rebuild on drift
-        want = {f for f in os.listdir(src) if f.endswith(".parquet")}
-        if set(os.listdir(d)) != want:
-            shutil.rmtree(d, ignore_errors=True)
-            d = None
-    if d is None or not os.path.exists(d):
-        d = tempfile.mkdtemp(prefix=prefix)
+    file is exposed through a symlinked dir, derived state keyed by the
+    table's content signature (``functions/derived.py``), so a rewritten
+    source (``mode("overwrite")`` → new part-file uuids) gets a fresh
+    link set instead of dangling links. A DIRECTORY source (Spark-written
+    `table.parquet/part-*.parquet`, e.g. the empty-fixture sweep) has its
+    part files symlinked individually — the stream source does not
+    recurse into non-partition subdirs. The ``_SUCCESS`` marker is
+    written last; the stream source ignores ``_``-prefixed files."""
+    src = os.path.abspath(f"{sf_dir}/{table}.parquet")
+    d = derived_path(sf_dir, f"{table}_stream", (table,))
+    marker = os.path.join(d, "_SUCCESS")
+    if not os.path.exists(marker):
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
         if os.path.isdir(src):
             for f in sorted(os.listdir(src)):
                 if f.endswith(".parquet"):
                     os.symlink(os.path.join(src, f), os.path.join(d, f))
         else:
-            os.symlink(src, f"{d}/{os.path.basename(src)}")
-        _STREAM_DIR_MEMO[src] = d
+            os.symlink(src, os.path.join(d, os.path.basename(src)))
+        open(marker, "w").close()
     return d
 
 
@@ -128,7 +125,7 @@ def _events_ts_unit(src: str) -> str:
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file stream. The file-stream source lists a
     directory, so the single parquet file is exposed through a symlinked
-    temp dir (memoized per source path). ``ts`` decodes per the footer's
+    dir (:func:`_stream_src_dir`). ``ts`` decodes per the footer's
     actual unit (see :func:`_events_ts_unit`): nanos arrive as raw longs
     and are floored to microsecond instants (int64 ``div`` — ns epochs
     exceed double's exact range); micros load VERBATIM into TimestampType
@@ -140,9 +137,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained outputs convert back to NTZ walls via
     :func:`~..functions.timeparts.ntz_from_instant`, which is likewise
     timezone-independent — batch and stream always agree)."""
-    src = os.path.abspath(f"{sf_dir}/events.parquet")
-    d = _stream_src_dir(src, "events_stream_")
-    if _events_ts_unit(src) == "ns":
+    d = _stream_src_dir(sf_dir, "events")
+    if _events_ts_unit(os.path.abspath(f"{sf_dir}/events.parquet")) == "ns":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = (
             spark.readStream.schema(EVENTS_STREAM_SCHEMA_NANOS)
@@ -157,22 +153,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(d)
     )
-
-
-# One session-lifetime spill directory for drained streaming results,
-# removed (with every accumulated drain subdir) at interpreter exit. Drain
-# names are uuid-unique, so one subdir accumulates per drain for the
-# session — deliberate: reusing a per-query-name subdir would overwrite
-# files a previously returned lazy DataFrame may still be reading.
-_DRAIN_BASE: str | None = None
-
-
-def _drain_dir(name: str) -> str:
-    global _DRAIN_BASE
-    if _DRAIN_BASE is None or not os.path.exists(_DRAIN_BASE):
-        _DRAIN_BASE = tempfile.mkdtemp(prefix="stream_drain_")
-        atexit.register(shutil.rmtree, _DRAIN_BASE, ignore_errors=True)
-    return os.path.join(_DRAIN_BASE, name)
 
 
 def _drain_to_memory(
@@ -194,9 +174,11 @@ def _drain_to_memory(
     driver copy alive for the session (``collect()`` + ``createDataFrame``
     would be O(result) driver memory per invocation — and ``stream_dedup_keys``
     emits one row per distinct key, not a bounded aggregate), the sink rows
-    are spilled once to a local parquet temp path, the temp view is dropped,
-    and a LAZY read of that path is returned. Schema is stated explicitly so
-    an empty result (no part files) still reads back with the right columns.
+    are spilled once to a fresh ``scratch_path`` (one per drain: reusing a
+    path would overwrite files a previously returned lazy DataFrame may
+    still be reading), the temp view is dropped, and a LAZY read of that
+    path is returned. Schema is stated explicitly so an empty result (no
+    part files) still reads back with the right columns.
     """
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     with _bounded_state_partitions(spark):
@@ -215,7 +197,7 @@ def _drain_to_memory(
             q = w.trigger(availableNow=True).start()
         q.awaitTermination()
     sink = spark.table(name)
-    path = _drain_dir(name)
+    path = scratch_path("stream_drain")
     sink.write.mode("overwrite").parquet(path)
     spark.catalog.dropTempView(name)
     return spark.read.schema(sink.schema).parquet(path)
@@ -422,12 +404,10 @@ DOCS_STREAM_SCHEMA = (
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.parquet as a file stream, via the same memoized symlink
-    device as :func:`_events_stream` (no timestamp decode — the docs
-    schema is timestamp-free)."""
-    d = _stream_src_dir(
-        os.path.abspath(f"{sf_dir}/documents.parquet"), "docs_stream_"
-    )
+    """documents.parquet as a file stream, via the same symlink device
+    as :func:`_events_stream` (no timestamp decode — the docs schema is
+    timestamp-free)."""
+    d = _stream_src_dir(sf_dir, "documents")
     return (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
         .format("parquet")
@@ -504,7 +484,7 @@ def stream_upsert_foreach_batch(
         ev = _source
     global LAST_UPSERT_BATCHES
     LAST_UPSERT_BATCHES = 0
-    target = _drain_dir(f"upsert_{uuid.uuid4().hex[:8]}")
+    target = scratch_path("upsert")
     state_schema = (
         "user_id long, n_events long, sum_scaled long, last_micros long"
     )
@@ -581,27 +561,6 @@ ORACLE["stream_upsert_foreach_batch"] = (
 )
 
 
-# horizon-augmented events source dirs, memoized per fixture path as
-# (staged_dir, source_signature)
-_HORIZON_DIR_MEMO: dict[str, tuple[str, tuple]] = {}
-
-
-def _source_sig(src: str) -> tuple:
-    """Cheap change signature of an events source (file or Spark-written
-    directory): sorted (name, size, mtime_ns) of the parquet entries."""
-    if os.path.isdir(src):
-        names = sorted(
-            f for f in os.listdir(src) if f.endswith(".parquet")
-        )
-        return tuple(
-            (f, os.path.getsize(os.path.join(src, f)),
-             os.stat(os.path.join(src, f)).st_mtime_ns)
-            for f in names
-        )
-    st = os.stat(src)
-    return ((os.path.basename(src), st.st_size, st.st_mtime_ns),)
-
-
 def _events_horizon_dir(sf_dir: str) -> str:
     """Events fixture re-staged as a THREE-batch stream whose tail is two
     sentinel files 4 h / 8 h past the last real event. Outer stream-stream
@@ -621,16 +580,17 @@ def _events_horizon_dir(sf_dir: str) -> str:
     fixture — the same decode ``io.read_table`` applies), so the reader
     uses the plain MICROS schema regardless of fixture generation.
     Sentinel rows carry negative ``event_id``/``user_id`` and are dropped
-    from the drained output."""
+    from the drained output.
+
+    The staged dir is derived state keyed by the events content signature
+    (``functions/derived.py``): a rewritten events.parquet re-stages. The
+    parts are written by hand, so the ``_SUCCESS`` marker (ignored by the
+    stream source) is written LAST — a half-staged dir is rebuilt."""
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    memo = _HORIZON_DIR_MEMO.get(src)
-    # memo key includes a source signature: a rewritten events.parquet at
-    # the same path (mode("overwrite") fixtures) must re-stage, not serve
-    # the stale copy — the same drift guard _stream_src_dir applies
-    if memo is not None:
-        d, sig = memo
-        if os.path.exists(d) and _source_sig(src) == sig:
-            return d
+    d = derived_path(sf_dir, "events_horizon", ("events",))
+    marker = os.path.join(d, "_SUCCESS")
+    if os.path.exists(marker):
+        return d
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pa_pq
@@ -649,8 +609,7 @@ def _events_horizon_dir(sf_dir: str) -> str:
     max_us = pc.max(ts.cast(pa.int64())).as_py()
     if max_us is None:  # rowless fixture: any horizon flushes the nothing
         max_us = 0
-    d = tempfile.mkdtemp(prefix="events_horizon_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    os.makedirs(d, exist_ok=True)
     pa_pq.write_table(t, os.path.join(d, "part-00000.parquet"))
 
     def sentinel(us_epoch: int, eid: int) -> pa.Table:
@@ -672,7 +631,7 @@ def _events_horizon_dir(sf_dir: str) -> str:
     now = os.path.getmtime(os.path.join(d, "part-00000.parquet"))
     for i in (1, 2):
         os.utime(os.path.join(d, f"part-0000{i}.parquet"), (now + i, now + i))
-    _HORIZON_DIR_MEMO[src] = (d, _source_sig(src))
+    open(marker, "w").close()
     return d
 
 
