@@ -4,7 +4,7 @@ engine relies on. Few examples per property — each example runs Spark jobs.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -80,9 +80,9 @@ def test_dedup_exact_idempotent_and_partitioning(spark, texts):
     )
     import tempfile
 
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    out = dedup_exact(spark, d).collect()
+    with tempfile.TemporaryDirectory() as d:
+        df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        out = dedup_exact(spark, d).collect()
     assert sum(r["n_copies"] for r in out) == len(texts)
     keepers = {r["keeper_doc_id"] for r in out}
     assert len(keepers) == len(out)  # one keeper per group
@@ -480,8 +480,6 @@ def test_sessionize_batch_matches_python_reference(spark, events):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(f"{d}/events.parquet")
 
     # pure-python reference: sort per user, split on gap >= 1800 s
     ref = []
@@ -499,10 +497,12 @@ def test_sessionize_batch_matches_python_reference(spark, events):
                 cur.append(nxt)
         ref.append((u, cur[0], cur[-1], len(cur)))
 
-    got = [
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in sessionize_batch(spark, d).collect()
-    ]
+    with tempfile.TemporaryDirectory() as d:
+        df.write.mode("overwrite").parquet(f"{d}/events.parquet")
+        got = [
+            (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
+            for r in sessionize_batch(spark, d).collect()
+        ]
     assert sorted(got) == sorted(ref)
 
 
@@ -1756,3 +1756,78 @@ def test_pq_adc_matches_numpy_reference(spark):
         ], qid
         for (_, _, a), (_, _, b) in zip(have, want):
             assert abs(a - b) < 1e-9, qid
+
+
+def _union_find_min_labels(nodes, edges):
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _min_label_inputs(spark, nodes, edges):
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.pairgen import (
+        symmetrize,
+    )
+
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    labels0 = spark.createDataFrame(
+        [(n, n) for n in nodes], "node long, label long"
+    )
+    return symmetrize(pairs, "a", "b", "src", "dst"), labels0
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=12
+    ),
+    isolated=st.sets(st.integers(10, 13), max_size=3),
+)
+@example(edges=[], isolated=set())
+@example(edges=[], isolated={10, 11})
+@example(edges=[(1, 1), (1, 2), (2, 1), (1, 2), (3, 4)], isolated={12})
+@_settings
+def test_min_label_components_equals_union_find(spark, edges, isolated):
+    """The shared fixpoint device (CC and dedup_clusters) must label every
+    node with the min node of its union-find component — self-loops,
+    duplicate edges, isolated nodes and an empty edge list included — and
+    converge within (longest shortest path + 1) <= |nodes| rounds."""
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.graph import (
+        min_label_components,
+    )
+
+    nodes = sorted({n for e in edges for n in e} | isolated)
+    e, labels0 = _min_label_inputs(spark, nodes, edges)
+    labels, n = min_label_components(
+        e, labels0, rounds=len(nodes) + 1, name="prop"
+    )
+    assert labels.columns == ["node", "label"]
+    got = {r["node"]: r["label"] for r in labels.collect()}
+    assert got == _union_find_min_labels(nodes, edges)
+    assert 1 <= n <= len(nodes) + 1
+
+
+def test_min_label_components_raises_past_round_cap(spark):
+    """A path 0-1-...-6 needs 6 label-changing rounds plus one quiet
+    round; capped at 6 the device must raise, naming its caller."""
+    import pytest
+
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.graph import (
+        min_label_components,
+    )
+
+    path = [(i, i + 1) for i in range(6)]
+    e, labels0 = _min_label_inputs(spark, range(7), path)
+    with pytest.raises(RuntimeError, match="^path: no convergence in 6 rounds"):
+        min_label_components(e, labels0, rounds=6, name="path")
+    labels, n = min_label_components(e, labels0, rounds=7, name="path")
+    assert n == 7 and {r["label"] for r in labels.collect()} == {0}

@@ -275,3 +275,60 @@ def test_derived_state_has_one_owner():
         if rel != "functions/derived.py":
             problems += _private_state_devices(path.read_text(), rel)
     assert not problems, "\n".join(problems)
+
+
+def _convergence_loops(src: str, rel: str) -> list[str]:
+    """Hand-rolled convergence loops: a ``for``/``while`` whose body both
+    ``break``s and calls ``localCheckpoint`` — the round cap, per-round
+    lineage cut and early exit that ``functions/iterate.fixpoint`` owns.
+    Each hit names its innermost enclosing function."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, (ast.For, ast.While)):
+                inner = list(ast.walk(child))
+                if any(isinstance(n, ast.Break) for n in inner) and any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "localCheckpoint"
+                    for n in inner
+                ):
+                    out.append(f"{rel}:{child.lineno}: {fn}")
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return out
+
+
+def test_convergence_loop_has_one_owner():
+    """Every per-round-checkpointed iteration that can stop early runs
+    through ``functions/iterate.fixpoint``: no other
+    engine module may hand-roll a loop that checkpoints each round and
+    ``break``s on convergence. Self-tested against a synthetic repro."""
+    import pathlib
+
+    repro = (
+        "def f(df):\n"
+        "    for r in range(9):\n"
+        "        df = step(df).localCheckpoint(eager=True)\n"
+        "        if df.count() == 0:\n"
+        "            break\n"
+        "    while True:\n"
+        "        break\n"
+        "    for r in range(3):\n"
+        "        df = df.localCheckpoint(eager=True)\n"
+    )
+    assert _convergence_loops(repro, "x.py") == ["x.py:2: f"]
+    pkg = pathlib.Path(registry.__file__).resolve().parent
+    problems = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "functions/iterate.py":
+            problems += _convergence_loops(path.read_text(), rel)
+    assert not problems, "\n".join(problems)

@@ -24,7 +24,7 @@ Each helper has a DuckDB-SQL twin (``*_sql``) sharing the exact arithmetic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10_000  # 4 fractional digits
@@ -99,6 +99,26 @@ def dround(col: Column | str, digits: int) -> Column:
 def dsum_decimal(col: Column | str) -> Column:
     """Decimal-backed variant for domains beyond the scaled-int bounds."""
     return F.sum(_c(col).cast("decimal(28,4)")).cast("double")
+
+
+def l1_quantize(raw: DataFrame, key: str, scale: float) -> DataFrame:
+    """One normalize-and-quantize step of an exact power iteration:
+    ``(key, raw)`` → ``(key, q)`` with ``q = round(raw / Σraw · scale)``
+    ties away from zero — both engines round the identical double off
+    exact integer sums (DuckDB: ``CAST(ROUND(CAST(raw AS DOUBLE) /
+    CAST(t AS DOUBLE) * scale) AS BIGINT)``). ``raw`` is checkpointed
+    first: the total and the normalize both read it, so an unrolled
+    iteration without the cut doubles its plan per step."""
+    raw = raw.localCheckpoint(eager=True)
+    tot = raw.agg(F.sum("raw").alias("t"))
+    return raw.crossJoin(F.broadcast(tot)).select(
+        key,
+        _nearest_long_away(
+            F.col("raw").cast("double")
+            / F.col("t").cast("double")
+            * F.lit(scale)
+        ).alias("q"),
+    )
 
 
 def dsum_sql(expr: str, scale: int = SCALE) -> str:

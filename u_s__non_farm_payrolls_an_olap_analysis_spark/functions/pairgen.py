@@ -57,3 +57,18 @@ def posting_pairs(
             F.slice(list_col, F.col(pos) + F.lit(2), F.size(list_col))
         ).alias(out_b),
     )
+
+
+def symmetrize(
+    pairs: DataFrame, a: str, b: str, out_a: str, out_b: str
+) -> DataFrame:
+    """Both directions of an undirected pair list in ONE pass — a
+    2-branch union executes the pair generator once per branch."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(out_a), F.col(b).alias(out_b)),
+                F.struct(F.col(b).alias(out_a), F.col(a).alias(out_b)),
+            )
+        ).alias("e")
+    ).select(f"e.{out_a}", f"e.{out_b}")

@@ -48,7 +48,3 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
 NORM_SQL = (
     "sqrt(list_dot_product(CAST({e} AS DOUBLE[]), CAST({e} AS DOUBLE[])))"
 )
-
-
-def dot_sql(a: str, b: str) -> str:
-    return f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"

@@ -1182,7 +1182,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE corpus exchange (the per-user lag); every iteration
     runs on the k-row / k²-cell frames."""
-    from ..functions.numerics import _nearest_long_away
+    from ..functions.numerics import _nearest_long_away, l1_quantize
 
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "event_id"
@@ -1219,31 +1219,19 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state",
         _nearest_long_away(
             F.lit(MKV_SCALE) / F.col("k").cast("double")
-        ).alias("piq"),
+        ).alias("q"),
     )
     for _i in range(MKV_ITERS):
-        # checkpoint the RAW k-row frame: the totals agg and the
-        # normalize BOTH reference it, so an uncheckpointed unroll
-        # doubles the plan per iteration (round 15 — the
-        # graph_hits_scores a_raw fix, rule 5)
-        raw = (
+        pi = l1_quantize(
             p.join(pi, p["prev_type"] == pi["state"])
             .groupBy(F.col("event_type").alias("state"))
             .agg(
                 F.sum(
-                    F.col("piq").cast("decimal(38,0)") * F.col("pq")
+                    F.col("q").cast("decimal(38,0)") * F.col("pq")
                 ).alias("raw")
-            )
-            .localCheckpoint(eager=True)
-        )
-        tot = raw.agg(F.sum("raw").alias("t"))
-        pi = raw.crossJoin(F.broadcast(tot)).select(
+            ),
             "state",
-            _nearest_long_away(
-                F.col("raw").cast("double")
-                / F.col("t").cast("double")
-                * F.lit(MKV_SCALE)
-            ).alias("piq"),
+            MKV_SCALE,
         )
     emp = cells_in.groupBy(F.col("event_type").alias("state")).agg(
         F.sum("n").cast("long").alias("n_in")
@@ -1253,7 +1241,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state", "n_in", F.sum("n_in").over(w_all).alias("n_tot")
     )
     j = pi.join(emp2, "state")
-    stat = F.col("piq").cast("double") / F.lit(MKV_SCALE)
+    stat = F.col("q").cast("double") / F.lit(MKV_SCALE)
     empd = F.col("n_in").cast("double") / F.col("n_tot").cast("double")
     return j.select(
         F.col("state").alias("event_type"),

@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numerics import dround
-from ..functions.pairgen import posting_pairs
+from ..functions.pairgen import posting_pairs, symmetrize
 from ..functions.vectors import cosine_from_norms, cosine_sql, l2_norm
 from ..io import read_table
 
@@ -704,90 +704,25 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Jaccard pair graph, so each duplicate group keeps exactly one
     representative (cluster_id = min doc_id in the component).
 
-    Iterative min-label propagation (Pregel-lite): each round every node
-    adopts the minimum label among itself and its neighbors; the driver
-    loops lazy plans until a round changes nothing. Rounds needed = graph
-    diameter (near-dup components are tiny, 1-3 rounds); each round is one
-    distributed join + aggregate — the standard iterative-algorithm shape
-    on Spark (no collect of the graph). Oracle: DuckDB recursive CTE
-    computing the same transitive min label.
+    Algorithm: `graph.min_label_components` (the device
+    `graph_connected_components` shares) over both directions of the
+    Jaccard pair edges; near-dup components are tiny, 1-3 rounds. Each
+    round is one distributed join + aggregate (no collect of the graph).
+    Oracle: DuckDB recursive CTE computing the same transitive min label.
     """
+    from .graph import min_label_components
+
+    global LAST_CLUSTER_ROUNDS
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     pairs = _jaccard_pairs(
         read_table(spark, sf_dir, "documents")
     ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    # round 15: both edge directions in ONE explode — the 2-branch
-    # union executed the whole Jaccard pair pipeline once per branch
-    # on cache materialization (rule 5 corollary b)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("src"),
-                        F.col("doc_b").alias("dst"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("src"),
-                        F.col("doc_a").alias("dst"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .cache()
+    labels, LAST_CLUSTER_ROUNDS = min_label_components(
+        symmetrize(pairs, "doc_a", "doc_b", "src", "dst"),
+        docs.select("doc_id", F.col("doc_id").alias("cluster_id")),
+        rounds=50,  # label propagation needs <= diameter rounds
+        name="dedup_clusters",
     )
-    global LAST_CLUSTER_ROUNDS
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    max_rounds = 50  # label propagation needs <= diameter rounds
-    converged = False
-    for round_no in range(1, max_rounds + 1):
-        neigh = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("neigh_min"))
-        )
-        # the changed flag is computed INLINE on the label-update join
-        # (neigh_min improves the label ⇔ the row changed) — round 5
-        # dropped the separate old⋈new diff join the convergence check
-        # used to cost, cutting per-round joins from 3 to 2. Eager
-        # localCheckpoint (not cache) per round: each round references
-        # the previous generation TWICE, so a cache alone — which breaks
-        # re-EXECUTION but not the logical plan — leaves a plan tree
-        # that doubles per round and OOMs plan stringification near
-        # round 10 (hit for real by graph_connected_components, whose
-        # co-purchase graph needs 10 rounds; duplicate chains longer
-        # than ~10 hops would have hit it here too, well before the
-        # max_rounds guard). Checkpoint blocks of superseded
-        # generations are freed by the ContextCleaner when the frame
-        # is garbage-collected at rebind.
-        new_labels = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("neigh_min", "cluster_id")
-                ).alias("cluster_id"),
-                (
-                    F.coalesce("neigh_min", "cluster_id") < F.col("cluster_id")
-                ).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.select("doc_id", "cluster_id")
-        LAST_CLUSTER_ROUNDS = round_no  # diagnostic (scripts/measure_dedup_scale.py)
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # silent non-convergence would return labels that disagree with the
-        # oracle's full transitive closure — fail loudly instead
-        raise RuntimeError(
-            f"dedup_clusters: label propagation did not converge within "
-            f"{max_rounds} rounds (pathologically long duplicate chain?)"
-        )
     return labels
 
 

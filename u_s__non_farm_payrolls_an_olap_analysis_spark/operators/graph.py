@@ -28,10 +28,12 @@ vs reference: no analogue — the reference has no graph surface at all
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterate import fixpoint
 from ..functions.numerics import dround
+from ..functions.pairgen import symmetrize
 from ..io import read_table
 
 PR_DAMPING = 0.85
@@ -60,6 +62,42 @@ def _token_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pagerank_step(
+    edges: DataFrame,
+    deg: DataFrame,
+    nodes: DataFrame,
+    pr: DataFrame,
+    key: str,
+    teleport: Column,
+) -> DataFrame:
+    """One power iteration ``pr' = teleport + d * Σ_in pr(u)/outdeg(u)``
+    over ``edges (src, dst)`` and ``deg (src, outdeg)``: per-target
+    contributions sum as scaled int64 (see module docstring); ``nodes``
+    keyed by ``key`` carries whatever columns the ``teleport`` Column
+    reads. Lazy — the unrolled iterations plan as one static DAG."""
+    contrib = (
+        edges.join(pr.withColumnRenamed(key, "src"), "src")
+        .join(deg, "src")
+        .select(
+            F.col("dst").alias(key),
+            (F.col("pr") / F.col("outdeg")).alias("c"),
+        )
+    )
+    summed = contrib.groupBy(key).agg(
+        (
+            F.sum(dround(F.col("c") * PR_SCALE, 0).cast("long"))
+            .cast("double")
+            / PR_SCALE
+        ).alias("in_mass")
+    )
+    return nodes.join(summed, key, "left").select(
+        key,
+        (
+            teleport + PR_DAMPING * F.coalesce(F.col("in_mass"), F.lit(0.0))
+        ).alias("pr"),
+    )
+
+
 def graph_pagerank_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the token word-graph: ``PR_ITERS`` unrolled power
     iterations, ``pr' = (1-d)/N + d * Σ_in pr(u)/outdeg(u)`` with
@@ -67,8 +105,6 @@ def graph_pagerank_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     node's rank (rounded 6 dp) with a rank position ordered by
     (rounded pr desc, token)."""
     from pyspark.sql.window import Window
-
-    from ..functions.numerics import dround
 
     # round 15: edges feeds the node union (twice), deg, and every
     # iteration's contribution join; nodes feeds n, pr0 and every
@@ -90,36 +126,11 @@ def graph_pagerank_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("outdeg")
     ).localCheckpoint(eager=True)
 
-    pr = nodes.crossJoin(F.broadcast(n)).select(
-        "token", (F.lit(1.0) / F.col("n_nodes")).alias("pr")
-    )
+    nodes = nodes.crossJoin(F.broadcast(n))
+    pr = nodes.select("token", (F.lit(1.0) / F.col("n_nodes")).alias("pr"))
+    teleport = (1.0 - PR_DAMPING) / F.col("n_nodes")
     for _ in range(PR_ITERS):
-        contrib = (
-            edges.join(pr.withColumnRenamed("token", "src"), "src")
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("token"),
-                (F.col("pr") / F.col("outdeg")).alias("c"),
-            )
-        )
-        summed = contrib.groupBy("token").agg(
-            (
-                F.sum(dround(F.col("c") * PR_SCALE, 0).cast("long"))
-                .cast("double")
-                / PR_SCALE
-            ).alias("in_mass")
-        )
-        pr = (
-            nodes.join(summed, "token", "left")
-            .crossJoin(F.broadcast(n))
-            .select(
-                "token",
-                (
-                    (1.0 - PR_DAMPING) / F.col("n_nodes")
-                    + PR_DAMPING * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        )
+        pr = _pagerank_step(edges, deg, nodes, pr, "token", teleport)
     w = Window.orderBy(F.col("pr_r").desc(), "token")
     return (
         pr.select("token", dround(F.col("pr"), 6).alias("pr_r"))
@@ -340,22 +351,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union executes the corpus explode+distinct once per branch —
     # rule 5 corollary b), and the checkpoint pins nbr for the label
     # init plus every round's vote join (it was re-derived per round).
-    nbr = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("token"), F.col("b").alias("nb")
-                    ),
-                    F.struct(
-                        F.col("b").alias("token"), F.col("a").alias("nb")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.token", "e.nb")
-        .localCheckpoint(eager=True)
-    )
+    nbr = symmetrize(und, "a", "b", "token", "nb").localCheckpoint(eager=True)
     lbl = nbr.select("token").distinct().select(
         "token", F.col("token").alias("label")
     )
@@ -474,20 +470,46 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _symmetrize(
-    pairs: DataFrame, a: str, b: str, out_a: str, out_b: str
-) -> DataFrame:
-    """Both directions of an undirected pair list in ONE pass — a
-    2-branch union executes the pair generator once per branch
-    (CLAUDE.md rule 5 corollary b)."""
-    return pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(a).alias(out_a), F.col(b).alias(out_b)),
-                F.struct(F.col(b).alias(out_a), F.col(a).alias(out_b)),
-            )
-        ).alias("e")
-    ).select(f"e.{out_a}", f"e.{out_b}")
+def min_label_components(
+    edges: DataFrame, labels0: DataFrame, *, rounds: int, name: str
+) -> tuple[DataFrame, int]:
+    """Connected components by iterative **min-label propagation**
+    (Pregel-lite) over a directed-both-ways edge list ``(src, dst)``:
+    ``labels0`` is ``(node, label)`` with label = node, covering every
+    node to label (isolated ones keep their own). Each round every node
+    takes the minimum label among itself and its neighbors — ONE O(|E|)
+    join on the node key + a map-side-combinable ``min`` + the
+    label-update join, whose changed flag (neighbor min improves the
+    label) drives ``fixpoint``'s stop. Rounds needed = max distance to a
+    component's min node; ``rounds`` caps them and non-convergence
+    raises. Returns ``(labels, rounds_run)`` with ``labels0``'s columns.
+
+    Late rounds concentrate each component's min label into one hot
+    join key — AQE skew-split handles it (large-star/small-star splits
+    it algorithmically if needed)."""
+    node, label = labels0.columns
+    edges = edges.cache()
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        labels = labels.select(node, label)
+        neigh = (
+            edges.join(labels, edges.dst == labels[node])
+            .groupBy("src")
+            .agg(F.min(label).alias("neigh_min"))
+        )
+        return labels.join(neigh, labels[node] == neigh.src, "left").select(
+            node,
+            F.least(F.col(label), F.coalesce("neigh_min", label)).alias(label),
+            (F.coalesce("neigh_min", label) < F.col(label)).alias("_changed"),
+        )
+
+    try:
+        labels, n = fixpoint(
+            labels0, step, rounds=rounds, changed=F.col("_changed"), name=name
+        )
+    finally:
+        edges.unpersist()
+    return labels.select(node, label), n
 
 
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,81 +523,30 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     assortment-cluster question ("which parts sell together,
     transitively?") that basket analysis asks after pairwise lift.
 
-    Algorithm: iterative **min-label propagation** (the
-    ``dedup.dedup_clusters`` Pregel-lite device, generalized to an
-    arbitrary edge relation): every node starts labelled with itself;
-    each round every node takes the minimum label among itself and its
-    neighbors; the driver loops until a round changes nothing (rounds
-    needed = max distance to a component's min-key node; the sf0.01
-    fixture needs 10). Each round is ONE O(|E|) join on integer node
-    keys + a map-side-combinable ``min`` aggregate + the label-update
-    join. Each round's labels are **eagerly localCheckpoint-ed**: the
-    round references the previous generation TWICE (neighbor lookup +
-    label update), so a cache alone — which breaks re-EXECUTION but
-    not the logical plan — leaves a plan tree that doubles every round
-    and OOMs the driver in plan stringification near round 10 (found
-    the hard way; `dedup_clusters` never sees this only because
-    near-dup components converge in ≤3 rounds). Lineage truncation is
-    the standard Spark device for unbounded iteration (GraphFrames
-    does the same); production on a real cluster uses a reliable
-    ``checkpoint()`` dir for fault tolerance. Non-convergence within
-    ``CC_MAX_ROUNDS`` raises instead of returning labels that disagree
-    with the oracle's transitive closure.
+    Algorithm: `min_label_components` (the device `dedup_clusters`
+    shares) over the symmetrized co-purchase edges; the sf0.01 fixture
+    needs 10 rounds, ``CC_MAX_ROUNDS`` caps them.
 
     Scale: pair generation is the posting-list explode of
     `_copurchase_pairs` (round 15 — one lineitem scan, one exchange;
     per-order fan-out bounded by basket size ~7, so candidate volume
     is O(|orders| * k²), never cross-join shaped); the support HAVING
-    prunes before any graph work. Late rounds concentrate each
-    component's min label into one hot join key — AQE skew-split
-    handles it (the giant-component skew every min-label CC has;
-    large-star/small-star splits it algorithmically if needed).
-    Integer labels, counts only — no floats — fully hash-checked.
+    prunes before any graph work. Integer labels, counts only — no
+    floats — fully hash-checked.
 
-    vs reference: no analogue (the reference has no graph surface);
-    within the repo it generalizes ``dedup_clusters``' doc-pair
-    components to a derived relational edge list.
+    vs reference: no analogue (the reference has no graph surface).
     """
-    # posting-list pair generation — one lineitem scan, one exchange
-    # (round 15; was a two-scan self-join, see _copurchase_pairs)
-    pairs = _copurchase_pairs(spark, sf_dir)
-    edges = _symmetrize(pairs, "pa", "pb", "src", "dst").cache()
-    labels = (
+    edges = symmetrize(
+        _copurchase_pairs(spark, sf_dir), "pa", "pb", "src", "dst"
+    )
+    labels0 = (
         edges.select(F.col("src").alias("part"))
         .distinct()
         .select("part", F.col("part").alias("component"))
     )
-    converged = False
-    for _round in range(1, CC_MAX_ROUNDS + 1):
-        neigh = (
-            edges.join(labels, edges.dst == labels.part)
-            .groupBy("src")
-            .agg(F.min("component").alias("neigh_min"))
-        )
-        new_labels = (
-            labels.join(neigh, labels.part == neigh.src, "left")
-            .select(
-                "part",
-                F.least(
-                    F.col("component"), F.coalesce("neigh_min", "component")
-                ).alias("component"),
-                (
-                    F.coalesce("neigh_min", "component") < F.col("component")
-                ).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)  # cut lineage — see docstring
-        )
-        changed = new_labels.filter(F.col("_changed")).count()
-        labels = new_labels.select("part", "component")
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"graph_connected_components: no convergence in "
-            f"{CC_MAX_ROUNDS} rounds"
-        )
+    labels, _ = min_label_components(
+        edges, labels0, rounds=CC_MAX_ROUNDS, name="graph_connected_components"
+    )
     # comp_size via a window, not a groupBy+self-join — the checkpointed
     # frame serves both consumers from its materialized blocks either
     # way, but the window keeps it to one pass and one exchange
@@ -771,10 +742,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-sized, shrinking monotonically, **checkpointed each round**
     — the two broadcast builds have different canonical plans, so an
     uncheckpointed ``keep`` re-ran the whole degree aggregate once per
-    build); the edge list is **localCheckpoint-ed every round** — the
-    round references the previous generation multiple times, which
-    doubles the logical plan per round if only cached (CLAUDE.md
-    rule 5; the graph_connected_components lesson).
+    build); the peeled edge list is the `fixpoint` state, cut every
+    round.
 
     vs reference: no analogue (no graph surface in `dashboard_nfp.py`).
     """
@@ -785,7 +754,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pa").alias("na"), F.col("pb").alias("nb"))
         .localCheckpoint(eager=True)  # corpus-sized work done exactly once
     )
-    for _round in range(KCORE_ROUNDS):
+
+    def peel(edges: DataFrame, _r: int) -> DataFrame:
         # one explode instead of a 2-branch union: the union executed the
         # (checkpointed) edge scan once per branch (rule 5 corollary b —
         # cheap block reads here, but still two passes + two codegen'd
@@ -807,7 +777,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("part")
             .localCheckpoint(eager=True)
         )
-        edges = (
+        return (
             edges.join(
                 F.broadcast(keep.select(F.col("part").alias("na"))), "na"
             )
@@ -815,8 +785,11 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.broadcast(keep.select(F.col("part").alias("nb"))), "nb"
             )
             .select("na", "nb")
-            .localCheckpoint(eager=True)  # cut per-round lineage
         )
+
+    edges, _ = fixpoint(
+        edges, peel, rounds=KCORE_ROUNDS, name="graph_kcore_peel"
+    )
     return (
         edges.select(
             F.explode(F.array(F.col("na"), F.col("nb"))).alias("part")
@@ -895,7 +868,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _copurchase_pairs(spark, sf_dir)
     # one-pass symmetrize + checkpoint: directed feeds the degree agg
     # AND the endpoint-annotated edge list (round 15, rule 5)
-    directed = _symmetrize(und, "pa", "pb", "u", "w").localCheckpoint(
+    directed = symmetrize(und, "pa", "pb", "u", "w").localCheckpoint(
         eager=True
     )
     deg = directed.groupBy(F.col("u").alias("node")).agg(
@@ -1239,16 +1212,17 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ego-network radius question; Pregel/GraphX's canonical example,
     here as iterative frontier expansion in plain DataFrames).
 
-    Algorithm: classic frontier BFS — each round joins the CURRENT
-    frontier (last round's newly-reached nodes, never the whole
-    distance table) to the edge list, anti-joins already-settled
-    nodes, and stamps the round number as the hop count. Each round's
-    frames are **eagerly localCheckpoint-ed** (CLAUDE.md rule 5: the
-    loop references the previous generation twice — neighbor lookup +
-    anti-join — so a cache alone leaves a plan tree that doubles per
-    round). Terminates when a frontier is empty (rounds needed = the
-    component's eccentricity from the seed); non-convergence within
-    ``BFS_MAX_ROUNDS`` raises.
+    Algorithm: frontier BFS over ONE carried frame, the distance table
+    with a ``_new`` flag on the rows reached last round (the frontier).
+    Each round joins only the frontier to the edge list, stamps the
+    round number on the reached neighbors, and folds them into the
+    table with one ``min(hops)`` aggregate per node: a node is new iff
+    its minimum is this round. `fixpoint` cuts the table every round
+    and stops when no row is new (rounds needed = the component's
+    eccentricity from the seed); non-convergence within
+    ``BFS_MAX_ROUNDS`` raises. The fold replaces a distinct + an
+    anti-join against the table + a union: one exchange instead of
+    two, and no second broadcast of the table.
 
     Determinism: integer node keys and hop counts only; the seed (MIN
     part key) is computed as a 1-row aggregate broadcast-joined in —
@@ -1256,46 +1230,42 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle that enumerates (node, hops) pairs with UNION-dedup and
     takes MIN(hops) per node.
 
-    Scale: per-round shuffle is O(frontier x avg-degree) — frontier
-    BFS's whole point at 100 TB (joining the full distance table
-    every round would be O(V) per round); the anti-join keys on
+    Scale: the edge join reads only the frontier, O(frontier x
+    avg-degree) per round — frontier BFS's whole point at 100 TB
+    (joining the full distance table every round would be O(|E|) per
+    round); the fold shuffles that plus the O(V) table, keyed on
     integer part keys. AQE handles the late-round hub skew.
     """
     # posting-list pair generation — one lineitem scan, one exchange
     # (round 15; was a two-scan self-join, see _copurchase_pairs)
     pairs = _copurchase_pairs(spark, sf_dir)
-    # both directions via ONE explode (r15 ADVICE): the former 2-branch
-    # union executed the posting-list pair generator once per branch at
-    # cache materialization (rule 5 corollary b)
-    edges = _symmetrize(pairs, "pa", "pb", "src", "dst").cache()
-    dist = (
+    edges = symmetrize(pairs, "pa", "pb", "src", "dst").cache()
+    seed = (
         edges.agg(F.min("src").alias("part"))
-        .select("part", F.lit(0).alias("hops"))
+        .select("part", F.lit(0).alias("hops"), F.lit(True).alias("_new"))
         .localCheckpoint(eager=True)
     )
-    frontier = dist
-    converged = False
-    for hop in range(1, BFS_MAX_ROUNDS + 1):
-        cand = (
-            edges.join(frontier, edges.src == frontier.part)
-            .select(F.col("dst").alias("part"))
-            .distinct()
+
+    def expand(dist: DataFrame, hop: int) -> DataFrame:
+        frontier = dist.filter(F.col("_new"))
+        reached = edges.join(frontier, edges.src == frontier.part).select(
+            F.col("dst").alias("part"), F.lit(hop).alias("hops")
         )
-        new = (
-            cand.join(dist, "part", "left_anti")
-            .select("part", F.lit(hop).alias("hops"))
-            .localCheckpoint(eager=True)
+        return (
+            dist.select("part", "hops")
+            .unionByName(reached)
+            .groupBy("part")
+            .agg(F.min("hops").alias("hops"))
+            .withColumn("_new", F.col("hops") == hop)
         )
-        if new.count() == 0:
-            converged = True
-            break
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"graph_bfs_hops: no convergence in {BFS_MAX_ROUNDS} rounds"
+
+    try:
+        dist, _ = fixpoint(
+            seed, expand, rounds=BFS_MAX_ROUNDS, changed=F.col("_new"),
+            name="graph_bfs_hops",
         )
+    finally:
+        edges.unpersist()
     return dist.select("part", F.col("hops").cast("int")).orderBy("part")
 
 
@@ -1366,7 +1336,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..functions.numerics import _nearest_long_away
+    from ..functions.numerics import _nearest_long_away, l1_quantize
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
@@ -1435,43 +1405,25 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     a = None
     for _i in range(HITS_ITERS):
-        # checkpoint the RAW half-step frame, not the normalized one:
-        # the totals agg and the normalize select BOTH reference it, and
-        # without the cut the whole edges-join-agg subtree executes
-        # twice per half-step (the unroll doubles per level, CLAUDE.md
-        # rule 5). A window-normalized single-chain form with one final
-        # checkpoint was tried in round 15 and measured WORSE (7.2 s vs
-        # 6.4 s at 30x): each mid-plan broadcast build re-executes the
-        # chain above it, while eager checkpoints pin each half-step.
-        a_raw = (
+        # l1_quantize checkpoints the RAW half-step frame, not the
+        # normalized one. A window-normalized single-chain form with one
+        # final checkpoint was tried in round 15 and measured WORSE
+        # (7.2 s vs 6.4 s at 30x): each mid-plan broadcast build
+        # re-executes the chain above it, while eager checkpoints pin
+        # each half-step.
+        a = l1_quantize(
             e_for_a.join(side(h), "cust")
             .groupBy("part")
-            .agg(F.sum(dd(F.col("q"))).alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        a_tot = a_raw.agg(F.sum("raw").alias("t"))
-        a = a_raw.crossJoin(F.broadcast(a_tot)).select(
+            .agg(F.sum(dd(F.col("q"))).alias("raw")),
             "part",
-            _nearest_long_away(
-                F.col("raw").cast("double")
-                / F.col("t").cast("double")
-                * F.lit(HITS_SCALE)
-            ).alias("q"),
+            HITS_SCALE,
         )
-        h_raw = (
+        h = l1_quantize(
             e_for_h.join(side(a), "part")
             .groupBy("cust")
-            .agg(F.sum(dd(F.col("q"))).alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("t"))
-        h = h_raw.crossJoin(F.broadcast(h_tot)).select(
+            .agg(F.sum(dd(F.col("q"))).alias("raw")),
             "cust",
-            _nearest_long_away(
-                F.col("raw").cast("double")
-                / F.col("t").cast("double")
-                * F.lit(HITS_SCALE)
-            ).alias("q"),
+            HITS_SCALE,
         )
     wa = Window.orderBy(F.col("q").desc(), "part")
     wh = Window.orderBy(F.col("q").desc(), "cust")
@@ -1596,7 +1548,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posting-list pair generation — one lineitem scan, one exchange
     # (round 15; was a two-scan self-join, see _copurchase_pairs)
     pairs = _copurchase_pairs(spark, sf_dir)
-    und = _symmetrize(pairs, "pa", "pb", "src", "dst").localCheckpoint(
+    und = symmetrize(pairs, "pa", "pb", "src", "dst").localCheckpoint(
         eager=True
     )
     # deg is re-joined by EVERY power iteration (and feeds the seed
@@ -1627,34 +1579,11 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("pr"),
     )
+    teleport = F.when(
+        F.col("is_seed") == 1, F.lit(1.0 - PR_DAMPING)
+    ).otherwise(F.lit(0.0))
     for _ in range(PR_ITERS):
-        contrib = (
-            und.join(pr.withColumnRenamed("part", "src"), "src")
-            .join(deg, "src")
-            .select(
-                F.col("dst").alias("part"),
-                (F.col("pr") / F.col("outdeg")).alias("c"),
-            )
-        )
-        summed = contrib.groupBy("part").agg(
-            (
-                F.sum(dround(F.col("c") * PR_SCALE, 0).cast("long"))
-                .cast("double")
-                / PR_SCALE
-            ).alias("in_mass")
-        )
-        pr = (
-            nodes.join(summed, "part", "left")
-            .select(
-                "part",
-                (
-                    F.when(
-                        F.col("is_seed") == 1, F.lit(1.0 - PR_DAMPING)
-                    ).otherwise(F.lit(0.0))
-                    + PR_DAMPING * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("pr"),
-            )
-        )
+        pr = _pagerank_step(und, deg, nodes, pr, "part", teleport)
     w = Window.orderBy(F.col("pr_r").desc(), "part")
     return (
         pr.select("part", dround(F.col("pr"), 6).alias("pr_r"))

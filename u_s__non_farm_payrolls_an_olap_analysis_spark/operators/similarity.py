@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.iterate import fixpoint
 from ..functions.numerics import dround, dsum_scaled
 from ..functions.vectors import cosine, cosine_sql, dot
 from ..io import read_table
@@ -173,7 +174,8 @@ def _train_kmeans_codebook_exact(
         F.col("neighbor_id").alias("cent_id"),
         F.transform(F.col("ce"), lambda x: x.cast("double")).alias("cent_e"),
     )
-    for _ in range(iters):
+
+    def lloyd(cent: DataFrame, _r: int) -> DataFrame:
         scored = cand.join(F.broadcast(cent)).select(
             "neighbor_id",
             "ce",
@@ -186,7 +188,7 @@ def _train_kmeans_codebook_exact(
             .filter(F.col("rn") == 1)
             .select("neighbor_id", "ce", "cent_id")
         )
-        cent = (
+        return (
             members.select(
                 "cent_id", F.posexplode("ce").alias("pos", "val")
             )
@@ -211,12 +213,15 @@ def _train_kmeans_codebook_exact(
                     lambda s: s["m"],
                 ).alias("cent_e")
             )
-            # round 15: checkpoint each generation's k-row codebook —
-            # the next iteration BROADCASTS it, and a mid-plan broadcast
-            # build re-executes the whole chain above it (the
-            # graph_hits_scores finding; rule 5)
-            .localCheckpoint(eager=True)
         )
+
+    # round 15: checkpoint each generation's k-row codebook — the next
+    # iteration BROADCASTS it, and a mid-plan broadcast build
+    # re-executes the whole chain above it (the graph_hits_scores
+    # finding; rule 5)
+    cent, _ = fixpoint(
+        cent, lloyd, rounds=iters, name="_train_kmeans_codebook_exact"
+    )
     return cent
 
 
@@ -1562,10 +1567,10 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale: per iteration ONE pass over the corpus (dot per row, fold
     over dim) + one (dim)-key exact aggregate — C is never formed
-    (O(n·d), not O(n·d²)); v rides a broadcast; each iteration's 1-row
-    v frame is localCheckpoint-ed (CLAUDE.md rule 5, the MMR unrolled-
-    stage lesson), as is the centered-corpus frame every iteration
-    re-reads.
+    (O(n·d), not O(n·d²)); v rides a broadcast; the 1-row v frame is the
+    `fixpoint` state, cut every iteration (the MMR unrolled-stage
+    lesson); the centered-corpus frame every iteration re-reads is
+    checkpointed once.
 
     vs reference: no analogue (no vector surface in `dashboard_nfp.py`).
     """
@@ -1614,7 +1619,8 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     v_df = spark.range(1).select(
         F.array_repeat(F.lit(0.125), EMB_DIM).alias("v")
     )
-    for _it in range(PCA_ITERS):
+
+    def refine(v_df: DataFrame, _r: int) -> DataFrame:
         dots = cvec.crossJoin(F.broadcast(v_df)).select(
             "n",
             "ct",
@@ -1654,12 +1660,16 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .select("w", F.sqrt(dot(F.col("w"), F.col("w"))).alias("nrm"))
         )
-        v_df = warr.select(
+        return warr.select(
             F.transform(
                 "w", lambda x: dround(x / F.col("nrm"), 6)
             ).alias("v"),
             dround(F.col("nrm"), 6).alias("lam"),
-        ).localCheckpoint(eager=True)  # cut per-stage lineage
+        )
+
+    v_df, _ = fixpoint(
+        v_df, refine, rounds=PCA_ITERS, name="embedding_pca_power_iteration"
+    )
 
     return (
         v_df.crossJoin(F.broadcast(tv))

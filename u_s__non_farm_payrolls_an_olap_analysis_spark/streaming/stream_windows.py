@@ -443,8 +443,9 @@ QUERIES["stream_docs_dedup_fingerprint"] = stream_docs_dedup_fingerprint
 
 
 # batches processed by the last stream_upsert_foreach_batch drain —
-# observability for the multi-batch merge test (same device as
-# dedup.LAST_CLUSTER_ROUNDS)
+# observability for the multi-batch merge test (the streaming twin of
+# dedup.LAST_CLUSTER_ROUNDS, which records functions/iterate.fixpoint's
+# rounds_run)
 LAST_UPSERT_BATCHES: int | None = None
 
 
