@@ -9,6 +9,14 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.numerics import (
+    descale,
+    dsum,
+)
+from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.timeparts import (
+    month_start,
+    monthly_partials,
+)
 from u_s__non_farm_payrolls_an_olap_analysis_spark.io import upsert_by_key
 
 _settings = settings(
@@ -1831,3 +1839,80 @@ def test_min_label_components_raises_past_round_cap(spark):
         min_label_components(e, labels0, rounds=6, name="path")
     labels, n = min_label_components(e, labels0, rounds=7, name="path")
     assert n == 7 and {r["label"] for r in labels.collect()} == {0}
+
+
+# prices on 4-dp half ties (x.xxxx5) next to ordinary ones
+_prices = st.one_of(
+    st.integers(-10**7, 10**7).map(lambda i: i / 100),
+    st.integers(-10**6, 10**6).map(lambda i: i / 10_000 + 0.00005),
+)
+_order_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["1-URGENT", "2-HIGH", "5-LOW"]),
+        st.integers(0, 5),  # month offset from 1995-01
+        st.integers(1, 28),  # day
+        _prices,
+        st.integers(0, 2),  # part of the random split
+    ),
+    max_size=24,
+)
+
+
+_groups_across_parts = [
+    ("1-URGENT", 0, 1, 10.00005, 0),
+    ("1-URGENT", 0, 2, 20.5, 1),
+    ("5-LOW", 0, 3, 0.00005, 2),
+    ("5-LOW", 1, 5, -3.25, 0),
+    ("5-LOW", 1, 6, 7.12345, 1),
+]
+
+
+@given(rows=_order_rows, keyed=st.booleans())
+@example(rows=[], keyed=True)
+@example(rows=[], keyed=False)
+@example(rows=_groups_across_parts, keyed=True)
+@example(rows=_groups_across_parts, keyed=False)
+@_settings
+def test_monthly_partials_split_sums_and_descales(spark, rows, keyed):
+    """``monthly_partials`` is a monoid homomorphism: the partials of a
+    random 3-way split of the rows, summed per ``(keys, ms)``, equal the
+    partials of the whole, long for long — the property an incremental
+    fold of the monthly series relies on. Its descaled total equals
+    ``F.round(dsum(o_totalprice), 4)`` over the same rows."""
+    import datetime as dt
+
+    orders = spark.createDataFrame(
+        [
+            (p, dt.datetime(1995 + m // 12, 1 + m % 12, d), x, part)
+            for p, m, d, x, part in rows
+        ],
+        "o_orderpriority string, o_orderdate timestamp, "
+        "o_totalprice double, part int",
+    )
+    keys = [F.col("o_orderpriority").alias("priority")] if keyed else []
+    names = ["priority"] if keyed else []
+
+    def table(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    whole = monthly_partials(orders, *keys)
+    parts = [
+        monthly_partials(orders.filter(F.col("part") == i), *keys)
+        for i in range(3)
+    ]
+    folded = (
+        parts[0].unionByName(parts[1]).unionByName(parts[2])
+        .groupBy(*names, "ms")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("total_scaled").alias("total_scaled"),
+        )
+    )
+    assert table(folded) == table(whole)
+    assert sum(n for *_, n, _t in table(whole)) == len(rows)
+
+    direct = orders.groupBy(
+        *keys, month_start("o_orderdate").alias("ms")
+    ).agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+    descaled = whole.select(*names, "ms", descale("total_scaled").alias("total"))
+    assert table(descaled) == table(direct)

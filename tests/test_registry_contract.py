@@ -332,3 +332,90 @@ def test_convergence_loop_has_one_owner():
         if rel != "functions/iterate.py":
             problems += _convergence_loops(path.read_text(), rel)
     assert not problems, "\n".join(problems)
+
+
+def _monthly_orders_groupbys(src: str, rel: str) -> list[str]:
+    """``groupBy`` calls keyed by the month of ``o_orderdate`` —
+    ``month_start(...)`` or ``date_trunc("month", ...)`` over that column
+    anywhere in a grouping argument. Each hit names its innermost
+    enclosing function."""
+    import ast
+
+    def month_of_orderdate(arg) -> bool:
+        for n in ast.walk(arg):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            month = name == "month_start" or (
+                name == "date_trunc"
+                and n.args
+                and isinstance(n.args[0], ast.Constant)
+                and str(n.args[0].value).lower() == "month"
+            )
+            if month and any(
+                isinstance(c, ast.Constant) and c.value == "o_orderdate"
+                for c in ast.walk(n)
+            ):
+                return True
+        return False
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "groupBy"
+                and any(month_of_orderdate(a) for a in child.args)
+            ):
+                out.append(f"{rel}:{child.lineno}: {fn}")
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return out
+
+
+def test_monthly_series_has_one_owner():
+    """The monthly series over ``orders`` is built in ONE place,
+    ``functions/timeparts.monthly_partials``: no other engine module may
+    group by the month of ``o_orderdate``. Self-tested against a
+    synthetic repro of both spellings (and of two that must pass: a
+    month of another column, a day of ``o_orderdate``)."""
+    import pathlib
+
+    repro = (
+        "def f(orders, ev):\n"
+        "    a = orders.groupBy(month_start('o_orderdate').alias('ms'))\n"
+        "    b = orders.groupBy(\n"
+        "        F.col('o_orderpriority'),\n"
+        "        F.date_trunc('month', 'o_orderdate').alias('mon'),\n"
+        "    )\n"
+        "    c = ev.groupBy(F.date_trunc('month', 'ts'))\n"
+        "    d = orders.groupBy(F.date_trunc('day', 'o_orderdate'))\n"
+    )
+    assert _monthly_orders_groupbys(repro, "x.py") == ["x.py:2: f", "x.py:3: f"]
+    pkg = pathlib.Path(registry.__file__).resolve().parent
+    problems = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel != "functions/timeparts.py":
+            problems += _monthly_orders_groupbys(path.read_text(), rel)
+    assert not problems, "\n".join(problems)
+
+
+def test_default_driver_heap_is_half_the_host_capped():
+    """The default driver heap is half of physical RAM, capped at 16g: a
+    15 GiB host gets 7g (a 16g heap there let the OOM killer take the
+    JVM), a 128 GiB host keeps 16g."""
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.session import (
+        default_driver_memory,
+    )
+
+    assert default_driver_memory(15 * 2**30) == "7g"
+    assert default_driver_memory(128 * 2**30) == "16g"
+    assert default_driver_memory(2**30) == "1g"

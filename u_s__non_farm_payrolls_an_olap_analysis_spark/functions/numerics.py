@@ -76,6 +76,18 @@ def dsum_scaled(col: Column | str, scale: int = SCALE) -> Column:
     return F.sum(_nearest_long_away(_c(col) * scale))
 
 
+def descale(scaled: Column | str, scale: int = SCALE) -> Column:
+    """4-dp dollars off a scaled-int64 sum: ``F.round(dsum(x), 4)`` is
+    ``descale(dsum_scaled(x))``, the same expression."""
+    return F.round(_c(scaled) / float(scale), 4)
+
+
+def d38(col: Column | str) -> Column:
+    """Widen to DECIMAL(38,0) (≡ DuckDB HUGEINT) before exact integer
+    products whose magnitudes outgrow int64."""
+    return _c(col).cast("decimal(38,0)")
+
+
 def davg(col: Column | str, scale: int = SCALE) -> Column:
     """Order-independent AVG: scaled-int sum / non-null count."""
     c = _c(col)

@@ -10,9 +10,11 @@ even the decade bucket — the reference's one lambda UDF
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
+
+from .numerics import dsum_scaled
 
 
 def year_of(col: Column | str) -> Column:
@@ -47,6 +49,38 @@ def month_start(col: Column | str) -> Column:
     the pandas/Arrow representation matches DuckDB's (which materializes
     DATE as datetime64 anyway) for stable value-hash comparison."""
     return F.date_trunc("month", col)
+
+
+def monthly_partials(orders: DataFrame, *keys: Column | str) -> DataFrame:
+    """The engine's monthly series: ``orders`` grouped by ``(*keys,
+    month_start(o_orderdate))`` into the additive partials ``(*keys, ms,
+    n_orders, total_scaled)`` — order count and scaled-int64
+    ``o_totalprice`` sum (``numerics.dsum_scaled``), NOT descaled. Both
+    partials are exact longs, so partials of any split of the rows sum
+    to the partials of the whole (the monoid an incremental fold relies
+    on); ``numerics.descale`` turns ``total_scaled`` into the same 4-dp
+    dollars as ``F.round(dsum(o_totalprice), 4)``. The only month
+    group-by of ``orders`` in the engine
+    (``tests/test_registry_contract.py::test_monthly_series_has_one_owner``);
+    Catalyst prunes whichever partial a caller does not read."""
+    return orders.groupBy(*keys, month_start("o_orderdate").alias("ms")).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        dsum_scaled("o_totalprice").alias("total_scaled"),
+    )
+
+
+def monthly_revenue(
+    orders: DataFrame, *keys: Column | str, rev: str = "rev_s"
+) -> DataFrame:
+    """:func:`monthly_partials`' scaled revenue as the analytics
+    families' series ``(*keys, mon, rev)``. The rename collapses into
+    the aggregate, so the plan is that of a hand-written group-by."""
+    p = monthly_partials(orders, *keys)
+    return p.select(
+        *p.columns[: len(keys)],
+        F.col("ms").alias("mon"),
+        F.col("total_scaled").alias(rev),
+    )
 
 
 def decade_label(year_col: Column) -> Column:

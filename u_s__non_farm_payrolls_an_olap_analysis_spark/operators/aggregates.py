@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, davg_sql, dround, dsum, dsum_sql
+from ..functions.numerics import d38, davg, davg_sql, dround, dsum, dsum_sql
 from ..functions.timeparts import year_of
 from ..functions.plan_cache import plan_memo
 from ..io import read_table
@@ -356,6 +356,41 @@ ORACLE = {
 # --- Exact higher moments: skewness & kurtosis --------------------------------
 
 
+def _qty_power_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per ship year ``(year, n, s1, m2e, m3e, m4e)``: the power sums
+    S1..S4 of per-line quantity combined exactly (DECIMAL(38,0) ≡
+    HUGEINT) into M2 = n²·m2, M3 = n³·m3 and M4 = n⁴·m4 (formulas in
+    `agg_skew_kurtosis`), zero-variance years dropped on the exact M2.
+    Shared by the skewness/kurtosis and Jarque–Bera operators."""
+    li = read_table(spark, sf_dir, "lineitem")
+    # quantities are integral in every fixture; round-first (the dsum
+    # device) so a fractional value could never truncate (Spark) vs
+    # round (DuckDB) differently
+    q = dround("l_quantity", 0).cast("long")
+    per = li.groupBy(year_of("l_shipdate").alias("year")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(q).alias("s1"),
+        F.sum(q * q).alias("s2"),
+        F.sum(q * q * q).alias("s3"),
+        F.sum(q * q * q * q).alias("s4"),
+    )
+    n, s1, s2, s3, s4 = (d38(x) for x in ("n", "s1", "s2", "s3", "s4"))
+    return per.select(
+        "year",
+        "n",
+        "s1",
+        (n * s2 - s1 * s1).alias("m2e"),
+        (n * n * s3 - F.lit(3) * n * s1 * s2 + F.lit(2) * s1 * s1 * s1)
+        .alias("m3e"),
+        (
+            n * n * n * s4
+            - F.lit(4) * n * n * s1 * s3
+            + F.lit(6) * n * s1 * s1 * s2
+            - F.lit(3) * s1 * s1 * s1 * s1
+        ).alias("m4e"),
+    ).filter(F.col("m2e") > 0)
+
+
 def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Exact population skewness and excess kurtosis** of per-line
     quantity by ship year — the shape statistics after mean/variance
@@ -378,40 +413,7 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     power sums are ordinary SUMs); the moment algebra runs on the
     ~7-row year frame. Zero-variance groups are filtered on the exact
     integer M2 in both engines (no Inf can reach the rounding)."""
-    li = read_table(spark, sf_dir, "lineitem")
-    # quantities are integral in every fixture; round-first (the dsum
-    # device) so a fractional value could never truncate (Spark) vs
-    # round (DuckDB) differently
-    q = dround("l_quantity", 0).cast("long")
-    per = li.groupBy(year_of("l_shipdate").alias("year")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).alias("s1"),
-        F.sum(q * q).alias("s2"),
-        F.sum(q * q * q).alias("s3"),
-        F.sum(q * q * q * q).alias("s4"),
-    )
-
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    n, s1, s2, s3, s4 = (F.col(x) for x in ("n", "s1", "s2", "s3", "s4"))
-    with_m = per.select(
-        "year",
-        "n",
-        "s1",
-        (d(n) * d(s2) - d(s1) * d(s1)).alias("m2e"),
-        (
-            d(n) * d(n) * d(s3)
-            - F.lit(3) * d(n) * d(s1) * d(s2)
-            + F.lit(2) * d(s1) * d(s1) * d(s1)
-        ).alias("m3e"),
-        (
-            d(n) * d(n) * d(n) * d(s4)
-            - F.lit(4) * d(n) * d(n) * d(s1) * d(s3)
-            + F.lit(6) * d(n) * d(s1) * d(s1) * d(s2)
-            - F.lit(3) * d(s1) * d(s1) * d(s1) * d(s1)
-        ).alias("m4e"),
-    ).filter(F.col("m2e") > 0)
+    with_m = _qty_power_moments(spark, sf_dir)
     m2, m3, m4 = (F.col(x).cast("double") for x in ("m2e", "m3e", "m4e"))
     n_d = F.col("n").cast("double")
     return with_m.select(
@@ -474,36 +476,7 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE map-side-combinable power-sum aggregate over lineitem;
     the test statistic runs on the ~7-row year frame."""
-    li = read_table(spark, sf_dir, "lineitem")
-    q = dround("l_quantity", 0).cast("long")
-    per = li.groupBy(year_of("l_shipdate").alias("year")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(q).alias("s1"),
-        F.sum(q * q).alias("s2"),
-        F.sum(q * q * q).alias("s3"),
-        F.sum(q * q * q * q).alias("s4"),
-    )
-
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    n, s1, s2, s3, s4 = (F.col(x) for x in ("n", "s1", "s2", "s3", "s4"))
-    with_m = per.select(
-        "year",
-        "n",
-        (d(n) * d(s2) - d(s1) * d(s1)).alias("m2e"),
-        (
-            d(n) * d(n) * d(s3)
-            - F.lit(3) * d(n) * d(s1) * d(s2)
-            + F.lit(2) * d(s1) * d(s1) * d(s1)
-        ).alias("m3e"),
-        (
-            d(n) * d(n) * d(n) * d(s4)
-            - F.lit(4) * d(n) * d(n) * d(s1) * d(s3)
-            + F.lit(6) * d(n) * d(s1) * d(s1) * d(s2)
-            - F.lit(3) * d(s1) * d(s1) * d(s1) * d(s1)
-        ).alias("m4e"),
-    ).filter(F.col("m2e") > 0)
+    with_m = _qty_power_moments(spark, sf_dir)
     m2, m3, m4 = (F.col(x).cast("double") for x in ("m2e", "m3e", "m4e"))
     n_d = F.col("n").cast("double")
     g1 = m3 / (m2 * F.sqrt(m2))

@@ -13,8 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, davg_sql, dround, dsum, dsum_scaled
-from ..functions.timeparts import epoch_micros_from_ntz, month_start, year_of
+from ..functions.numerics import descale, dround, dsum
+from ..functions.timeparts import (
+    epoch_micros_from_ntz,
+    monthly_partials,
+    year_of,
+)
 from ..io import read_table
 
 
@@ -114,9 +118,8 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruct them from January.
     """
     m = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(month_start("o_orderdate").alias("ms"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_partials(read_table(spark, sf_dir, "orders"))
+        .select("ms", descale("total_scaled").alias("total"))
     )
     # punch deterministic holes: drop all Februaries
     observed = m.filter(F.month("ms") != 2)
@@ -159,9 +162,8 @@ def timeseries_interpolate_linear(
     interpolated midpoint of two 4-dp values is EXACTLY the half-way tie
     ``F.round``'s decimal rendering would resolve differently."""
     m = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(month_start("o_orderdate").alias("ms"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_partials(read_table(spark, sf_dir, "orders"))
+        .select("ms", descale("total_scaled").alias("total"))
     )
     observed = m.filter(F.month("ms") != 2)
     bounds = m.agg(F.min("ms").alias("lo"), F.max("ms").alias("hi"))
@@ -243,9 +245,8 @@ def window_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit ROWS-frame family (the reference only ever uses lag-1 and the
     running-peak frame). One sort, one WindowExec for all five functions."""
     m = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(month_start("o_orderdate").alias("ms"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_partials(read_table(spark, sf_dir, "orders"))
+        .select("ms", descale("total_scaled").alias("total"))
     )
     w3 = Window.orderBy("ms").rowsBetween(-2, 0)
     return m.select(
@@ -286,9 +287,8 @@ def window_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions), never the fact table; explicit unbounded ROWS frame so
     last/nth see the whole partition, not the default running frame."""
     m = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(month_start("o_orderdate").alias("ms"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_partials(read_table(spark, sf_dir, "orders"))
+        .select("ms", descale("total_scaled").alias("total"))
     )
     w = (
         Window.partitionBy(F.year("ms"))
@@ -374,9 +374,8 @@ def dq_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference re-runs the orders aggregate (rule 5; measured 3 fact
     # scans)
     m = (
-        read_table(spark, sf_dir, "orders")
-        .groupBy(month_start("o_orderdate").alias("ms"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_partials(read_table(spark, sf_dir, "orders"))
+        .select("ms", descale("total_scaled").alias("total"))
         .localCheckpoint(eager=True)
     )
     stats0 = m.agg(

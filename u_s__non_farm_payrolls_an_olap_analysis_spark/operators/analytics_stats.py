@@ -9,8 +9,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, davg_sql, dround, dsum, dsum_scaled
-from ..functions.timeparts import epoch_micros_from_ntz, month_start, year_of
+from ..functions.numerics import (
+    d38,
+    davg,
+    davg_sql,
+    dround,
+    dsum,
+    dsum_scaled,
+)
+from ..functions.timeparts import (
+    epoch_micros_from_ntz,
+    monthly_partials,
+    monthly_revenue,
+)
 from ..io import read_table
 
 QUERIES: dict = {}
@@ -760,6 +771,38 @@ ORACLE["agg_mann_whitney_u"] = (
 CHI2_SCALE = 1_000_000  # per-cell term quantization
 
 
+def _chi2_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The exact χ² of the order status × priority contingency table as
+    one row ``(n, nr, nc, t_s)``: n the total, nr/nc the distinct row
+    and column counts, ``t_s`` the cross-cell sum of each cell's
+    (n·O − r·c)²/(n·r·c) quantized ×CHI2_SCALE (ties-away), so χ² =
+    t_s / CHI2_SCALE. Shared by the χ² test and the effect sizes, so
+    the two can never disagree on χ²."""
+    orders = read_table(spark, sf_dir, "orders")
+    cells = orders.groupBy(
+        F.col("o_orderstatus").alias("s"),
+        F.col("o_orderpriority").alias("p"),
+    ).agg(F.count(F.lit(1)).alias("o"))
+    rows_m = cells.groupBy("s").agg(F.sum("o").alias("r"))
+    cols_m = cells.groupBy("p").agg(F.sum("o").alias("c"))
+    tot = cells.agg(
+        F.sum("o").alias("n"),
+        F.countDistinct("s").alias("nr"),
+        F.countDistinct("p").alias("nc"),
+    )
+    joined = (
+        cells.join(F.broadcast(rows_m), "s")
+        .join(F.broadcast(cols_m), "p")
+        .crossJoin(F.broadcast(tot))
+    )
+    n, o, r, c = (d38(x) for x in ("n", "o", "r", "c"))
+    dev = n * o - r * c
+    term = (dev * dev).cast("double") / (n * r * c).cast("double")
+    return joined.groupBy("n", "nr", "nc").agg(
+        dsum_scaled(term, CHI2_SCALE).alias("t_s")
+    )
+
+
 def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """**Pearson χ² test of independence** (Pearson 1900) between order
     STATUS and PRIORITY — is the priority mix different across
@@ -779,34 +822,8 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable count aggregate over orders; margins
     are two ~cardinality-row aggregates broadcast back; the cell
     algebra runs on the R×C frame."""
-    orders = read_table(spark, sf_dir, "orders")
-    cells = orders.groupBy(
-        F.col("o_orderstatus").alias("s"),
-        F.col("o_orderpriority").alias("p"),
-    ).agg(F.count(F.lit(1)).alias("o"))
-    rows_m = cells.groupBy("s").agg(F.sum("o").alias("r"))
-    cols_m = cells.groupBy("p").agg(F.sum("o").alias("c"))
-    tot = cells.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("s").alias("nr"),
-        F.countDistinct("p").alias("nc"),
-    )
-
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    joined = (
-        cells.join(F.broadcast(rows_m), "s")
-        .join(F.broadcast(cols_m), "p")
-        .crossJoin(F.broadcast(tot))
-    )
-    dev = d(F.col("n")) * d(F.col("o")) - d(F.col("r")) * d(F.col("c"))
-    term = (dev * dev).cast("double") / (
-        d(F.col("n")) * d(F.col("r")) * d(F.col("c"))
-    ).cast("double")
     return (
-        joined.groupBy("n", "nr", "nc")
-        .agg(dsum_scaled(term, CHI2_SCALE).alias("t_s"))
+        _chi2_status_priority(spark, sf_dir)
         .select(
             F.col("n").cast("long").alias("n_orders"),
             ((F.col("nr") - F.lit(1)) * (F.col("nc") - F.lit(1)))
@@ -1135,20 +1152,17 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("n_lines", F.col("dr").alias("ry"))
     ranked = pairs.join(rx_tab, "vx").join(F.broadcast(ry_tab), "n_lines")
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     mom = ranked.agg(
         F.count(F.lit(1)).alias("m"),
         F.sum("rx").alias("sx"),
         F.sum("ry").alias("sy"),
-        F.sum(d(F.col("rx")) * F.col("rx")).alias("sxx"),
-        F.sum(d(F.col("ry")) * F.col("ry")).alias("syy"),
-        F.sum(d(F.col("rx")) * F.col("ry")).alias("sxy"),
+        F.sum(d38("rx") * F.col("rx")).alias("sxx"),
+        F.sum(d38("ry") * F.col("ry")).alias("syy"),
+        F.sum(d38("rx") * F.col("ry")).alias("sxy"),
     )
-    num = d(F.col("m")) * F.col("sxy") - d(F.col("sx")) * F.col("sy")
-    m2x = d(F.col("m")) * F.col("sxx") - d(F.col("sx")) * F.col("sx")
-    m2y = d(F.col("m")) * F.col("syy") - d(F.col("sy")) * F.col("sy")
+    num = d38("m") * F.col("sxy") - d38("sx") * F.col("sy")
+    m2x = d38("m") * F.col("sxx") - d38("sx") * F.col("sx")
+    m2y = d38("m") * F.col("syy") - d38("sy") * F.col("sy")
     return (
         mom.filter((m2x > 0) & (m2y > 0))
         .select(
@@ -1224,9 +1238,6 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v"),
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     agg = both.agg(
         F.sum(F.when(F.col("is_a"), 1).otherwise(0))
         .cast("long")
@@ -1236,15 +1247,13 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n2"),
         F.sum(F.when(F.col("is_a"), F.col("v"))).alias("s1"),
         F.sum(F.when(~F.col("is_a"), F.col("v"))).alias("s2"),
-        F.sum(F.when(F.col("is_a"), d(F.col("v")) * F.col("v"))).alias("q1"),
-        F.sum(F.when(~F.col("is_a"), d(F.col("v")) * F.col("v"))).alias(
-            "q2"
-        ),
+        F.sum(F.when(F.col("is_a"), d38("v") * F.col("v"))).alias("q1"),
+        F.sum(F.when(~F.col("is_a"), d38("v") * F.col("v"))).alias("q2"),
     ).filter((F.col("n1") > 1) & (F.col("n2") > 1))
     n1, n2 = F.col("n1"), F.col("n2")
     s1, s2 = F.col("s1"), F.col("s2")
-    a1 = d(n1) * F.col("q1") - d(s1) * s1
-    a2 = d(n2) * F.col("q2") - d(s2) * s2
+    a1 = d38(n1) * F.col("q1") - d38(s1) * s1
+    a2 = d38(n2) * F.col("q2") - d38(s2) * s2
     n1d, n2d = n1.cast("double"), n2.cast("double")
     m1 = s1.cast("double") / n1d
     m2 = s2.cast("double") / n2d
@@ -1332,16 +1341,13 @@ def agg_oneway_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     v = dround(F.col("o_totalprice") * F.lit(10_000.0), 0).cast("long")
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     # round 15: the 5-row group frame feeds the totals AND the
     # between-term join — eager checkpoint or each reference re-runs
     # the orders aggregate (rule 5; the agg_tukey_hsd precedent)
     per = orders.groupBy(F.col("o_orderpriority").alias("p")).agg(
         F.count(F.lit(1)).alias("nh"),
         F.sum(v).alias("sh"),
-        F.sum(d(v) * v).alias("qh"),
+        F.sum(d38(v) * v).alias("qh"),
     ).localCheckpoint(eager=True)
     tot = per.agg(
         F.sum("nh").cast("long").alias("n"),
@@ -1373,8 +1379,8 @@ def agg_oneway_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_orders"),
             F.col("k").alias("k_groups"),
             dround(
-                (d(ssb_n) * (F.col("n") - F.col("k"))).cast("double")
-                / (d(ssw_n) * (F.col("k") - F.lit(1))).cast("double"),
+                (d38(ssb_n) * (F.col("n") - F.col("k"))).cast("double")
+                / (d38(ssw_n) * (F.col("k") - F.lit(1))).cast("double"),
                 6,
             ).alias("f_stat"),
             dround(
@@ -1437,11 +1443,10 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable month rollup, then a broadcast-able
     self-join of the ~84-row series."""
     orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        month_start("o_orderdate").alias("month")
-    ).agg(
-        dsum_scaled("o_totalprice").alias("rev"),
-        F.count(F.lit(1)).alias("cnt"),
+    monthly = monthly_partials(orders).select(
+        F.col("ms").alias("month"),
+        F.col("total_scaled").alias("rev"),
+        F.col("n_orders").alias("cnt"),
     )
     a = monthly.select(
         F.col("month").alias("ma"),
@@ -1472,10 +1477,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n2"),
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    denom = d(F.col("n0") - F.col("n1")) * (F.col("n0") - F.col("n2"))
+    denom = d38(F.col("n0") - F.col("n1")) * (F.col("n0") - F.col("n2"))
     return agg.filter(denom > 0).select(
         F.col("n0").cast("long").alias("n_pairs"),
         F.col("c").alias("concordant"),
@@ -1532,34 +1534,7 @@ def agg_contingency_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to the χ² operator (one count aggregate; k²-row
     algebra)."""
-    orders = read_table(spark, sf_dir, "orders")
-    cells = orders.groupBy(
-        F.col("o_orderstatus").alias("s"),
-        F.col("o_orderpriority").alias("p"),
-    ).agg(F.count(F.lit(1)).alias("o"))
-    rows_m = cells.groupBy("s").agg(F.sum("o").alias("r"))
-    cols_m = cells.groupBy("p").agg(F.sum("o").alias("c"))
-    tot = cells.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("s").alias("nr"),
-        F.countDistinct("p").alias("nc"),
-    )
-
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    joined = (
-        cells.join(rows_m, "s")
-        .join(cols_m, "p")
-        .crossJoin(F.broadcast(tot))
-    )
-    dev = d(F.col("n")) * d(F.col("o")) - d(F.col("r")) * d(F.col("c"))
-    term = (dev * dev).cast("double") / (
-        d(F.col("n")) * d(F.col("r")) * d(F.col("c"))
-    ).cast("double")
-    agg = joined.groupBy("n", "nr", "nc").agg(
-        dsum_scaled(term, CHI2_SCALE).alias("t_s")
-    )
+    agg = _chi2_status_priority(spark, sf_dir)
     chi2 = F.col("t_s").cast("double") / F.lit(float(CHI2_SCALE))
     n_d = F.col("n").cast("double")
     m = F.least(F.col("nr"), F.col("nc")) - F.lit(1)
@@ -1656,13 +1631,10 @@ def agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, per, "x", ["o_custkey"]
     ).select("x", F.col("rn").alias("i"))
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
-        F.sum(d(F.col("i")) * F.col("x")).alias("six"),
+        F.sum(d38("i") * F.col("x")).alias("six"),
     )
     # top-decile revenue needs the rank cutoff; compute in a second pass
     tot = ranked.agg(F.count(F.lit(1)).alias("n2"))
@@ -1674,8 +1646,8 @@ def agg_gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("x").alias("top_x"))
     )
-    g_num = F.lit(2) * d(F.col("six")) - d(F.col("n") + 1) * F.col("sx")
-    g_den = d(F.col("n")) * F.col("sx")
+    g_num = F.lit(2) * d38("six") - d38(F.col("n") + 1) * F.col("sx")
+    g_den = d38("n") * F.col("sx")
     return (
         agg.crossJoin(F.broadcast(topd))
         .filter(F.col("sx") > 0)
@@ -2633,9 +2605,7 @@ def agg_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus work is the monthly rollup; the R/S machinery runs
     on sizes × months ≈ 240 rows."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("mon")
-    ).agg(dsum_scaled("o_totalprice").alias("y"))
+    m = monthly_revenue(orders, rev="y")
     w_rn = Window.orderBy("mon")
     w_all = Window.partitionBy()
     t = m.select(
@@ -3175,13 +3145,10 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("n_above") + F.col("n_le")).over(w_all).alias("n"),
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     def cell_term(o, c):
-        dev = dd(F.col("n")) * dd(o) - dd(F.col("r")) * dd(c)
+        dev = d38("n") * d38(o) - d38("r") * d38(c)
         return (dev * dev).cast("double") / (
-            dd(F.col("n")) * dd(F.col("r")) * dd(c)
+            d38("n") * d38("r") * d38(c)
         ).cast("double")
 
     from ..functions.numerics import _nearest_long_away as _nla
@@ -3274,9 +3241,7 @@ def agg_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after runs on the ~month-count frame (two tiny
     windows)."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("mon")
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders)
     w_all = Window.partitionBy()
     vd = F.col("rev_s").cast("decimal(38,0)")
     t = m.select(
@@ -3383,16 +3348,13 @@ def agg_delta_method_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_order, "o_orderkey"
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     per_g = j.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(dd(F.col("x"))).alias("sx"),
-        F.sum(dd(F.col("y"))).alias("sy"),
-        F.sum(dd(F.col("x")) * F.col("x")).alias("qx"),
-        F.sum(dd(F.col("y")) * F.col("y")).alias("qy"),
-        F.sum(dd(F.col("x")) * F.col("y")).alias("sxy"),
+        F.sum(d38("x")).alias("sx"),
+        F.sum(d38("y")).alias("sy"),
+        F.sum(d38("x") * F.col("x")).alias("qx"),
+        F.sum(d38("y") * F.col("y")).alias("qy"),
+        F.sum(d38("x") * F.col("y")).alias("sxy"),
     )
     n_d = F.col("n").cast("double")
     sx_d = F.col("sx").cast("double")
@@ -3523,9 +3485,6 @@ def agg_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_all = Window.partitionBy()
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     t = g.select(
         "priority",
         "s",
@@ -3541,11 +3500,11 @@ def agg_cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w_all)
         .alias("sns2"),
     )
-    a = dd(F.col("nn")) * dd(F.col("ssr")) - dd(F.col("rr")) * dd(
+    a = d38("nn") * d38("ssr") - d38("rr") * d38(
         F.col("ssn")
     )
-    b = dd(F.col("rr")) * (dd(F.col("nn")) - dd(F.col("rr")))
-    c = dd(F.col("nn")) * dd(F.col("sns2")) - dd(F.col("ssn")) * dd(
+    b = d38("rr") * (d38("nn") - d38("rr"))
+    c = d38("nn") * d38("sns2") - d38("ssn") * d38(
         F.col("ssn")
     )
     z = a.cast("double") / F.sqrt(
@@ -4342,17 +4301,14 @@ def agg_herfindahl_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_y = Window.partitionBy("year")
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     t = cells.select(
         "year",
         "rev_s",
-        F.sum(dd(F.col("rev_s"))).over(w_y).alias("s_tot"),
+        F.sum(d38("rev_s")).over(w_y).alias("s_tot"),
     )
     agg = t.groupBy("year").agg(
         F.count(F.lit(1)).cast("int").alias("n_brands"),
-        F.sum(dd(F.col("rev_s")) * F.col("rev_s")).alias("q"),
+        F.sum(d38("rev_s") * F.col("rev_s")).alias("q"),
         F.max("s_tot").alias("s_tot"),
         F.max("rev_s").cast("long").alias("max_rev"),
     )
@@ -4448,18 +4404,15 @@ def agg_decision_stump_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("o").over(w_s).alias("tot_s"),
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     per_p = t.groupBy("p").agg(
         F.sum("o").cast("long").alias("l"),
-        F.sum(dd(F.col("o")) * F.col("o")).alias("ql"),
+        F.sum(d38("o") * F.col("o")).alias("ql"),
         F.sum(F.col("tot_s")).cast("long").alias("nn"),
         F.sum(
-            dd(F.col("tot_s") - F.col("o"))
+            d38(F.col("tot_s") - F.col("o"))
             * (F.col("tot_s") - F.col("o"))
         ).alias("qr"),
-        F.sum(dd(F.col("tot_s")) * F.col("tot_s")).alias("qn"),
+        F.sum(d38("tot_s") * F.col("tot_s")).alias("qn"),
     )
     l_d = F.col("l").cast("double")
     n_d = F.col("nn").cast("double")
@@ -4873,14 +4826,11 @@ def agg_ipw_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("treated"), wt).otherwise(wc).alias("w"),
     )
 
-    def dd(col):
-        return col.cast("decimal(38,0)")
-
     agg = weighted.groupBy("treated").agg(
         F.sum("n").cast("long").alias("n_arm"),
         F.sum("sv").cast("long").alias("sv_arm"),
-        F.sum(dd(F.col("w")) * F.col("sv")).alias("wy"),
-        F.sum(dd(F.col("w")) * F.col("n")).alias("wn"),
+        F.sum(d38("w") * F.col("sv")).alias("wy"),
+        F.sum(d38("w") * F.col("n")).alias("wn"),
     )
     w_all = Window.partitionBy()
     naive = F.col("sv_arm").cast("double") / (

@@ -9,49 +9,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, davg_sql, dround, dsum, dsum_scaled
+from ..functions.numerics import (
+    d38,
+    davg,
+    davg_sql,
+    dround,
+    dsum,
+    dsum_scaled,
+)
+from ..functions.timeparts import monthly_revenue
 from ..io import read_table
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 
 
-
-def timeseries_classical_decompose(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Classical additive seasonal decomposition (the moving-average
-    method of Macaulay 1931, as in Hyndman & Athanasopoulos FPP §3.4)
-    of the monthly per-priority revenue series — the reference's domain
-    is exactly this kind of monthly macro series (`dashboard_nfp.py`
-    computes MoM changes and yearly rollups; decomposition is the next
-    question an analyst asks of it):
-
-    - **trend** = centered 2x12-term moving average (index-based frames;
-      the fixture series is gapless monthly, and the contract — mirrored
-      in the oracle — is ROWS-based) computed EXACTLY in scaled-int64:
-      ``t24 = 2*sum(rev_s)[-5..+5] + rev_s[-6] + rev_s[+6]`` (units =
-      24 x 1e4-scaled dollars), defined only where the full 13-month
-      window exists.
-    - **seasonal** = per month-of-year mean of the exact detrended
-      integers, rounded half-away in PURE INTEGER space
-      (``(2|25*sum_d| + 6*cnt) DIV (12*cnt)`` micro-dollars — no FP in
-      the mean), then centered so the 12 indices sum to ~0 with an
-      exact-integer numerator ``n*s_micro - tot_micro``.
-    - **residual** = detrended minus the (rounded) seasonal index —
-      every emitted double is a single division off exact int64s, so
-      the DuckDB twin hash-matches bit for bit.
-
-    Scale: one shuffle for the monthly rollup (map-side partial over
-    orders), one window exchange per series key, a ~60-row broadcast
-    join for the seasonal indices. Series count scales out; series
-    length stays bounded (monthly grain)."""
-    orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-
+def _trend_seasonal(m: DataFrame) -> DataFrame:
+    """The exact classical-decomposition components of the per-priority
+    series ``m`` ``(priority, mon, rev_s)``, shared by the decompose and
+    the strength operators: ``(priority, moy, mon, rev_s, t24, d24,
+    s_micro, n_moy, tot_micro)`` with ``t24`` the centered 2x12 moving
+    average times 24 (scaled-int64; only where the full 13-month window
+    exists), ``d24 = 24·rev_s − t24`` and ``s_micro`` the month-of-year
+    mean of ``d24`` in micro-dollars, centered by ``n_moy·s_micro −
+    tot_micro``. One window exchange per series key, then a ~60-row
+    broadcast join for the seasonal indices."""
     wo = Window.partitionBy("priority").orderBy("mon")
     w11 = wo.rowsBetween(-5, 5)
     w = m.select(
@@ -98,12 +80,46 @@ def timeseries_classical_decompose(
         F.count(F.lit(1)).over(wp).alias("n_moy"),
         F.sum("s_micro").over(wp).alias("tot_micro"),
     )
+    return t.join(F.broadcast(sc), ["priority", "moy"])
+
+
+def timeseries_classical_decompose(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Classical additive seasonal decomposition (the moving-average
+    method of Macaulay 1931, as in Hyndman & Athanasopoulos FPP §3.4)
+    of the monthly per-priority revenue series — the reference's domain
+    is exactly this kind of monthly macro series (`dashboard_nfp.py`
+    computes MoM changes and yearly rollups; decomposition is the next
+    question an analyst asks of it):
+
+    - **trend** = centered 2x12-term moving average (index-based frames;
+      the fixture series is gapless monthly, and the contract — mirrored
+      in the oracle — is ROWS-based) computed EXACTLY in scaled-int64:
+      ``t24 = 2*sum(rev_s)[-5..+5] + rev_s[-6] + rev_s[+6]`` (units =
+      24 x 1e4-scaled dollars), defined only where the full 13-month
+      window exists.
+    - **seasonal** = per month-of-year mean of the exact detrended
+      integers, rounded half-away in PURE INTEGER space
+      (``(2|25*sum_d| + 6*cnt) DIV (12*cnt)`` micro-dollars — no FP in
+      the mean), then centered so the 12 indices sum to ~0 with an
+      exact-integer numerator ``n*s_micro - tot_micro``.
+    - **residual** = detrended minus the (rounded) seasonal index —
+      every emitted double is a single division off exact int64s, so
+      the DuckDB twin hash-matches bit for bit.
+
+    Scale: one shuffle for the monthly rollup (map-side partial over
+    orders), one window exchange per series key, a ~60-row broadcast
+    join for the seasonal indices. Series count scales out; series
+    length stays bounded (monthly grain)."""
+    orders = read_table(spark, sf_dir, "orders")
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    joined = _trend_seasonal(m)
     seasonal = (
         (F.col("n_moy") * F.col("s_micro") - F.col("tot_micro"))
         .cast("double")
         / (F.col("n_moy") * 1_000_000.0)
     )
-    joined = t.join(F.broadcast(sc), ["priority", "moy"])
     return joined.select(
         "priority",
         "mon",
@@ -159,6 +175,49 @@ ORACLE["timeseries_classical_decompose"] = (
 )
 
 
+def _acf_sums(m: DataFrame, max_lag: int) -> tuple[DataFrame, DataFrame]:
+    """The exact correlogram sums of the per-priority series ``m``
+    ``(priority, mon, rev_s)``, shared by the ACF, Ljung–Box, AR(2) and
+    PACF operators: with z_t = n·y_t − Σy (the mean-centering cleared
+    of its /n), ``num`` ``(priority, lag_k, num)`` holds Σ z_t·z_{t−k}
+    for k = 1..max_lag and ``den`` ``(priority, n, den)`` holds Σ z_t²,
+    so r_k = num/den with the n² cancelled — both exact integer sums.
+    The lag pairing is a per-key range self-join with fan-out ≤
+    max_lag rows per month."""
+    wp = Window.partitionBy("priority")
+    wo = Window.partitionBy("priority").orderBy("mon")
+    # z = n*y - S is exact in int64 (|z| < 2n·max(rev_s)); the decimal
+    # cast widens BEFORE the products, whose magnitudes (~1e31 at 100x)
+    # need 128-bit — decimal(18,0)^2 -> decimal(37,0), sums at 38. rn
+    # comes first: its (priority, mon) sort then also serves the
+    # per-priority count/sum window (the reverse order sorts twice)
+    z = m.select(
+        "priority",
+        F.row_number().over(wo).alias("rn"),
+        F.count(F.lit(1)).over(wp).alias("n"),
+        (F.count(F.lit(1)).over(wp) * F.col("rev_s") - F.sum("rev_s").over(wp))
+        .cast("decimal(18,0)")
+        .alias("z"),
+    )
+    den = z.groupBy("priority", "n").agg(
+        F.sum(F.col("z") * F.col("z")).alias("den")
+    )
+    a, b = z.alias("a"), z.alias("b")
+    num = (
+        a.join(
+            b,
+            (F.col("a.priority") == F.col("b.priority"))
+            & (F.col("a.rn") - F.col("b.rn")).between(1, max_lag),
+        )
+        .groupBy(
+            F.col("a.priority").alias("priority"),
+            (F.col("a.rn") - F.col("b.rn")).cast("int").alias("lag_k"),
+        )
+        .agg(F.sum(F.col("a.z") * F.col("b.z")).alias("num"))
+    )
+    return num, den
+
+
 ACF_MAX_LAG = 12
 
 
@@ -190,39 +249,8 @@ def timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full correlogram; no other analogue.
     """
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-    wp = Window.partitionBy("priority")
-    wo = Window.partitionBy("priority").orderBy("mon")
-    # z = n*y - S is exact in int64 (|z| < 2n·max(rev_s)); the decimal
-    # cast widens BEFORE the products, whose magnitudes (~1e31 at 100x)
-    # need 128-bit — decimal(18,0)^2 -> decimal(37,0), sums at 38
-    z = m.select(
-        "priority",
-        F.count(F.lit(1)).over(wp).alias("n"),
-        F.row_number().over(wo).alias("rn"),
-        (F.count(F.lit(1)).over(wp) * F.col("rev_s") - F.sum("rev_s").over(wp))
-        .cast("decimal(18,0)")
-        .alias("z"),
-    )
-    den = z.groupBy("priority", "n").agg(
-        F.sum(F.col("z") * F.col("z")).alias("den")
-    )
-    a, b = z.alias("a"), z.alias("b")
-    num = (
-        a.join(
-            b,
-            (F.col("a.priority") == F.col("b.priority"))
-            & (F.col("a.rn") - F.col("b.rn")).between(1, ACF_MAX_LAG),
-        )
-        .groupBy(
-            F.col("a.priority").alias("priority"),
-            (F.col("a.rn") - F.col("b.rn")).cast("int").alias("lag_k"),
-        )
-        .agg(F.sum(F.col("a.z") * F.col("b.z")).alias("num"))
-    )
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    num, den = _acf_sums(m, ACF_MAX_LAG)
     return (
         num.join(den, "priority")
         .select(
@@ -289,10 +317,7 @@ def timeseries_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     series key; frame length is constant so the median costs O(w log w)
     per row on a bounded w=5. Series count scales out."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w5 = (
         Window.partitionBy("priority")
         .orderBy("mon")
@@ -364,10 +389,7 @@ def timeseries_seasonal_naive_mase(
     two window functions and one aggregate on the ~80-row-per-key
     series. Series count scales out (CLAUDE.md rule 5)."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     wo = Window.partitionBy("priority").orderBy("mon")
     wd = Window.partitionBy("priority").orderBy(F.col("mon").desc())
     lagged = m.select(
@@ -484,9 +506,7 @@ def timeseries_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     after runs on the ~n_months-row series (x4 periods after the basis
     explode). The scalar (S, n) rides a broadcast cross join."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("mon")
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders)
     w = Window.partitionBy().orderBy("mon")
     idx = m.select(F.row_number().over(w).alias("t"), "rev_s")
     tot = idx.agg(
@@ -613,10 +633,7 @@ def timeseries_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized rollup, then two stacked windows ordered by
     the original month key over ~80-row series, one aggregate."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w = Window.partitionBy("priority").orderBy("mon")
     signs = (
         m.select(
@@ -741,39 +758,8 @@ def timeseries_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to `timeseries_acf` — corpus-sized work is the
     monthly rollup; the lag self-join fans out ≤ h rows per month."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-    wp = Window.partitionBy("priority")
-    wo = Window.partitionBy("priority").orderBy("mon")
-    z = m.select(
-        "priority",
-        F.count(F.lit(1)).over(wp).alias("n"),
-        F.row_number().over(wo).alias("rn"),
-        (
-            F.count(F.lit(1)).over(wp) * F.col("rev_s")
-            - F.sum("rev_s").over(wp)
-        )
-        .cast("decimal(18,0)")
-        .alias("z"),
-    )
-    den = z.groupBy("priority", "n").agg(
-        F.sum(F.col("z") * F.col("z")).alias("den")
-    )
-    a, b = z.alias("a"), z.alias("b")
-    num = (
-        a.join(
-            b,
-            (F.col("a.priority") == F.col("b.priority"))
-            & (F.col("a.rn") - F.col("b.rn")).between(1, ACF_MAX_LAG),
-        )
-        .groupBy(
-            F.col("a.priority").alias("priority"),
-            (F.col("a.rn") - F.col("b.rn")).cast("int").alias("lag_k"),
-        )
-        .agg(F.sum(F.col("a.z") * F.col("b.z")).alias("num"))
-    )
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    num, den = _acf_sums(m, ACF_MAX_LAG)
     rho = F.col("num").cast("double") / F.col("den").cast("double")
     term = rho * rho / (F.col("n") - F.col("lag_k")).cast("double")
     per = (
@@ -856,13 +842,9 @@ def timeseries_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus-sized work is the monthly rollup; the lag pairing is
     a ≤13-fanout range self-join on the ~80-row spine."""
     orders = read_table(spark, sf_dir, "orders")
-    m = (
-        orders.filter(F.col("o_orderpriority").isin(CCF_X, CCF_Y))
-        .groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_trunc("month", "o_orderdate").alias("mon"),
-        )
-        .agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(
+        orders.filter(F.col("o_orderpriority").isin(CCF_X, CCF_Y)),
+        F.col("o_orderpriority").alias("priority"),
     )
     xs = m.filter(F.col("priority") == CCF_X).select(
         "mon", F.col("rev_s").alias("x")
@@ -976,36 +958,8 @@ def timeseries_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the ACF — the corpus-sized work is the monthly
     rollup; the fit runs on one row per priority."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-    wp = Window.partitionBy("priority")
-    wo = Window.partitionBy("priority").orderBy("mon")
-    z = m.select(
-        "priority",
-        F.count(F.lit(1)).over(wp).alias("n"),
-        F.row_number().over(wo).alias("rn"),
-        (F.count(F.lit(1)).over(wp) * F.col("rev_s") - F.sum("rev_s").over(wp))
-        .cast("decimal(18,0)")
-        .alias("z"),
-    )
-    den = z.groupBy("priority", "n").agg(
-        F.sum(F.col("z") * F.col("z")).alias("den")
-    )
-    a, b = z.alias("a"), z.alias("b")
-    num = (
-        a.join(
-            b,
-            (F.col("a.priority") == F.col("b.priority"))
-            & (F.col("a.rn") - F.col("b.rn")).between(1, 2),
-        )
-        .groupBy(
-            F.col("a.priority").alias("priority"),
-            (F.col("a.rn") - F.col("b.rn")).cast("int").alias("lag_k"),
-        )
-        .agg(F.sum(F.col("a.z") * F.col("b.z")).alias("num"))
-    )
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    num, den = _acf_sums(m, 2)
     rq = (
         num.join(den, "priority")
         .select(
@@ -1031,10 +985,8 @@ def timeseries_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact degeneracy filter: 1 - r1^2 == 0 at 12-dp quantization
     # (1e24 and r1q^2 exceed int64 — the comparison runs in decimal ≡
     # HUGEINT)
-    def _d38(c):
-        return c.cast("decimal(38,0)")
 
-    den_q = _d38(F.lit(10**12)) * F.lit(10**12) - _d38(
+    den_q = d38(F.lit(10**12)) * F.lit(10**12) - d38(
         F.col("r1q")
     ) * F.col("r1q")
     phi1 = r1 * (F.lit(1.0) - r2) / (F.lit(1.0) - r1 * r1)
@@ -1124,35 +1076,8 @@ def timeseries_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ACF shape — monthly rollup, ≤3-fanout lag self-join,
     k-row algebra."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-    wp = Window.partitionBy("priority")
-    wo = Window.partitionBy("priority").orderBy("mon")
-    z = m.select(
-        "priority",
-        F.row_number().over(wo).alias("rn"),
-        (F.count(F.lit(1)).over(wp) * F.col("rev_s") - F.sum("rev_s").over(wp))
-        .cast("decimal(18,0)")
-        .alias("z"),
-    )
-    den = z.groupBy("priority").agg(
-        F.sum(F.col("z") * F.col("z")).alias("den")
-    )
-    a_, b_ = z.alias("a"), z.alias("b")
-    num = (
-        a_.join(
-            b_,
-            (F.col("a.priority") == F.col("b.priority"))
-            & (F.col("a.rn") - F.col("b.rn")).between(1, 3),
-        )
-        .groupBy(
-            F.col("a.priority").alias("priority"),
-            (F.col("a.rn") - F.col("b.rn")).cast("int").alias("lag_k"),
-        )
-        .agg(F.sum(F.col("a.z") * F.col("b.z")).alias("num"))
-    )
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    num, den = _acf_sums(m, 3)
     rq = num.join(den, "priority").select(
         "priority",
         "lag_k",
@@ -1171,25 +1096,22 @@ def timeseries_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("lag_k") == 3, F.col("rq"))).alias("c"),
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     s = F.lit(PACF_SCALE)
     a, b, c = F.col("a"), F.col("b"), F.col("c")
-    den2 = d(s) * s - d(a) * a
-    num2 = d(b) * s - d(a) * a
+    den2 = d38(s) * s - d38(a) * a
+    num2 = d38(b) * s - d38(a) * a
     den3 = (
-        d(s) * s * s
-        - F.lit(2) * d(a) * a * s
-        + F.lit(2) * d(a) * a * b
-        - d(s) * b * b
+        d38(s) * s * s
+        - F.lit(2) * d38(a) * a * s
+        + F.lit(2) * d38(a) * a * b
+        - d38(s) * b * b
     )
     num3 = (
-        d(s) * s * c
-        - F.lit(2) * d(s) * a * b
-        + d(a) * b * b
-        + d(a) * a * a
-        - d(a) * a * c
+        d38(s) * s * c
+        - F.lit(2) * d38(s) * a * b
+        + d38(a) * b * b
+        + d38(a) * a * a
+        - d38(a) * a * c
     )
     lags = F.array(
         F.struct(
@@ -1297,9 +1219,7 @@ def timeseries_ar1_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     over orders); the lag pairing and the five sums run on the
     ~80-row monthly frame. Same int64 envelope as `timeseries_acf`."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("mon")
-    ).agg(dsum_scaled("o_totalprice").alias("y_s"))
+    m = monthly_revenue(orders, rev="y_s")
     w_lag = Window.orderBy("mon")
     pairs = m.select(
         F.col("y_s").alias("y"), F.lag("y_s").over(w_lag).alias("x")
@@ -1401,54 +1321,8 @@ def timeseries_seasonal_strength(
     join); the variance rollup adds one map-side-combinable
     aggregate over the ~80-row overlap frame."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
-    wo = Window.partitionBy("priority").orderBy("mon")
-    w11 = wo.rowsBetween(-5, 5)
-    w = m.select(
-        "priority",
-        "mon",
-        "rev_s",
-        F.count(F.lit(1)).over(w11).alias("cnt11"),
-        F.sum("rev_s").over(w11).alias("sum11"),
-        F.lag("rev_s", 6).over(wo).alias("lag6"),
-        F.lead("rev_s", 6).over(wo).alias("lead6"),
-    )
-    t = (
-        w.filter(
-            (F.col("cnt11") == 11)
-            & F.col("lag6").isNotNull()
-            & F.col("lead6").isNotNull()
-        )
-        .select(
-            "priority",
-            "mon",
-            "rev_s",
-            F.month("mon").alias("moy"),
-            (2 * F.col("sum11") + F.col("lag6") + F.col("lead6")).alias("t24"),
-        )
-        .withColumn("d24", 24 * F.col("rev_s") - F.col("t24"))
-    )
-    s = t.groupBy("priority", "moy").agg(
-        F.sum("d24").alias("sum_d"), F.count(F.lit(1)).alias("cnt")
-    )
-    mag = F.expr("(2 * abs(25 * sum_d) + 6 * cnt) DIV (12 * cnt)")
-    sm = s.select(
-        "priority",
-        "moy",
-        F.when(F.col("sum_d") >= 0, mag).otherwise(-mag).alias("s_micro"),
-    )
-    wp = Window.partitionBy("priority")
-    sc = sm.select(
-        "priority",
-        "moy",
-        "s_micro",
-        F.count(F.lit(1)).over(wp).alias("n_moy"),
-        F.sum("s_micro").over(wp).alias("tot_micro"),
-    )
-    joined = t.join(F.broadcast(sc), ["priority", "moy"])
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
+    joined = _trend_seasonal(m)
     s_cent = F.col("n_moy") * F.col("s_micro") - F.col("tot_micro")
     u = joined.select(
         "priority",
@@ -1570,10 +1444,7 @@ def timeseries_kpss_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange+sort per priority serves both the totals and the running
     partial sum."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w_n = Window.partitionBy("priority")
     t = m.select(
         "priority",
@@ -1666,10 +1537,9 @@ def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numerics import _nearest_long_away
 
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("y"))
+    m = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority"), rev="y"
+    )
     w_ord = Window.partitionBy("priority").orderBy("mon")
     w_p = Window.partitionBy("priority")
     t1 = m.select(
@@ -1679,9 +1549,6 @@ def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_ord).cast("long").alias("t"),
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     t2 = t1.select(
         "priority",
         "mon",
@@ -1690,11 +1557,11 @@ def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(w_p).alias("n"),
         F.sum("t").over(w_p).alias("st"),
         F.sum(F.col("t") * F.col("t")).over(w_p).alias("st2"),
-        F.sum(dd(F.col("y"))).over(w_p).alias("sy"),
-        F.sum(dd(F.col("t")) * F.col("y")).over(w_p).alias("sty"),
+        F.sum(d38("y")).over(w_p).alias("sy"),
+        F.sum(d38("t") * F.col("y")).over(w_p).alias("sty"),
     )
-    num = dd(F.col("n")) * F.col("sty") - dd(F.col("st")) * F.col("sy")
-    den = dd(F.col("n")) * F.col("st2") - dd(F.col("st")) * F.col("st")
+    num = d38("n") * F.col("sty") - d38("st") * F.col("sy")
+    den = d38("n") * F.col("st2") - d38("st") * F.col("st")
     b_s = num.cast("double") / den.cast("double")
     a_s = (
         F.col("sy").cast("double") - b_s * F.col("st").cast("double")
@@ -1712,9 +1579,9 @@ def timeseries_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("e") - F.col("e_prev")
     agg = t4.groupBy("priority").agg(
         F.max("n").cast("long").alias("n_months"),
-        F.sum(dd(F.col("e")) * F.col("e")).alias("q_e"),
+        F.sum(d38("e") * F.col("e")).alias("q_e"),
         F.sum(
-            F.when(F.col("e_prev").isNotNull(), dd(d) * d).otherwise(
+            F.when(F.col("e_prev").isNotNull(), d38(d) * d).otherwise(
                 F.lit(0).cast("decimal(38,0)")
             )
         ).alias("q_d"),
@@ -1800,14 +1667,9 @@ def timeseries_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized monthly rollup, then all pair work on the
     ~month-count frame."""
     orders = read_table(spark, sf_dir, "orders")
-    m = (
-        orders.groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_trunc("month", "o_orderdate").alias("mon"),
-        )
-        .agg(dsum_scaled("o_totalprice").alias("y"))
-        .localCheckpoint(eager=True)
-    )
+    m = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority"), rev="y"
+    ).localCheckpoint(eager=True)
     a = m.select(
         "priority", F.col("mon").alias("mi"), F.col("y").alias("yi")
     )
@@ -1923,10 +1785,7 @@ def timeseries_seasonal_subseries(
     Scale: one corpus-sized monthly rollup; one 12·k-row rollup with
     a window for the grand mean."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     g = m.groupBy(
         "priority", F.month("mon").cast("int").alias("monum")
     ).agg(
@@ -2015,13 +1874,8 @@ def timeseries_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.numerics import _nearest_long_away
 
     orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(
-        F.sum(_nearest_long_away(F.col("o_totalprice") * 10000))
-        .cast("long")
-        .alias("rev_s")
+    monthly = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority")
     )
     # the full-series mean comes from a whole-partition frame over the
     # SAME (priority, mon-ordered) window exchange the cumulative

@@ -9,8 +9,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, davg_sql, dround, dsum, dsum_scaled
-from ..functions.timeparts import epoch_micros_from_ntz, month_start, year_of
+from ..functions.numerics import (
+    d38,
+    davg,
+    davg_sql,
+    dround,
+    dsum,
+    dsum_scaled,
+)
+from ..functions.timeparts import monthly_revenue, year_of
 from ..io import read_table
 
 QUERIES: dict = {}
@@ -44,10 +51,7 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     one sort (CLAUDE.md rule 5: later frames order by the original key,
     never a derived alias)."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w = Window.partitionBy("priority").orderBy("mon")
     flagged = m.select(
         "priority",
@@ -191,10 +195,7 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     per priority serves all five frame aggregates (same WindowSpec →
     single WindowExec)."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w6 = (
         Window.partitionBy("priority")
         .orderBy("mon")
@@ -360,10 +361,9 @@ def window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one monthly rollup + one per-priority ordered window + one
     rollup to 5 rows."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev"))
+    m = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority"), rev="rev"
+    )
     w = (
         Window.partitionBy("priority")
         .orderBy("mon")
@@ -444,10 +444,9 @@ def window_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one monthly rollup (map-side partial over orders), then
     two stacked windows sharing ONE sort per priority partition."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("y_s"))
+    m = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority"), rev="y_s"
+    )
     w_rn = Window.partitionBy("priority").orderBy("mon")
     t = m.select(
         "priority",
@@ -538,10 +537,7 @@ def window_ytd_vs_prior_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority for the cumsum, then a dim-sized self-join (month-count
     rows) — broadcast-able."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w_cum = (
         Window.partitionBy("priority", F.year("mon"))
         .orderBy("mon")
@@ -643,25 +639,21 @@ def window_peer_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized monthly rollup; one window exchange by
     month over the k-per-month frame."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("x"))
+    m = monthly_revenue(
+        orders, F.col("o_orderpriority").alias("priority"), rev="x"
+    )
     w_m = Window.partitionBy("mon")
-
-    def dd(c):
-        return c.cast("decimal(38,0)")
 
     t = m.select(
         "priority",
         "mon",
         "x",
         F.count(F.lit(1)).over(w_m).alias("n"),
-        F.sum(dd(F.col("x"))).over(w_m).alias("s"),
-        F.sum(dd(F.col("x")) * F.col("x")).over(w_m).alias("q"),
+        F.sum(d38("x")).over(w_m).alias("s"),
+        F.sum(d38("x") * F.col("x")).over(w_m).alias("q"),
     )
-    m2 = dd(F.col("n")) * F.col("q") - F.col("s") * F.col("s")
-    dev = dd(F.col("n")) * F.col("x") - F.col("s")
+    m2 = d38("n") * F.col("q") - F.col("s") * F.col("s")
+    dev = d38("n") * F.col("x") - F.col("s")
     z = dev.cast("double") / F.sqrt(
         F.col("n").cast("double") * m2.cast("double")
     )
@@ -722,10 +714,7 @@ def window_rolling_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized monthly rollup; ONE window exchange per
     priority serves the lag, both frame sums and the count."""
     orders = read_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(dsum_scaled("o_totalprice").alias("rev_s"))
+    m = monthly_revenue(orders, F.col("o_orderpriority").alias("priority"))
     w_ord = Window.partitionBy("priority").orderBy("mon")
     d = m.select(
         "priority",
@@ -738,18 +727,15 @@ def window_rolling_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-(RSR_W - 1), 0)
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     framed = d.select(
         "priority",
         "mon",
         "diff_s",
         F.count(F.lit(1)).over(w6).alias("w"),
-        F.sum(dd(F.col("diff_s"))).over(w6).alias("s1"),
-        F.sum(dd(F.col("diff_s")) * F.col("diff_s")).over(w6).alias("s2"),
+        F.sum(d38("diff_s")).over(w6).alias("s1"),
+        F.sum(d38("diff_s") * F.col("diff_s")).over(w6).alias("s2"),
     )
-    m2 = dd(F.col("w")) * F.col("s2") - F.col("s1") * F.col("s1")
+    m2 = d38("w") * F.col("s2") - F.col("s1") * F.col("s1")
     w_d = F.col("w").cast("double")
     mean_d = F.col("s1").cast("double") / w_d
     sd_d = F.sqrt(m2.cast("double")) / w_d
@@ -834,16 +820,15 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("day")
         .rowsBetween(-29, Window.currentRow)
     )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     rolled = daily.select(
         "priority",
         "day",
         F.count(F.lit(1)).over(w).cast("long").alias("nw"),
         F.sum("x").over(w).cast("long").alias("sx"),
-        F.sum(dec(F.col("y"))).over(w).alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).over(w).alias("sxy"),
+        F.sum(d38("y")).over(w).alias("sy"),
+        F.sum(d38(F.col("x") * F.col("y"))).over(w).alias("sxy"),
         F.sum(F.col("x") * F.col("x")).over(w).cast("long").alias("sx2"),
-        F.sum(dec(dec(F.col("y")) * F.col("y"))).over(w).alias("sy2"),
+        F.sum(d38(d38("y") * F.col("y"))).over(w).alias("sy2"),
     ).filter(F.col("nw") == 30)
     nd = F.col("nw").cast("double")
     cov = nd * F.col("sxy").cast("double") - F.col("sx").cast(

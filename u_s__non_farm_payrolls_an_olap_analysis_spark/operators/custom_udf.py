@@ -17,8 +17,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numerics import descale
 from ..functions.plan_cache import plan_memo
-from ..functions.timeparts import year_of
+from ..functions.timeparts import monthly_partials, year_of
 from ..io import read_table
 
 
@@ -445,6 +446,41 @@ def udtf_table_arg_year_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["udtf_table_arg_year_profile"] = udtf_table_arg_year_profile
 
 
+# --- Per-priority monthly recurrences via grouped-map ------------------------
+
+# leading columns of every per-series recurrence output
+_SERIES = "priority string, mon timestamp, revenue double, "
+
+
+def _per_priority_map(
+    spark: SparkSession,
+    sf_dir: str,
+    fn,
+    schema: str,
+    order: tuple[str, ...] = ("priority", "mon"),
+) -> DataFrame:
+    """Monthly per-priority revenue ``(priority, mon, revenue)`` at 4 dp,
+    then ``groupBy("priority").applyInPandas(fn, schema)``: one shuffle
+    on the series key, each series a single Arrow batch — series count
+    scales out, series length stays bounded (monthly grain). The
+    sequential recurrences below have no exact closed window form, so
+    they run per series in pandas; their DuckDB twins replay the same
+    recurrence as recursive CTEs."""
+    monthly = monthly_partials(
+        read_table(spark, sf_dir, "orders"),
+        F.col("o_orderpriority").alias("priority"),
+    ).select(
+        "priority",
+        F.col("ms").alias("mon"),
+        descale("total_scaled").alias("revenue"),
+    )
+    return (
+        monthly.groupBy("priority")
+        .applyInPandas(fn, schema=schema)
+        .orderBy(*order)
+    )
+
+
 # --- EWMA smoothing via grouped-map recurrence -------------------------------
 
 EWMA_ALPHA = 0.5  # exact binary fraction: every blend step is one IEEE
@@ -482,24 +518,8 @@ def timeseries_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``α = 0.5`` every blend is exact-IEEE-reproducible in both engines,
     so the result is fully hash-checked (no tolerance).
     """
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = (
-        orders.groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.date_trunc("month", "o_orderdate").alias("mon"),
-        )
-        .agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    )
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _ewma_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "ewma double",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark, sf_dir, _ewma_group, _SERIES + "ewma double"
     )
 
 
@@ -572,21 +592,11 @@ def timeseries_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE replay of the SAME 2-state recurrence hash-matches
     with zero tolerance.
     """
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _holt_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "level double, trend double, forecast double",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _holt_group,
+        _SERIES + "level double, trend double, forecast double",
     )
 
 
@@ -680,21 +690,11 @@ def timeseries_cusum_changepoints(
     shuffle on the series key, series count scales out, monthly length
     bounded. Every step is add/subtract/max on identical doubles, so
     the DuckDB recursive-CTE twin hash-matches with zero tolerance."""
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _cusum_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "cusum_pos double, cusum_neg double, alarm int",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _cusum_group,
+        _SERIES + "cusum_pos double, cusum_neg double, alarm int",
     )
 
 
@@ -800,21 +800,12 @@ def timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     interesting new device here — recursive-CTE state need not be
     scalar.
     """
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _hw_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "level double, trend double, seasonal double, forecast double",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _hw_group,
+        _SERIES + "level double, trend double, seasonal double, "
+        "forecast double",
     )
 
 
@@ -934,21 +925,12 @@ def timeseries_ses_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the series key; series count scales out,
     grid size is a constant factor on bounded series length."""
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _ses_grid_group,
-            schema="priority string, alpha double, rmse double, "
-            "is_best int",
-        )
-        .orderBy("priority", "alpha")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _ses_grid_group,
+        "priority string, alpha double, rmse double, is_best int",
+        order=("priority", "alpha"),
     )
 
 
@@ -1068,22 +1050,12 @@ def timeseries_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope: the recurrence family the reference's monthly
     NFP series analysis motivates (`dashboard_nfp.py` trend charts);
     no reference code is reused."""
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _holt_damped_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "level double, trend double, forecast_1 double, "
-            "forecast_h double",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _holt_damped_group,
+        _SERIES + "level double, trend double, forecast_1 double, "
+        "forecast_h double",
     )
 
 
@@ -1187,22 +1159,12 @@ def timeseries_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on the series key (grouped-map recurrence
     posture); series count scales out, monthly length bounded."""
-    from ..functions.numerics import dsum
-
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.date_trunc("month", "o_orderdate").alias("mon"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("revenue"))
-    return (
-        monthly.groupBy("priority")
-        .applyInPandas(
-            _theta_group,
-            schema="priority string, mon timestamp, revenue double, "
-            "linear_fit double, theta2 double, ses_level double, "
-            "forecast_next double",
-        )
-        .orderBy("priority", "mon")
+    return _per_priority_map(
+        spark,
+        sf_dir,
+        _theta_group,
+        _SERIES + "linear_fit double, theta2 double, ses_level double, "
+        "forecast_next double",
     )
 
 

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.iterate import fixpoint
-from ..functions.numerics import dround
+from ..functions.numerics import d38, dround
 from ..functions.pairgen import symmetrize
 from ..io import read_table
 
@@ -878,17 +878,14 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dk = deg.select(F.col("node").alias("w"), F.col("d").alias("k"))
     edges = directed.join(F.broadcast(dj), "u").join(F.broadcast(dk), "w")
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     mom = edges.agg(
         F.count(F.lit(1)).alias("m"),
         F.sum("j").alias("s1"),
-        F.sum(dd(F.col("j")) * F.col("j")).alias("s2"),
-        F.sum(dd(F.col("j")) * F.col("k")).alias("s3"),
+        F.sum(d38("j") * F.col("j")).alias("s2"),
+        F.sum(d38("j") * F.col("k")).alias("s3"),
     )
-    num = dd(F.col("m")) * F.col("s3") - dd(F.col("s1")) * F.col("s1")
-    den = dd(F.col("m")) * F.col("s2") - dd(F.col("s1")) * F.col("s1")
+    num = d38("m") * F.col("s3") - d38("s1") * F.col("s1")
+    den = d38("m") * F.col("s2") - d38("s1") * F.col("s1")
     return (
         mom.filter(den != 0)
         .select(
@@ -1379,9 +1376,6 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("q"),
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
     from ..io import table_bytes
 
     # node-sized score frames broadcast into the edge probe under the
@@ -1414,14 +1408,14 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         a = l1_quantize(
             e_for_a.join(side(h), "cust")
             .groupBy("part")
-            .agg(F.sum(dd(F.col("q"))).alias("raw")),
+            .agg(F.sum(d38("q")).alias("raw")),
             "part",
             HITS_SCALE,
         )
         h = l1_quantize(
             e_for_h.join(side(a), "part")
             .groupBy("cust")
-            .agg(F.sum(dd(F.col("q"))).alias("raw")),
+            .agg(F.sum(d38("q")).alias("raw")),
             "cust",
             HITS_SCALE,
         )

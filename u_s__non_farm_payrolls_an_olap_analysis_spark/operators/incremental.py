@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.derived import derived_path
-from ..functions.numerics import SCALE, dsum_scaled, dsum_sql
-from ..functions.timeparts import month_start
+from ..functions.numerics import SCALE, dsum_sql
+from ..functions.timeparts import monthly_partials
 from ..io import read_table
 
 # Everything strictly BEFORE the cutoff is "already in the MV"; the delta
@@ -45,15 +45,6 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("total_scaled", T.LongType()),
     ]
 )
-
-
-def _monthly_partials(orders: DataFrame) -> DataFrame:
-    """Per-month additive partials: (count, scaled-int64 sum). NOT
-    descaled — partials must merge exactly as longs."""
-    return orders.groupBy(month_start("o_orderdate").alias("ms")).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        dsum_scaled("o_totalprice").alias("total_scaled"),
-    )
 
 
 def _mv_state(
@@ -71,7 +62,7 @@ def _mv_state(
         base = read_table(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") < F.lit(cutoff).cast("timestamp")
         )
-        _monthly_partials(base).write.mode("overwrite").parquet(d)
+        monthly_partials(base).write.mode("overwrite").parquet(d)
     return spark.read.schema(_STATE_SCHEMA).parquet(d)
 
 
@@ -87,7 +78,7 @@ def mv_incremental_refresh(
     base/delta split falls, the defining property of a correct
     incremental fold)."""
     state = _mv_state(spark, sf_dir, cutoff)
-    delta = _monthly_partials(
+    delta = monthly_partials(
         read_table(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") >= F.lit(cutoff).cast("timestamp")
         )

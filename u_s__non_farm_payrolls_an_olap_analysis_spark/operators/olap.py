@@ -30,13 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, dround, dsum
+from ..functions.numerics import davg, descale, dround, dsum
 from ..functions.timeparts import (
     decade_label,
     diff,
     month_name,
     month_of,
-    month_start,
+    monthly_partials,
     months_between_int,
     pct_change,
     quarter_of,
@@ -58,13 +58,10 @@ def orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def monthly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's fact series: one row per month (mirrors the reference's
     ``nonfarm_payrolls`` grain). Map-side-combinable hash aggregate."""
-    return (
-        orders(spark, sf_dir)
-        .groupBy(month_start("o_orderdate").alias("month_start"))
-        .agg(
-            F.round(dsum("o_totalprice"), 4).alias("total"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
+    return monthly_partials(orders(spark, sf_dir)).select(
+        F.col("ms").alias("month_start"),
+        descale("total_scaled").alias("total"),
+        "n_orders",
     )
 
 

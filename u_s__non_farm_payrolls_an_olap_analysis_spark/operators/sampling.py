@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numerics import dsum, dsum_sql, dround
+from ..functions.numerics import d38, dsum, dsum_sql, dround
 from ..io import read_table
 
 
@@ -547,13 +547,8 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(y * y).alias("s2"),
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     n = F.col("n")
-    m2 = (d(n) * d(F.col("s2")) - d(F.col("s1")) * d(F.col("s1"))).alias(
-        "m2e"
-    )
+    m2 = (d38(n) * d38("s2") - d38("s1") * d38("s1")).alias("m2e")
     sd = F.sqrt(F.col("m2e").cast("double")) / n.cast("double")
     weighted = per.select("stratum", "n", "s1", m2).select(
         "stratum",

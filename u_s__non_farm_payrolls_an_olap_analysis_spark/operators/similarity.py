@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.iterate import fixpoint
-from ..functions.numerics import dround, dsum_scaled
+from ..functions.numerics import d38, dround, dsum_scaled
 from ..functions.vectors import cosine, cosine_sql, dot
 from ..io import read_table
 
@@ -2135,11 +2135,8 @@ def sim_eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("c"), F.lit(0)).alias("c"),
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
     pe_sum = marg.agg(
-        F.sum(d(F.col("r")) * F.col("c")).alias("rc")
+        F.sum(d38("r") * F.col("c")).alias("rc")
     )
     base = pred.agg(
         F.count(F.lit(1)).alias("n"),
@@ -2149,18 +2146,18 @@ def sim_eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = base.crossJoin(F.broadcast(pe_sum))
     n, tp, rc = F.col("n"), F.col("tp"), F.col("rc")
-    return j.filter((d(n) * n - rc) != 0).select(
+    return j.filter((d38(n) * n - rc) != 0).select(
         n.cast("long").alias("n_vectors"),
         tp.alias("n_agree"),
         dround(tp.cast("double") / n.cast("double"), 6).alias(
             "observed_agreement"
         ),
         dround(
-            rc.cast("double") / (d(n) * n).cast("double"), 6
+            rc.cast("double") / (d38(n) * n).cast("double"), 6
         ).alias("expected_agreement"),
         dround(
-            (d(n) * tp - rc).cast("double")
-            / (d(n) * n - rc).cast("double"),
+            (d38(n) * tp - rc).cast("double")
+            / (d38(n) * n - rc).cast("double"),
             6,
         ).alias("cohens_kappa"),
     )

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import dround
+from ..functions.numerics import d38, dround
 from ..io import read_table
 
 # Stopword set for quality/langid heuristics: function words present in the
@@ -1742,12 +1742,9 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot_b))
     )
 
-    def d(c):
-        return c.cast("decimal(38,0)")
-
-    lift = (d(F.col("c_xy")) * d(F.col("n_uni")) * F.col("n_uni")).cast(
+    lift = (d38("c_xy") * d38("n_uni") * F.col("n_uni")).cast(
         "double"
-    ) / (d(F.col("n_big")) * d(F.col("c_x")) * F.col("c_y")).cast("double")
+    ) / (d38("n_big") * d38("c_x") * F.col("c_y")).cast("double")
     key = dround(F.lit(COLL_KEY_SCALE) * lift, 0).cast("long")
     return (
         j.withColumn("k", key)
@@ -2392,11 +2389,8 @@ def text_js_divergence_by_source(
         (F.sum("c").over(w_all) - F.sum("c").over(w_src)).alias("bb"),
     )
 
-    def dd(c):
-        return c.cast("decimal(38,0)")
-
-    aB = dd(F.col("c")) * F.col("bb")
-    bA = dd(F.col("b")) * F.col("aa")
+    aB = d38("c") * F.col("bb")
+    bA = d38("b") * F.col("aa")
     den = (aB + bA).cast("double")
     term_p = F.col("c").cast("double") * F.log(
         F.lit(2.0) * aB.cast("double") / den

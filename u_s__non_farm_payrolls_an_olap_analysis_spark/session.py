@@ -24,6 +24,20 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Driver heap default: half of physical RAM (``total_bytes``, read
+    from the host when omitted), whole GiB, at least 1g and at most 16g.
+
+    16g suits a 128 GiB host (the 100x bench's concurrent parquet
+    writers OOMed an 8g heap), but on a 15 GiB host a 16g heap lets the
+    JVM outgrow the machine and the OOM killer takes it (observed at
+    15.9 GB RSS on the 30x documents fixture). ``SPARK_DRIVER_MEM``
+    overrides this default."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, total_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "nfp-olap-spark",
     master: str | None = None,
@@ -73,11 +87,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- local-mode hygiene ---
         .config("spark.ui.enabled", "false")
-        # 16g default (was 8g): the host carries 128 GiB and the 100x
-        # bench section's concurrent parquet writers OOMed the 8g heap
-        # in round 13 — 8g forced artificial frugality everywhere
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
         )
         # Route the JVM's default unified-logging warnings (e.g.
         # [gc,alloc] GCLocker retries under allocation pressure) to
