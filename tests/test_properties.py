@@ -1906,10 +1906,11 @@ def test_monthly_partials_split_sums_and_descales(spark, rows, keyed):
         .agg(
             F.sum("n_orders").alias("n_orders"),
             F.sum("total_scaled").alias("total_scaled"),
+            F.sum("n_priced").alias("n_priced"),
         )
     )
     assert table(folded) == table(whole)
-    assert sum(n for *_, n, _t in table(whole)) == len(rows)
+    assert sum(n for *_, n, _t, _p in table(whole)) == len(rows)
 
     direct = orders.groupBy(
         *keys, month_start("o_orderdate").alias("ms")

@@ -335,30 +335,37 @@ def test_convergence_loop_has_one_owner():
 
 
 def _monthly_orders_groupbys(src: str, rel: str) -> list[str]:
-    """``groupBy`` calls keyed by the month of ``o_orderdate`` —
-    ``month_start(...)`` or ``date_trunc("month", ...)`` over that column
-    anywhere in a grouping argument. Each hit names its innermost
-    enclosing function."""
+    """``groupBy`` calls keyed by the month of ``o_orderdate``: a
+    ``month_start(...)`` or ``date_trunc("month", ...)`` of that column,
+    or a month index — its year AND its month (``year``/``year_of`` with
+    ``month``/``month_of``) — anywhere in the grouping arguments. Each
+    hit names its innermost enclosing function."""
     import ast
 
-    def month_of_orderdate(arg) -> bool:
-        for n in ast.walk(arg):
-            if not isinstance(n, ast.Call):
+    def orderdate_parts(args) -> set[str]:
+        parts = set()
+        for n in (n for a in args for n in ast.walk(a)):
+            if not isinstance(n, ast.Call) or not any(
+                isinstance(c, ast.Constant) and c.value == "o_orderdate"
+                for c in ast.walk(n)
+            ):
                 continue
             f = n.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
-            month = name == "month_start" or (
+            if name == "month_start" or (
                 name == "date_trunc"
                 and n.args
                 and isinstance(n.args[0], ast.Constant)
                 and str(n.args[0].value).lower() == "month"
-            )
-            if month and any(
-                isinstance(c, ast.Constant) and c.value == "o_orderdate"
-                for c in ast.walk(n)
             ):
-                return True
-        return False
+                parts.add("month_start")
+            elif name in ("year", "year_of", "month", "month_of"):
+                parts.add(name.removesuffix("_of"))
+        return parts
+
+    def monthly(args) -> bool:
+        parts = orderdate_parts(args)
+        return "month_start" in parts or {"year", "month"} <= parts
 
     out = []
 
@@ -371,7 +378,7 @@ def _monthly_orders_groupbys(src: str, rel: str) -> list[str]:
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
                 and child.func.attr == "groupBy"
-                and any(month_of_orderdate(a) for a in child.args)
+                and monthly(child.args)
             ):
                 out.append(f"{rel}:{child.lineno}: {fn}")
             visit(child, fn)
@@ -383,9 +390,11 @@ def _monthly_orders_groupbys(src: str, rel: str) -> list[str]:
 def test_monthly_series_has_one_owner():
     """The monthly series over ``orders`` is built in ONE place,
     ``functions/timeparts.monthly_partials``: no other engine module may
-    group by the month of ``o_orderdate``. Self-tested against a
-    synthetic repro of both spellings (and of two that must pass: a
-    month of another column, a day of ``o_orderdate``)."""
+    group by the month of ``o_orderdate``, whether as a month start or as
+    a year-and-month index. Self-tested against a synthetic repro of
+    every spelling (and of those that must pass: a month of another
+    column, a day of ``o_orderdate``, a month of the year alone, a year
+    with another column's month)."""
     import pathlib
 
     repro = (
@@ -397,8 +406,20 @@ def test_monthly_series_has_one_owner():
         "    )\n"
         "    c = ev.groupBy(F.date_trunc('month', 'ts'))\n"
         "    d = orders.groupBy(F.date_trunc('day', 'o_orderdate'))\n"
+        "    e = orders.groupBy(\n"
+        "        'o_orderpriority',\n"
+        "        (F.year('o_orderdate') * 12 + F.month('o_orderdate')).alias('x'),\n"
+        "    )\n"
+        "    g = orders.groupBy(year_of('o_orderdate'), month_of('o_orderdate'))\n"
+        "    h = orders.groupBy(F.month('o_orderdate'))\n"
+        "    i = orders.groupBy(F.year('o_orderdate'), F.month('l_shipdate'))\n"
     )
-    assert _monthly_orders_groupbys(repro, "x.py") == ["x.py:2: f", "x.py:3: f"]
+    assert _monthly_orders_groupbys(repro, "x.py") == [
+        "x.py:2: f",
+        "x.py:3: f",
+        "x.py:9: f",
+        "x.py:13: f",
+    ]
     pkg = pathlib.Path(registry.__file__).resolve().parent
     problems = []
     for path in sorted(pkg.rglob("*.py")):

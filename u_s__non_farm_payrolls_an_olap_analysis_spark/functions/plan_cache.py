@@ -20,8 +20,11 @@ shuffle stages. ``tests/test_plan_memo.py`` pins the rule and its
 invalidation after a write (``io.clear_table_cache`` drops every entry).
 
 Scope: ONLY operators that are pure functions of (spark, sf_dir) with no
-side effects and no conf-sensitivity at analysis time. Operators that
-materialize state on first build (layout writes, streaming drains) or
+side effects and no conf-sensitivity at analysis time. A lazy
+``.cache()`` counts as pure: it runs nothing at build time, and the
+first action fills it (``olap.monthly_cube``, the cached month partials
+every monthly-series panel reads). Operators that materialize state on
+first build (layout writes, streaming drains, eager checkpoints) or
 exist to demonstrate conf-dependent planning (AQE skew) must NOT be
 memoized. Physical planning still happens lazily per DataFrame, so a
 memoized plan executes under whatever physical conf is current when its
@@ -65,5 +68,12 @@ def plan_memo(
 
 
 def clear_plan_memo() -> None:
-    """Drop every memoized plan (tests / cache-layout changes)."""
+    """Drop every memoized plan (tests / cache-layout changes) and
+    unpersist the cached ones. Spark's cache matches by plan, and a
+    re-read of a rewritten table path is the same plan: a cached entry
+    left behind would serve the rebuilt plan the pre-write data.
+    Entries of a stopped session are only dropped."""
+    for df in _MEMO.values():
+        if df.is_cached and df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist()
     _MEMO.clear()

@@ -54,18 +54,21 @@ def month_start(col: Column | str) -> Column:
 def monthly_partials(orders: DataFrame, *keys: Column | str) -> DataFrame:
     """The engine's monthly series: ``orders`` grouped by ``(*keys,
     month_start(o_orderdate))`` into the additive partials ``(*keys, ms,
-    n_orders, total_scaled)`` — order count and scaled-int64
-    ``o_totalprice`` sum (``numerics.dsum_scaled``), NOT descaled. Both
-    partials are exact longs, so partials of any split of the rows sum
-    to the partials of the whole (the monoid an incremental fold relies
-    on); ``numerics.descale`` turns ``total_scaled`` into the same 4-dp
-    dollars as ``F.round(dsum(o_totalprice), 4)``. The only month
-    group-by of ``orders`` in the engine
+    n_orders, total_scaled, n_priced)`` — order count, scaled-int64
+    ``o_totalprice`` sum (``numerics.dsum_scaled``, NOT descaled) and
+    non-null price count. All three partials are exact longs, so
+    partials of any split of the rows sum to the partials of the whole
+    (the monoid an incremental fold relies on); ``numerics.descale``
+    turns ``total_scaled`` into the same 4-dp dollars as
+    ``F.round(dsum(o_totalprice), 4)``, and Σ``total_scaled`` / SCALE /
+    Σ``n_priced`` is ``davg(o_totalprice)`` over any coarser grain. The
+    only month group-by of ``orders`` in the engine
     (``tests/test_registry_contract.py::test_monthly_series_has_one_owner``);
     Catalyst prunes whichever partial a caller does not read."""
     return orders.groupBy(*keys, month_start("o_orderdate").alias("ms")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         dsum_scaled("o_totalprice").alias("total_scaled"),
+        F.count("o_totalprice").alias("n_priced"),
     )
 
 

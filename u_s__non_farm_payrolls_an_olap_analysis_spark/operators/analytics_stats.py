@@ -114,6 +114,18 @@ ORACLE["norm_winsorize_clip"] = (
 )
 
 
+def _month_indexed(spark: SparkSession, sf_dir: str, key) -> DataFrame:
+    """Per-``key`` monthly revenue ``(key, x, y)`` of the two trend
+    estimators: x the month index ``year*12 + month - 1`` centered on
+    Jan 1995, y the scaled-int64 total (``monthly_partials``)."""
+    m = monthly_partials(read_table(spark, sf_dir, "orders"), key)
+    return m.select(
+        m.columns[0],
+        (F.year("ms") * 12 + F.month("ms") - 1 - F.lit(1995 * 12)).alias("x"),
+        F.col("total_scaled").alias("y"),
+    )
+
+
 def agg_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment OLS trend of monthly order totals — the reference
     dashboard's "is employment trending up?" question as a closed-form
@@ -135,17 +147,7 @@ def agg_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles total: the month rollup, then that tiny per-segment
     aggregate. The intercept is reported AT THE BASE MONTH
     (x = 0 ⇔ Jan 1995)."""
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = (
-        orders.groupBy(
-            "o_orderpriority",
-            (
-                F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
-                - F.lit(1995 * 12)
-            ).alias("x"),
-        )
-        .agg(dsum_scaled("o_totalprice").alias("y"))
-    )
+    monthly = _month_indexed(spark, sf_dir, "o_orderpriority")
     dec = "decimal(38,0)"
     n = F.count(F.lit(1)).cast(dec)
     sx = F.sum(F.col("x").cast(dec))
@@ -510,14 +512,9 @@ def agg_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines — and the median is the same linear
     interpolation `agg_percentiles` already proves equivalent
     (Spark ``percentile`` ≡ DuckDB ``quantile_cont``)."""
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        (
-            F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
-            - F.lit(1995 * 12)
-        ).alias("x"),
-    ).agg(dsum_scaled("o_totalprice").alias("y"))
+    monthly = _month_indexed(
+        spark, sf_dir, F.col("o_orderpriority").alias("priority")
+    )
     a, b = monthly.alias("a"), monthly.alias("b")
     slopes = a.join(
         b,

@@ -84,7 +84,7 @@ def mv_incremental_refresh(
         )
     )
     merged = (
-        state.unionByName(delta)
+        state.unionByName(delta.select(*state.columns))
         .groupBy("ms")
         .agg(
             F.sum("n_orders").alias("n_orders"),

@@ -11,6 +11,14 @@ plan — scan → hash aggregate → window — that Catalyst plans and AQE re-p
 Scale notes (100 TB posture):
 - The monthly aggregate is a single map-side-combinable hash aggregate on a
   derived month key; the raw fact table is never collected.
+- Every panel over the monthly series reads ONE cached cube per table
+  version (:func:`monthly_cube`): the month partials, coalesced to one
+  partition AFTER the aggregate's exchange. The fact scan and the partial
+  aggregate stay parallel at any scale; only the final merge of ≤ months
+  rows runs as one task, and its ``SinglePartition`` output satisfies
+  every later group-by, window and sort, so a panel over a filled cube
+  plans no exchange and runs one job. The cube holds one row per month
+  (a timestamp and three longs), whatever the fact table's size.
 - Window specs over the *aggregated* series (≤ thousands of rows at any
   scale: months, not orders) are cheap regardless of fact-table size; the
   single-partition ``Window.orderBy`` only ever sees post-aggregation rows.
@@ -26,11 +34,11 @@ preceded by a total ORDER BY with a unique tiebreaker.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg, descale, dround, dsum
+from ..functions.numerics import SCALE, descale, dround, dsum
 from ..functions.timeparts import (
     decade_label,
     diff,
@@ -55,10 +63,36 @@ def orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_table(spark, sf_dir, "orders")
 
 
+@plan_memo
+def monthly_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The month partials of ``orders`` (``monthly_partials``: ``ms,
+    n_orders, total_scaled, n_priced``) as one cached single-partition
+    frame, the hot working set every monthly-series panel reads. The
+    first action fills it (one parallel scan + partial aggregate, then a
+    one-task final merge); later panels scan ≤ months cached rows with
+    no exchange. It lives in the plan memo, so every path that drops
+    the memo (a write + ``io.clear_table_cache``, ``io.cache_tables``,
+    ``clear_plan_memo``) also unpersists it."""
+    return monthly_partials(orders(spark, sf_dir)).coalesce(1).cache()
+
+
+def _cube_total() -> Column:
+    """4-dp dollars of the cube rows in a group: exactly
+    ``F.round(dsum(o_totalprice), 4)`` over the same orders."""
+    return descale(F.sum("total_scaled"))
+
+
+def _cube_avg() -> Column:
+    """4-dp average price of the cube rows in a group: exactly
+    ``F.round(davg(o_totalprice), 4)`` over the same orders (the scaled
+    sum over the non-null price count, so a null price cannot shift it)."""
+    return F.round(F.sum("total_scaled") / float(SCALE) / F.sum("n_priced"), 4)
+
+
 def monthly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's fact series: one row per month (mirrors the reference's
-    ``nonfarm_payrolls`` grain). Map-side-combinable hash aggregate."""
-    return monthly_partials(orders(spark, sf_dir)).select(
+    ``nonfarm_payrolls`` grain), read off :func:`monthly_cube`."""
+    return monthly_cube(spark, sf_dir).select(
         F.col("ms").alias("month_start"),
         descale("total_scaled").alias("total"),
         "n_orders",
@@ -118,9 +152,11 @@ def scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cache_result(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 — memoized intermediate (``@st.cache_data``,
-    ``dashboard_nfp.py:50``) → ``df.cache()`` on the monthly series, reused
-    by a downstream aggregate."""
-    m = monthly_series(spark, sf_dir).cache()
+    ``dashboard_nfp.py:50``) → the monthly series off the cached
+    :func:`monthly_cube`, reused by a downstream aggregate. The cube is
+    the one cache entry per table version (a ``.cache()`` here would add
+    another per call that nothing unpersists)."""
+    m = monthly_series(spark, sf_dir)
     return m.groupBy(year_of("month_start").alias("year")).agg(
         F.count(F.lit(1)).alias("n_months"),
         F.round(dsum("total"), 4).alias("total"),
@@ -236,34 +272,33 @@ def filter_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @plan_memo
 def slice_avg_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 — yearly average (``dashboard_nfp.py:85-97``). Single hash
-    aggregate with map-side partials; the flagship query."""
+    """A1 — yearly average (``dashboard_nfp.py:85-97``). The flagship
+    query: a roll-up of the monthly cube."""
     return (
-        orders(spark, sf_dir)
-        .groupBy(year_of("o_orderdate").alias("year"))
-        .agg(F.round(davg("o_totalprice"), 4).alias("avg_totalprice"))
+        monthly_cube(spark, sf_dir)
+        .groupBy(year_of("ms").alias("year"))
+        .agg(_cube_avg().alias("avg_totalprice"))
     )
 
 
 def rollup_quarter_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 — quarterly roll-up (``dashboard_nfp.py:246-247``)."""
+    """A2 — quarterly roll-up (``dashboard_nfp.py:246-247``).
+    Read off the monthly cube."""
     return (
-        orders(spark, sf_dir)
-        .groupBy(
-            year_of("o_orderdate").alias("year"),
-            quarter_of("o_orderdate").alias("quarter"),
-        )
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_cube(spark, sf_dir)
+        .groupBy(year_of("ms").alias("year"), quarter_of("ms").alias("quarter"))
+        .agg(_cube_total().alias("total"))
     )
 
 
 @plan_memo
 def rollup_year_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 — yearly roll-up (``dashboard_nfp.py:250``)."""
+    """A3 — yearly roll-up (``dashboard_nfp.py:250``).
+    Read off the monthly cube."""
     return (
-        orders(spark, sf_dir)
-        .groupBy(year_of("o_orderdate").alias("year"))
-        .agg(F.round(dsum("o_totalprice"), 4).alias("total"))
+        monthly_cube(spark, sf_dir)
+        .groupBy(year_of("ms").alias("year"))
+        .agg(_cube_total().alias("total"))
     )
 
 
@@ -271,11 +306,12 @@ def rollup_year_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_decade_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 — decade bucket then average (``dashboard_nfp.py:300-301``),
     total-function lambda semantics (SURVEY §2.5 divergence resolution):
-    every year gets a bucket. Builtin expression, not the reference's UDF."""
+    every year gets a bucket. Builtin expression, not the reference's UDF.
+    A roll-up of the monthly cube."""
     return (
-        orders(spark, sf_dir)
-        .groupBy(decade_label(year_of("o_orderdate")).alias("decade"))
-        .agg(F.round(davg("o_totalprice"), 4).alias("avg_totalprice"))
+        monthly_cube(spark, sf_dir)
+        .groupBy(decade_label(year_of("ms")).alias("decade"))
+        .agg(_cube_avg().alias("avg_totalprice"))
     )
 
 
@@ -310,7 +346,9 @@ def scalar_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 def argmax_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — the rows achieving the extremes (pandas ``idxmax``/``idxmin``,
     ``dashboard_nfp.py:340,399``) as order-by-limit-1 with a deterministic
-    month tiebreak, cross-joined into one row."""
+    month tiebreak, cross-joined into one row. A month whose prices are
+    all null has a null total; both sorts put it last, as DuckDB's
+    default ``NULLS LAST`` does (Spark's ascending default is first)."""
     m = monthly_series(spark, sf_dir)
     peak = (
         m.orderBy(F.col("total").desc(), "month_start")
@@ -318,7 +356,7 @@ def argmax_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("month_start").alias("peak_month"))
     )
     trough = (
-        m.orderBy(F.col("total").asc(), "month_start")
+        m.orderBy(F.col("total").asc_nulls_last(), "month_start")
         .limit(1)
         .select(F.col("month_start").alias("trough_month"))
     )

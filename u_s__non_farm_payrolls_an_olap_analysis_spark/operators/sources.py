@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.derived import scratch_path
-from ..functions.numerics import dround
-from ..functions.timeparts import pct_change
+from ..functions.numerics import descale, dround
+from ..functions.timeparts import month_of, monthly_partials, pct_change, year_of
 from ..io import read_table, upsert_by_key
 
 N_MONTHS = 72  # 6 years of monthly observations
@@ -375,15 +375,14 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned DataFrame is the ROUND-TRIPPED table — written through
     the sink, read back from the committed parts — so the oracle check
     proves write-path fidelity end to end, not just the aggregate."""
-    from ..functions.numerics import dsum
     from ..sources.table_sink import JsonDirSinkDataSource, committed_files
 
     spark.dataSource.register(JsonDirSinkDataSource)  # idempotent
-    orders = read_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.year("o_orderdate").cast("int").alias("year"),
-        F.month("o_orderdate").cast("int").alias("month"),
-    ).agg(F.round(dsum("o_totalprice"), 4).alias("total_payroll"))
+    monthly = monthly_partials(read_table(spark, sf_dir, "orders")).select(
+        year_of("ms").alias("year"),
+        month_of("ms").alias("month"),
+        descale("total_scaled").alias("total_payroll"),
+    )
     path = _sink_dir()
     (
         monthly.write.format("json_dir_sink")
