@@ -143,6 +143,14 @@ def main() -> None:
         if jk:
             lines.append(f"- Joins: {jk}")
         lines.append(f"- Exchanges (shuffles): {exchange_count(df)}")
+        if "InMemoryRelation" in formatted_plan(df):
+            lines.append(
+                "- Reads a cached relation (e.g. `olap.monthly_cube`): counted on the "
+                "plan built before the cache fills, so the count includes the cached "
+                "plan's own exchanges (run once per fill, not per read) and those AQE "
+                "drops once the filled cache reports its partitioning; a filled cube "
+                "serves its panels with none"
+            )
         if "TakeOrderedAndProject" in formatted_plan(df):
             lines.append("- Top-k: TakeOrderedAndProject (no global sort)")
         lines.append("")

@@ -5,7 +5,8 @@ month partials of ``orders`` that every monthly-series panel reads.
   ``write_upsert_parquet`` → ``clear_table_cache``), every cube-served key
   equals its DuckDB oracle over the table just written — duplicate update
   keys, keys moving across months, inserts, empty batches and null prices.
-- Cost: a panel over a filled cube runs one Spark job.
+- Cost: a panel over a filled cube runs one Spark job, and a memo-hit
+  cycle of the dashboard's panels compiles no generated code.
 - Storage: write cycles do not accumulate cached RDDs.
 - Fresh-plan timing: ``clear_plan_memo`` drops the cube's data, so a
   rebuilt panel scans ``orders`` again (bench.py's fresh-exec runs).
@@ -182,6 +183,41 @@ def test_cube_storage_does_not_grow_over_writes(spark, tmp_path):
 
     first = cycle()
     assert [cycle() for _ in range(3)] == [first] * 3
+
+
+def _dashboard():
+    """perfbench's ``olap_dashboard`` panels and input tables."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "run.py")
+    spec = importlib.util.spec_from_file_location("perfbench_run", path)
+    run = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run)
+    return run.OLAP_KEYS, run.OLAP_TABLES
+
+
+def test_dashboard_memo_hits_compile_no_code(spark):
+    """A memo hit re-runs generated code and must not recompile it. The
+    dashboard's panels touch ~86 generated classes per cycle; the cube's
+    roll-up panels pushed that past Spark's default 100-entry codegen
+    cache (4 LRU segments), and every cycle then recompiled ~25 classes,
+    a ms-scale compile each, also in panels that never read the cube."""
+    keys, tables = _dashboard()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    cached = io.cache_tables(spark, SF, tables=tables)
+    try:
+        for _ in range(2):  # the first cycle compiles, the second settles
+            for key in keys:
+                _q(key)(spark, SF).collect()
+        c0 = compiles.getCount()
+        for key in keys:
+            _q(key)(spark, SF).collect()
+        assert compiles.getCount() == c0
+    finally:
+        io.clear_table_cache()
+        for df in cached.values():
+            df.unpersist()
 
 
 def test_clear_plan_memo_drops_the_cube(spark):

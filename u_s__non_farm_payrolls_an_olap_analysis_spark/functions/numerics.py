@@ -91,7 +91,14 @@ def d38(col: Column | str) -> Column:
 def davg(col: Column | str, scale: int = SCALE) -> Column:
     """Order-independent AVG: scaled-int sum / non-null count."""
     c = _c(col)
-    return F.sum(_nearest_long_away(c * scale)) / float(scale) / F.count(c)
+    return davg_partials(F.sum(_nearest_long_away(c * scale)), F.count(c), scale)
+
+
+def davg_partials(total_scaled: Column, n_nonnull: Column, scale: int = SCALE) -> Column:
+    """``davg`` off its additive partials: a scaled-int sum over its
+    non-null count, so averages of any coarser grain roll up exactly
+    and a null value cannot shift the denominator."""
+    return total_scaled / float(scale) / n_nonnull
 
 
 def dround(col: Column | str, digits: int) -> Column:

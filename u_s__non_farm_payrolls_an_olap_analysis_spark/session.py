@@ -74,6 +74,12 @@ def get_spark(
         # redundant pre-window per-partition sort (round 13: CEP@100x
         # sort elided, ~1.6s -> ~1.4s best case).
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        # Compiled-codegen cache (default 100 entries, split over 4 LRU
+        # segments). The 15 dashboard panels' memo hits alone touch ~86
+        # generated classes per cycle; at 100 a segment overflows and
+        # every cycle recompiled ~25 of them (Janino, ms each), slowing
+        # panels that share no code with the ones that pushed it over.
+        .config("spark.sql.codegen.cache.maxEntries", "500")
         # Split parquet files finely enough to use all local cores at this
         # fixture scale (single ~10 MB files). On a real cluster with
         # 100 TB inputs the 128 MB default is right — this is the knob the
