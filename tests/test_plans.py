@@ -498,19 +498,17 @@ def test_vocab_coverage_broadcasts_vocab(spark):
 
 
 def test_size_gated_broadcasts_degrade_past_the_gate(spark, monkeypatch):
-    """The q8 / decontam broadcast hints are SIZE-GATED (io.table_bytes):
+    """The q8 / decontam broadcast hints are SIZE-GATED (io.broadcastable):
     past the gate the hint must vanish and the plan degrade to a shuffle
     join — an unconditional broadcast of a fact-derived relation would
     OOM at 100 TB. Pin the degrade path by faking a huge base table."""
+    from u_s__non_farm_payrolls_an_olap_analysis_spark import io
     from u_s__non_farm_payrolls_an_olap_analysis_spark.operators import (
         llm_prep,
         tpch_analytics,
     )
 
-    monkeypatch.setattr(
-        tpch_analytics, "table_bytes", lambda sf_dir, name: 1 << 40
-    )
-    monkeypatch.setattr(llm_prep, "table_bytes", lambda sf_dir, name: 1 << 40)
+    monkeypatch.setattr(io, "table_bytes", lambda sf_dir, name: 1 << 40)
 
     q8 = tpch_analytics.tpch_q8_market_share(spark, SF)
     # the fact-fact join must NOT be hint-broadcast: a shuffle-side join

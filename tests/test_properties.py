@@ -1917,3 +1917,50 @@ def test_monthly_partials_split_sums_and_descales(spark, rows, keyed):
     ).agg(F.round(dsum("o_totalprice"), 4).alias("total"))
     descaled = whole.select(*names, "ms", descale("total_scaled").alias("total"))
     assert table(descaled) == table(direct)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.integers(0, 20),
+            st.sampled_from([0.0, 0.25, 0.5, 1.0]),
+        ),
+        max_size=16,
+        unique_by=lambda t: (t[0], t[1]),
+    ),
+    k=st.integers(1, 6),
+)
+@example(rows=[], k=3)
+@_settings
+def test_top_k_is_a_per_query_sorted_head(spark, rows, k):
+    """``similarity._top_k`` keeps each query's first ``k`` rows by
+    (score desc, neighbor_id), numbered 1..k in an int column: the same
+    rows as a pandas per-query sort + ``head(k)``, on frames with tied
+    scores, queries with fewer than ``k`` rows and no rows at all."""
+    import pandas as pd
+
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.similarity import (
+        _top_k,
+    )
+
+    schema = "query_id long, neighbor_id long, score double"
+    got = _top_k(
+        spark.createDataFrame(rows, schema), k, F.col("score").desc(), "neighbor_id"
+    )
+    assert dict(got.dtypes)["rank"] == "int"
+
+    pdf = pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
+    head = (
+        pdf.sort_values(
+            ["query_id", "score", "neighbor_id"], ascending=[True, False, True]
+        )
+        .groupby("query_id")
+        .head(k)
+    )
+    head = head.assign(rank=head.groupby("query_id").cumcount() + 1)
+    want = sorted(
+        (int(q), int(n), float(s), int(r))
+        for q, n, s, r in head.itertuples(index=False, name=None)
+    )
+    assert sorted(tuple(r) for r in got.collect()) == want

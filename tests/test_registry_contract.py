@@ -429,6 +429,92 @@ def test_monthly_series_has_one_owner():
     assert not problems, "\n".join(problems)
 
 
+def _retrieval_copies(src: str, rel: str) -> list[str]:
+    """Hand-rolled copies of the retrieval stream's two shared steps: a
+    query/corpus split (a ``vec_id`` compared ``<`` with ``N_QUERIES``,
+    the query-block cut every split makes) and an int8 quantizer (a
+    division by 127). Each hit names its kind and innermost enclosing
+    function."""
+    import ast
+
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Compare)
+                and any(
+                    isinstance(c, ast.Constant) and c.value == "vec_id"
+                    for c in ast.walk(child.left)
+                )
+                and any(
+                    isinstance(op, ast.Lt)
+                    and isinstance(c, ast.Name)
+                    and c.id == "N_QUERIES"
+                    for op, c in zip(child.ops, child.comparators)
+                )
+            ):
+                out.append(f"{rel}:{child.lineno}: {fn} split")
+            if (
+                isinstance(child, ast.BinOp)
+                and isinstance(child.op, ast.Div)
+                and isinstance(child.right, ast.Constant)
+                and child.right.value == 127
+            ):
+                out.append(f"{rel}:{child.lineno}: {fn} int8")
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return out
+
+
+def test_retrieval_stream_has_one_owner():
+    """The retrieval stream's split and quantizer are each written once,
+    in ``operators/similarity.py``: only ``_sides`` cuts the query block
+    off the embeddings (``vec_id < N_QUERIES``) and only ``_int8_scaled``
+    divides by 127. Self-tested against a synthetic repro (and spellings
+    that must pass: the corpus-side cut, a codebook range, another
+    column's compare, a division by another constant)."""
+    import pathlib
+
+    repro = (
+        "def f(emb, codes):\n"
+        "    q = emb.filter(F.col('vec_id') < N_QUERIES)\n"
+        "    c = emb.filter(F.col('vec_id') >= N_QUERIES)\n"
+        "    cb = emb.filter(F.col('vec_id') < N_QUERIES + IVF_K)\n"
+        "    d = emb.filter(F.col('doc_id') < N_QUERIES)\n"
+        "    s = F.array_max(x) / 127.0\n"
+        "    t = F.array_max(x) / 255\n"
+        "def g(codes):\n"
+        "    return codes.filter(F.col('vec_id') < N_QUERIES), F.lit(9) / 127\n"
+    )
+    assert _retrieval_copies(repro, "x.py") == [
+        "x.py:2: f split",
+        "x.py:6: f int8",
+        "x.py:9: g split",
+        "x.py:9: g int8",
+    ]
+    owners = {
+        "operators/similarity.py:_sides split",
+        "operators/similarity.py:_int8_scaled int8",
+    }
+    pkg = pathlib.Path(registry.__file__).resolve().parent
+    problems, owned = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for hit in _retrieval_copies(path.read_text(), rel):
+            key = f"{rel}:{hit.split(': ', 1)[1]}"
+            if key in owners:
+                owned.add(key)
+            else:
+                problems.append(hit)
+    assert owned == owners
+    assert not problems, "\n".join(problems)
+
+
 def test_default_driver_heap_is_half_the_host_capped():
     """The default driver heap is half of physical RAM, capped at 16g: a
     15 GiB host gets 7g (a 16g heap there let the OOM killer take the

@@ -43,8 +43,3 @@ def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     a 3x cut of the dominant cost. Arithmetic structure (dot / (na * nb))
     is identical to :func:`cosine`, so results are bitwise-equal."""
     return dot(a, b) / (na * nb)
-
-
-NORM_SQL = (
-    "sqrt(list_dot_product(CAST({e} AS DOUBLE[]), CAST({e} AS DOUBLE[])))"
-)

@@ -93,8 +93,17 @@ def table_bytes(sf_dir: str, name: str) -> int:
     read). The cheap size signal for size-gated plan decisions (a
     poor-man's CBO): operators may broadcast a *derived* relation only
     when its base table is provably small, so the hint self-disables at
-    scale. See ``tpch_q8_market_share``."""
+    scale. The gate itself is :func:`broadcastable`."""
     return _path_bytes(f"{sf_dir}/{name}.parquet")
+
+
+def broadcastable(sf_dir: str, name: str) -> bool:
+    """The one size gate for hint-broadcasting a relation derived from
+    table ``name``: its on-disk parquet is at most 256 MiB, so the
+    derived relation stays well under executor memory and the hint
+    self-disables at scale (past it, joins degrade to the shuffled forms
+    AQE manages)."""
+    return table_bytes(sf_dir, name) <= 256 << 20
 
 
 def _path_bytes(path: str) -> int:

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import descale, dround, dsum
+from ..functions.numerics import descale, dround, dsum, dsum_sql
 from ..functions.timeparts import (
     epoch_micros_from_ntz,
     monthly_partials,
@@ -521,8 +521,7 @@ _MOMENTS = (
 
 _M3 = (
     "SELECT date_trunc('month', o_orderdate) AS ms, "
-    "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) "
-    "AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1"
+    f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1"
 )
 
 ORACLE = {
@@ -630,9 +629,7 @@ ORACLE = {
         "FROM orders"
     ),
     "timeseries_gap_fill": (
-        "WITH m AS (SELECT date_trunc('month', o_orderdate) AS ms, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) "
-        "AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1), "
+        f"WITH m AS ({_M3}), "
         "obs AS (SELECT * FROM m WHERE month(ms) != 2), "
         "b AS (SELECT MIN(ms) AS lo, MAX(ms) AS hi FROM m), "
         "spine AS (SELECT unnest(generate_series(lo, hi, "
@@ -644,9 +641,7 @@ ORACLE = {
         "FROM spine s LEFT JOIN obs o ON s.month_start = o.ms"
     ),
     "timeseries_interpolate_linear": (
-        "WITH m AS (SELECT date_trunc('month', o_orderdate) AS ms, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) "
-        "AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1), "
+        f"WITH m AS ({_M3}), "
         "obs AS (SELECT * FROM m WHERE month(ms) != 2), "
         "b AS (SELECT MIN(ms) AS lo, MAX(ms) AS hi FROM m), "
         "spine AS (SELECT unnest(generate_series(lo, hi, "

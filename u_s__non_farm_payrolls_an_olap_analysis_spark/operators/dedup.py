@@ -34,6 +34,8 @@ DuckDB, so those two are rows-only checks; their *verification* metric
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +52,8 @@ MINHASH_PERMS = 32
 LAST_CLUSTER_ROUNDS = 0
 LSH_BANDS = 8
 LSH_ROWS = 4  # MINHASH_PERMS / LSH_BANDS
+PLANT_OFFSET = 1_000_000  # planted-copy id space, disjoint from real ids
+PLANT_MOD = 5             # every 5th row gets an exact-duplicate copy
 
 
 def _shingle_array(n: int = 3):
@@ -354,11 +358,28 @@ def dedup_minhash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup candidates depend on the engine's hash bits (why
     :func:`dedup_minhash_near` is rows-only); a planted pair the pipeline
     dropped would be ABSENT here and fail the hash check."""
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.filter(F.col("doc_id") % PLANT_MOD == 0).select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"), "text"
+    return _planted_text_pairs(spark, sf_dir, _minhash_pairs)
+
+
+def _with_planted_copies(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` plus an exact copy of every ``PLANT_MOD``-th row re-inserted
+    at ``id + PLANT_OFFSET`` — the corpus of every planted harness."""
+    ident = F.col(id_col)
+    copies = df.filter(ident % PLANT_MOD == 0).withColumn(
+        id_col, ident + PLANT_OFFSET
     )
-    pairs = _minhash_pairs(docs.unionByName(planted))
+    return df.unionByName(copies)
+
+
+def _planted_text_pairs(
+    spark: SparkSession, sf_dir: str, pairs_fn: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Run a documents pair pipeline (``pairs_fn``: docs → (doc_a, doc_b,
+    ...)) over the planted corpus and keep only the (source, copy) pairs:
+    every one must be found, and the natural near-dups the engine's hash
+    bits decide are left out."""
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    pairs = pairs_fn(_with_planted_copies(docs, "doc_id"))
     return pairs.filter(
         (F.col("doc_b") == F.col("doc_a") + PLANT_OFFSET)
         & (F.col("doc_a") % PLANT_MOD == 0)
@@ -473,16 +494,7 @@ def dedup_simhash_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`dedup_simhash` is rows-only); a planted pair the pipeline
     missed would be ABSENT here and fail the hash check, so the
     restriction hides engine-specific extras, never a recall failure."""
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.filter(F.col("doc_id") % PLANT_MOD == 0).select(
-        (F.col("doc_id") + PLANT_OFFSET).alias("doc_id"), "text"
-    )
-    pairs = _simhash_pairs(docs.unionByName(planted))
-    return pairs.filter(
-        (F.col("doc_b") == F.col("doc_a") + PLANT_OFFSET)
-        & (F.col("doc_a") % PLANT_MOD == 0)
-        & (F.col("doc_a") < PLANT_OFFSET)
-    ).orderBy("doc_a")
+    return _planted_text_pairs(spark, sf_dir, _simhash_pairs)
 
 
 RHP_PLANES = 96  # sign projections; every banding geometry re-slices these
@@ -666,10 +678,6 @@ def dedup_embedding_cosine_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PLANT_OFFSET = 1_000_000  # planted-copy id space, disjoint from vec_ids
-PLANT_MOD = 5             # every 5th vector gets an exact-duplicate copy
-
-
 def dedup_embedding_prod_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-checked correctness harness for the PRODUCTION LSH geometry:
     the embeddings corpus is augmented with deterministic EXACT-duplicate
@@ -687,12 +695,8 @@ def dedup_embedding_prod_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the oracle evidence for the rows-only natural-corpus twin, whose
     own output hash stays engine-specific only in the sense that banding
     recall <1 WOULD matter if near-threshold natural pairs existed."""
-    base = _emb_with_norm(spark, sf_dir)
-    planted = base.filter(F.col("vec_id") % PLANT_MOD == 0).select(
-        (F.col("vec_id") + PLANT_OFFSET).alias("vec_id"), "embedding", "nrm"
-    )
     return embedding_lsh_pairs(
-        base.unionByName(planted),
+        _with_planted_copies(_emb_with_norm(spark, sf_dir), "vec_id"),
         RHP_BANDS_PROD,
         RHP_ROWS_PROD,
         COSINE_THRESHOLD_PROD,
@@ -970,10 +974,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
     )
-    planted = emb.filter(F.col("neighbor_id") % PLANT_MOD == 0).select(
-        (F.col("neighbor_id") + PLANT_OFFSET).alias("neighbor_id"), "ce"
-    )
-    corpus = emb.unionByName(planted)
+    corpus = _with_planted_copies(emb, "neighbor_id")
     cent = _train_kmeans_codebook_exact(corpus, IVF_K, KMEANS_ITERS)
     # round 15: the within-cluster a ⋈ b self-join consumes `assigned`
     # (training + argmax assignment) TWICE — eager checkpoint cuts the

@@ -1320,7 +1320,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CLAUDE.md rule 5 — the totals agg and the normalize both reference
     it, so an uncheckpointed unroll would double the plan per level);
     the half-step joins BROADCAST the node-sized score frame under the
-    `io.table_bytes` gate (zero edge shuffles per half-step), degrading
+    `io.broadcastable` gate (zero edge shuffles per half-step), degrading
     to the node-keyed shuffle join past it. Round-15 sweep: 10.5 s →
     6.0 s at 30x facts (6.3x DuckDB — serial half-step stage latency
     over the fixture's SATURATED ~600k-edge graph dominates there) and
@@ -1376,13 +1376,13 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("q"),
     )
 
-    from ..io import table_bytes
+    from ..io import broadcastable
 
     # node-sized score frames broadcast into the edge probe under the
     # size gate (zero edge shuffles per half-step); past the gate the
     # join degrades to the node-keyed shuffle — O(|E|) exchange per
     # half-step, the `graph_pagerank_tokens` posture
-    small = table_bytes(sf_dir, "orders") <= 256 << 20
+    small = broadcastable(sf_dir, "orders")
 
     def side(df):
         return F.broadcast(df) if small else df

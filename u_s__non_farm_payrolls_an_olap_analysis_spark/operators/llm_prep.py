@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numerics import davg, davg_sql, dround, dsum_scaled
-from ..io import read_table, table_bytes
+from ..io import broadcastable, read_table
 
 EMAIL_RE = "[a-z0-9]+@[a-z0-9]+[.][a-z]+"
 PHONE_RE = "[0-9]{3}-[0-9]{4}"
@@ -139,7 +139,7 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the benchmark side comes from its own pre-filtered scan
     (1/97 of doc_ids — the corpus-sized shingle pipeline is never
     executed to build it) and BROADCASTS while the base documents table
-    is small enough to bound it (same ``io.table_bytes`` gate as
+    is small enough to bound it (same ``io.broadcastable`` gate as
     ``tpch_q8_market_share``; past the gate the join degrades to the
     shuffle equi-join, still inverted-index-shaped). The training corpus
     pays exactly two scans — the broadcast probe and the per-doc size
@@ -154,7 +154,7 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD == 0),
         n=DECONTAM_NGRAM,
     ).select(F.col("doc_id").alias("bench_id"), F.col("shingle").alias("sh"))
-    if table_bytes(sf_dir, "documents") <= 256 << 20:
+    if broadcastable(sf_dir, "documents"):
         bench = F.broadcast(bench)
     from .dedup import _spread_if_narrow
 

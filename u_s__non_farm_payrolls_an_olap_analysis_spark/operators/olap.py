@@ -38,7 +38,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numerics import davg_partials, descale, dround, dsum
+from ..functions.numerics import (
+    davg_partials,
+    davg_sql,
+    descale,
+    dround,
+    dsum,
+    dsum_sql,
+)
 from ..functions.timeparts import (
     decade_label,
     diff,
@@ -112,7 +119,7 @@ def monthly_with_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounding, so both engines see bitwise-identical series values).
 M_SQL = (
     "SELECT date_trunc('month', o_orderdate) AS month_start, "
-    "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total, COUNT(*) AS n_orders "
+    f"ROUND({dsum_sql('o_totalprice')}, 4) AS total, COUNT(*) AS n_orders "
     "FROM orders GROUP BY 1"
 )
 W_SQL = (
@@ -627,20 +634,20 @@ ORACLE = {
     ),
     "slice_avg_by_year": (
         "SELECT CAST(year(o_orderdate) AS INT) AS year, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 / COUNT(o_totalprice)), 4) AS avg_totalprice FROM orders GROUP BY 1"
+        f"ROUND({davg_sql('o_totalprice')}, 4) AS avg_totalprice FROM orders GROUP BY 1"
     ),
     "rollup_quarter_sum": (
         "SELECT CAST(year(o_orderdate) AS INT) AS year, "
         "CAST(quarter(o_orderdate) AS INT) AS quarter, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1, 2"
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1, 2"
     ),
     "rollup_year_sum": (
         "SELECT CAST(year(o_orderdate) AS INT) AS year, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1"
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1"
     ),
     "rollup_decade_avg": (
         "SELECT CAST(CAST(FLOOR(year(o_orderdate) / 10) * 10 AS INT) AS VARCHAR) "
-        "|| 's' AS decade, ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0 / COUNT(o_totalprice)), 4) AS avg_totalprice "
+        f"|| 's' AS decade, ROUND({davg_sql('o_totalprice')}, 4) AS avg_totalprice "
         "FROM orders GROUP BY 1"
     ),
     "dice_q4_avg_by_month": (
@@ -674,7 +681,7 @@ ORACLE = {
     ),
     "window_diff_on_agg": (
         "WITH y AS (SELECT CAST(year(o_orderdate) AS INT) AS year, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1) "
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1) "
         "SELECT year, total, "
         "ROUND(total - LAG(total) OVER (ORDER BY year), 4) AS annual_gain, "
         "ROUND((total - LAG(total) OVER (ORDER BY year)) * 100.0 "
@@ -683,7 +690,7 @@ ORACLE = {
     "rollup_quarter_qoq": (
         "WITH q AS (SELECT CAST(year(o_orderdate) AS INT) AS year, "
         "CAST(quarter(o_orderdate) AS INT) AS quarter, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1, 2) "
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1, 2) "
         "SELECT year, quarter, total, "
         "ROUND((total - LAG(total) OVER (ORDER BY year, quarter)) * 100.0 "
         "/ LAG(total) OVER (ORDER BY year, quarter), 6) AS qoq_pct FROM q"
@@ -699,12 +706,12 @@ ORACLE = {
     "limit_head": (
         "WITH q AS (SELECT CAST(year(o_orderdate) AS INT) AS year, "
         "CAST(quarter(o_orderdate) AS INT) AS quarter, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1, 2) "
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1, 2) "
         "SELECT year, quarter, total FROM q ORDER BY year, quarter LIMIT 5"
     ),
     "top1_by_metric": (
         "WITH y AS (SELECT CAST(year(o_orderdate) AS INT) AS year, "
-        "ROUND((CAST(SUM(CAST(ROUND((o_totalprice) * 10000) AS BIGINT)) AS DOUBLE) / 10000.0), 4) AS total FROM orders GROUP BY 1), "
+        f"ROUND({dsum_sql('o_totalprice')}, 4) AS total FROM orders GROUP BY 1), "
         "g AS (SELECT year, total, "
         "ROUND(total - LAG(total) OVER (ORDER BY year), 4) AS annual_gain FROM y) "
         "SELECT year, total, annual_gain FROM g "
@@ -887,15 +894,15 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_shipdate", "l_extendedprice"
     )
     o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # size-gated broadcasts (the q8 gate, io.table_bytes): the 2-column
+    # size-gated broadcasts (the q8 gate, io.broadcastable): the 2-column
     # orders projection and the change-bounded history both derive from
     # the orders table, so one gate covers both. Below the gate the
     # whole query runs with ZERO fact-table shuffles (scan + two
     # broadcast probes + partial agg — round 14: 8.0 -> ~1.3 s at 30x);
     # past it the joins degrade to the shuffled forms AQE manages.
-    from ..io import table_bytes
+    from ..io import broadcastable
 
-    if table_bytes(sf_dir, "orders") <= 256 << 20:
+    if broadcastable(sf_dir, "orders"):
         o = F.broadcast(o)
         hist = F.broadcast(hist)
     fact = li.join(o, li.l_orderkey == o.o_orderkey).select(

@@ -19,12 +19,12 @@ ANN path).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.iterate import fixpoint
-from ..functions.numerics import d38, dround, dsum_scaled
+from ..functions.numerics import _nearest_long_away, d38, dround, dsum_scaled
 from ..functions.vectors import cosine, cosine_sql, dot
 from ..io import read_table
 
@@ -34,28 +34,121 @@ IVF_K = 16  # coarse centroids: vec_id in [N_QUERIES, N_QUERIES + IVF_K)
 IVF_PROBES = 4
 
 
+# --- The retrieval stream: split, score, cut ---------------------------------
+# Every search and eval key below is built from these devices; a no-Spark
+# test (tests/test_registry_contract.py::test_retrieval_stream_has_one_owner)
+# rejects any other query/corpus split or int8 quantizer in the engine.
+
+
+def _sides(emb: DataFrame, **carry: tuple[str, str]) -> tuple[DataFrame, DataFrame]:
+    """The query/corpus split: vectors with ``vec_id < N_QUERIES`` are the
+    query block (``query_id``), the rest the corpus (``neighbor_id``).
+    ``carry`` maps each column to keep to its (query-side, corpus-side)
+    names; by default the embedding rides along as ``qe`` / ``ce``."""
+    carry = carry or {"embedding": ("qe", "ce")}
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(k).alias(qn) for k, (qn, _) in carry.items()],
+    )
+    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"),
+        *[F.col(k).alias(cn) for k, (_, cn) in carry.items()],
+    )
+    return q, c
+
+
+def _cosine_scored(q: DataFrame, c: DataFrame) -> DataFrame:
+    """The exact scored stream: the query block broadcast onto ONE pass
+    over the corpus, each pair scored by its 6-dp ``dround`` cosine (the
+    module's total, engine-portable order). Every non-vector column of
+    either side rides along, query-side ones after ``query_id``."""
+    return c.join(F.broadcast(q)).select(
+        "query_id",
+        *[x for x in q.columns if x not in ("query_id", "qe")],
+        "neighbor_id",
+        *[x for x in c.columns if x not in ("neighbor_id", "ce")],
+        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, *order, name: str = "rank") -> DataFrame:
+    """Each query's first ``k`` rows in ``order`` (which must end in a
+    unique tiebreak), numbered 1..k in the int column ``name``: one
+    ``row_number`` window per query."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn(name, F.row_number().over(w)).filter(
+        F.col(name) <= k
+    )
+
+
+def _int8_scaled(emb: DataFrame) -> DataFrame:
+    """Symmetric int8 quantization, step 1: each vector's ``scale`` =
+    max|x| / 127 beside its ``embedding``. Zero vectors (scale 0) are
+    dropped: nothing to quantize."""
+    return emb.select(
+        "vec_id",
+        "embedding",
+        (
+            F.array_max(
+                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
+            )
+            / 127.0
+        ).alias("scale"),
+    ).filter(F.col("scale") > 0)
+
+
+def _int8_code(x: Column) -> Column:
+    """Step 2: the int8 code of one element of an ``_int8_scaled`` row,
+    round(x / scale) with ties away from zero (``dround`` == DuckDB
+    ROUND), so both engines produce bit-identical codes."""
+    return dround(x.cast("double") / F.col("scale"), 0).cast("long")
+
+
+def _int8_scored(emb: DataFrame) -> DataFrame:
+    """The int8 MIPS scored stream: both sides quantized, each pair scored
+    by the EXACT integer dot of its codes (|code| ≤ 127, far inside int64
+    at any width) rescaled by the two scales, 6-dp ``dround``."""
+    codes = _int8_scaled(emb).select(
+        "vec_id", "scale", F.transform("embedding", _int8_code).alias("code")
+    )
+    q, c = _sides(codes, scale=("qs", "cs"), code=("qc", "cc"))
+    int_dot = F.aggregate(
+        F.zip_with(F.col("qc"), F.col("cc"), lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return c.join(F.broadcast(q)).select(
+        "query_id",
+        "neighbor_id",
+        dround(int_dot.cast("double") * F.col("qs") * F.col("cs"), 6).alias(
+            "score"
+        ),
+    )
+
+
+def _label_totals(per_q: DataFrame, c: DataFrame) -> DataFrame:
+    """``per_q`` joined with the corpus size of its query's label
+    (``n_rel_total``, the relevant-set size of the retrieval evals): a
+    corpus aggregate broadcast back onto the per-query rows."""
+    totals = c.groupBy(F.col("c_label").alias("q_label")).agg(
+        F.count(F.lit(1)).alias("n_rel_total")
+    )
+    return per_q.join(F.broadcast(totals), "q_label")
+
+
+def _codebook(emb: DataFrame) -> DataFrame:
+    """The deterministic IVF codebook: the first ``IVF_K`` corpus vectors."""
+    return emb.filter(
+        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + IVF_K)
+    ).select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_e"))
+
+
 def sim_search_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12 — exact brute-force cosine top-k per query (the correctness
     baseline every ANN variant is measured against)."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    q, c = _sides(read_table(spark, sf_dir, "embeddings"))
+    return _top_k(
+        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
     )
 
 
@@ -71,24 +164,16 @@ def sim_search_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     4. exact cosine + rank within the probed subset.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + IVF_K)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_e"))
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-
-    return _ivf_search(q, cand, cent)
+    q, cand = _sides(emb)
+    return _ivf_search(q, cand, _codebook(emb))
 
 
 def assign_to_codebook(cand: DataFrame, cent: DataFrame) -> DataFrame:
     """Candidate → nearest codebook entry (rounded-cosine argmax with
     cent_id tiebreak, so the assignment is total and engine-portable):
     one broadcast pass over the corpus + a rank-1 window. Shared by the
-    IVF inverted-list build and the SemDeDup cluster partitioning."""
+    IVF inverted-list build, the k-means assign step and the SemDeDup
+    cluster partitioning."""
     scored = cand.join(F.broadcast(cent)).select(
         "neighbor_id",
         "ce",
@@ -119,11 +204,8 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
         "cent_id",
         dround(cosine(F.col("qe"), F.col("cent_e")), 6).alias("qc"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.col("qc").desc(), "cent_id")
-    probes = (
-        q_scored.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= IVF_PROBES)
-        .select("query_id", "qe", F.col("cent_id").alias("list_id"))
+    probes = _top_k(q_scored, IVF_PROBES, F.col("qc").desc(), "cent_id").select(
+        "query_id", "qe", F.col("cent_id").alias("list_id")
     )
 
     # search only probed lists
@@ -132,14 +214,7 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
         "neighbor_id",
         dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(scored, TOP_K, F.col("cosine").desc(), "neighbor_id")
 
 
 KMEANS_ITERS = 3
@@ -176,21 +251,11 @@ def _train_kmeans_codebook_exact(
     )
 
     def lloyd(cent: DataFrame, _r: int) -> DataFrame:
-        scored = cand.join(F.broadcast(cent)).select(
-            "neighbor_id",
-            "ce",
-            "cent_id",
-            dround(cosine(F.col("ce"), F.col("cent_e")), 6).alias("cc"),
-        )
-        w = Window.partitionBy("neighbor_id").orderBy(F.col("cc").desc(), "cent_id")
-        members = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("neighbor_id", "ce", "cent_id")
-        )
         return (
-            members.select(
-                "cent_id", F.posexplode("ce").alias("pos", "val")
+            assign_to_codebook(cand, cent)
+            .select(
+                F.col("list_id").alias("cent_id"),
+                F.posexplode("ce").alias("pos", "val"),
             )
             .groupBy("cent_id", "pos")
             .agg(
@@ -235,13 +300,7 @@ def sim_search_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe, rank — reproducible bit for bit and DuckDB-checkable (the
     oracle unrolls the same three Lloyd's iterations as CTE stages); the
     ``sim_search_ann_ivf_kmeans_exact`` key serves the same operator."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    q, cand = _sides(read_table(spark, sf_dir, "embeddings"))
     cent = _train_kmeans_codebook_exact(cand, IVF_K, KMEANS_ITERS)
     return _ivf_search(q, cand, cent)
 
@@ -256,19 +315,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ROUND == C round), so the int8 codes are bitwise-identical —
     quantization is oracle-checkable, not approximate. Zero vectors get
     NULL scale (dropped: nothing to quantize)."""
-    from ..functions.numerics import dround
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        "vec_id",
-        "embedding",
-        (
-            F.array_max(
-                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
-            )
-            / 127.0
-        ).alias("scale"),
-    ).filter(F.col("scale") > 0)
+    scaled = _int8_scaled(read_table(spark, sf_dir, "embeddings"))
     return scaled.select(
         "vec_id",
         "scale",
@@ -279,9 +326,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scale (rounding first would shift codes vs the oracle)
         dround("scale", 6).alias("scale"),
         (F.col("dim0") + 1).cast("int").alias("dim"),  # 1-based like SQL
-        dround(F.col("val").cast("double") / F.col("scale"), 0)
-        .cast("int")
-        .alias("q"),
+        _int8_code(F.col("val")).cast("int").alias("q"),
     )
 
 
@@ -342,62 +387,8 @@ def sim_search_int8_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is still deterministic here only via the rounding convention),
     the whole top-k is oracle-checked, scores included. Zero vectors
     (scale 0) are dropped on both sides."""
-    from ..functions.numerics import dround
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        "vec_id",
-        "embedding",
-        (
-            F.array_max(
-                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
-            )
-            / 127.0
-        ).alias("scale"),
-    ).filter(F.col("scale") > 0)
-    codes = scaled.select(
-        "vec_id",
-        "scale",
-        F.transform(
-            F.col("embedding"),
-            lambda x: dround(x.cast("double") / F.col("scale"), 0).cast("long"),
-        ).alias("code"),
-    )
-    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("scale").alias("qs"),
-        F.col("code").alias("qc"),
-    )
-    c = codes.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("scale").alias("cs"),
-        F.col("code").alias("cc"),
-    )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("qc"), F.col("cc"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        dround(
-            int_dot.cast("double") * F.col("qs") * F.col("cs"), 6
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    scored = _int8_scored(read_table(spark, sf_dir, "embeddings"))
+    return _top_k(scored, TOP_K, F.col("score").desc(), "neighbor_id")
 
 
 QUERIES = {
@@ -734,34 +725,11 @@ def sim_search_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sim_search_ann_ivf`) with the band+rank stages unchanged — the
     mining pass is a filter over whatever scorer feeds it.
     """
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    band = scored.filter(
+    q, c = _sides(read_table(spark, sf_dir, "embeddings"))
+    band = _cosine_scored(q, c).filter(
         (F.col("cosine") >= HN_LO) & (F.col("cosine") < HN_HI)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        band.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= HN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(band, HN_K, F.col("cosine").desc(), "neighbor_id")
 
 
 QUERIES["sim_search_hard_negatives"] = sim_search_hard_negatives
@@ -827,14 +795,8 @@ def sim_search_hamming_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.size("embedding") >= 64
     )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        *[c.alias(f"q{i}") for i, c in enumerate(_sign_words("embedding"))],
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        *[c.alias(f"c{i}") for i, c in enumerate(_sign_words("embedding"))],
-    )
+    words = emb.select("vec_id", *_sign_words("embedding"))
+    q, c = _sides(words, w0=("q0", "c0"), w1=("q1", "c1"))
     scored = c.join(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -843,17 +805,7 @@ def sim_search_hamming_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.bit_count(F.col("q1").bitwiseXOR(F.col("c1")))
         ).cast("int").alias("hamming"),
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(scored, TOP_K, "hamming", "neighbor_id")
 
 
 QUERIES["sim_search_hamming_binary"] = sim_search_hamming_binary
@@ -924,8 +876,6 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope: LLM-pipeline pack (no vector search in
     `dashboard_nfp.py`); completes the ANN compression family (IVF
     probe / LSH bands / sign-bit Hamming / int8 MIPS / PQ-ADC)."""
-    from ..functions.numerics import dround
-
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.size("embedding") >= PQ_M * PQ_DSUB
     )
@@ -945,9 +895,7 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # encode the corpus: nearest centroid per (candidate, subspace)
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
+    q, cand = _sides(emb)
     enc = cand.crossJoin(F.broadcast(cb)).select(
         "neighbor_id",
         "m",
@@ -975,11 +923,6 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ADC lookup tables: query x subspace x centroid partial dot products
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    from ..functions.vectors import dot
-
     pdt = q.crossJoin(F.broadcast(cb)).select(
         "query_id",
         "m",
@@ -1011,19 +954,7 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         score.alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), "neighbor_id"
-    )
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "score",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(ranked, TOP_K, F.col("score").desc(), "neighbor_id")
 
 
 QUERIES["sim_search_pq_adc"] = sim_search_pq_adc
@@ -1096,41 +1027,20 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vs reference: no analogue (`dashboard_nfp.py` has no vector surface).
     """
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("true_label"),
+    q, c = _sides(
+        read_table(spark, sf_dir, "embeddings"),
+        embedding=("qe", "ce"),
+        label=("true_label", "nb_label"),
     )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("nb_label"),
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "true_label",
-        "neighbor_id",
-        "nb_label",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    w_nn = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    nn = (
-        scored.withColumn("rank", F.row_number().over(w_nn))
-        .filter(F.col("rank") <= TOP_K)
+    nn = _top_k(
+        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
     )
     votes = nn.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("votes"),
         F.max("cosine").alias("best_cos"),
     )
-    w_win = Window.partitionBy("query_id").orderBy(
-        F.col("votes").desc(), F.col("best_cos").desc(), F.col("nb_label")
-    )
     return (
-        votes.withColumn("vr", F.row_number().over(w_win))
-        .filter(F.col("vr") == 1)
+        _top_k(votes, 1, F.col("votes").desc(), F.col("best_cos").desc(), "nb_label")
         .select(
             "query_id",
             F.col("nb_label").alias("predicted_label"),
@@ -1219,13 +1129,7 @@ def sim_search_mmr_diversified(
 
     vs reference: no analogue (no vector surface in `dashboard_nfp.py`).
     """
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
+    q, c = _sides(read_table(spark, sf_dir, "embeddings"))
     scored = c.join(F.broadcast(q)).select(
         "query_id",
         "neighbor_id",
@@ -1234,13 +1138,9 @@ def sim_search_mmr_diversified(
         .cast("long")
         .alias("rel_s"),
     )
-    w_pool = Window.partitionBy("query_id").orderBy(
-        F.col("rel_s").desc(), "neighbor_id"
-    )
     cand = (
-        scored.withColumn("rk", F.row_number().over(w_pool))
-        .filter(F.col("rk") <= MMR_POOL)
-        .drop("rk")
+        _top_k(scored, MMR_POOL, F.col("rel_s").desc(), "neighbor_id")
+        .drop("rank")
         .localCheckpoint(eager=True)
     )
     a = cand.select(
@@ -1268,7 +1168,6 @@ def sim_search_mmr_diversified(
     )
     cs = cand.select("query_id", "neighbor_id", "rel_s")
 
-    w_pick = Window.partitionBy("query_id")
     picks = []
     selected = None
     for t in range(1, MMR_K + 1):
@@ -1296,13 +1195,7 @@ def sim_search_mmr_diversified(
             - F.lit(MMR_D_NUM) * F.col("ms_s")
         )
         pick = (
-            sc.withColumn(
-                "rn",
-                F.row_number().over(
-                    w_pick.orderBy(score_s.desc(), "neighbor_id")
-                ),
-            )
-            .filter(F.col("rn") == 1)
+            _top_k(sc, 1, score_s.desc(), "neighbor_id")
             .select("query_id", "neighbor_id", "rel_s", "ms_s")
             # cut lineage per stage: stage t references selected_{t-1}
             # TWICE (anti-join + max-sim join), so without the cut the
@@ -1442,40 +1335,20 @@ def sim_eval_mrr_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vs reference: no analogue (`dashboard_nfp.py` has no vector surface).
     """
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("q_label"),
+    q, c = _sides(
+        read_table(spark, sf_dir, "embeddings"),
+        embedding=("qe", "ce"),
+        label=("q_label", "c_label"),
     )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("c_label"),
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "q_label",
-        "neighbor_id",
-        "c_label",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= EVAL_K
-    )
+    scored = _cosine_scored(q, c)
+    topk = _top_k(scored, EVAL_K, F.col("cosine").desc(), "neighbor_id")
     rel = F.col("c_label") == F.col("q_label")
     hits = topk.groupBy("query_id", "q_label").agg(
         F.sum(F.when(rel, F.lit(1)).otherwise(F.lit(0))).alias("n_hits"),
         F.min(F.when(rel, F.col("rank"))).alias("first_rel"),
     )
-    label_tot = c.groupBy(F.col("c_label").alias("q_label")).agg(
-        F.count(F.lit(1)).alias("n_rel_total")
-    )
     return (
-        hits.join(F.broadcast(label_tot), "q_label")
+        _label_totals(hits, c)
         .select(
             "query_id",
             F.col("q_label").cast("int").alias("label"),
@@ -1775,15 +1648,8 @@ def sim_eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; everything after is a (cluster, label) count aggregate and
     a K-row argmax."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cent = emb.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + IVF_K)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_e"))
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("lab"),
-    )
-    assigned = assign_to_codebook(cand.drop("lab"), cent).join(
+    _, cand = _sides(emb, embedding=("qe", "ce"), label=("q_label", "lab"))
+    assigned = assign_to_codebook(cand.drop("lab"), _codebook(emb)).join(
         cand.select("neighbor_id", "lab"), "neighbor_id"
     )
     cl = assigned.groupBy("list_id", "lab").agg(
@@ -2327,63 +2193,15 @@ def sim_search_cascade_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are fetched for ~200 rows, not the corpus — that asymmetry
     is the entire economics of cascaded retrieval at billion-vector
     scale."""
-    from ..functions.numerics import dround
-    from ..functions.vectors import cosine
-
     emb = read_table(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        "vec_id",
-        "embedding",
-        (
-            F.array_max(
-                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double")))
-            )
-            / 127.0
-        ).alias("scale"),
-    ).filter(F.col("scale") > 0)
-    codes = scaled.select(
-        "vec_id",
-        "scale",
-        F.transform(
-            F.col("embedding"),
-            lambda x: dround(x.cast("double") / F.col("scale"), 0).cast("long"),
-        ).alias("code"),
-    )
-    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("scale").alias("qs"),
-        F.col("code").alias("qc"),
-    )
-    c = codes.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("scale").alias("cs"),
-        F.col("code").alias("cc"),
-    )
-    int_dot = F.aggregate(
-        F.zip_with(F.col("qc"), F.col("cc"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored1 = c.join(F.broadcast(q)).select(
-        "query_id",
+    survivors = _top_k(
+        _int8_scored(emb).withColumnRenamed("score", "coarse_score"),
+        CASCADE_L1,
+        F.col("coarse_score").desc(),
         "neighbor_id",
-        dround(int_dot.cast("double") * F.col("qs") * F.col("cs"), 6).alias(
-            "coarse_score"
-        ),
+        name="coarse_rank",
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("coarse_score").desc(), "neighbor_id"
-    )
-    survivors = (
-        scored1.withColumn("coarse_rank", F.row_number().over(w1))
-        .filter(F.col("coarse_rank") <= CASCADE_L1)
-    )
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    ce = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
+    qe, ce = _sides(emb)
     # survivor set (queries x L1) broadcasts; the float-vector scan stays
     # on the probe side and is pruned to the survivors by the join
     reranked = ce.join(
@@ -2392,25 +2210,11 @@ def sim_search_cascade_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         "neighbor_id",
-        "coarse_score",
-        F.col("coarse_rank").cast("int").alias("coarse_rank"),
         dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
+        "coarse_score",
+        "coarse_rank",
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "coarse_score",
-            "coarse_rank",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(reranked, TOP_K, F.col("cosine").desc(), "neighbor_id")
 
 
 QUERIES["sim_search_cascade_rerank"] = sim_search_cascade_rerank
@@ -2477,32 +2281,13 @@ def sim_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same physical shape as `sim_eval_mrr_recall` — one
     broadcast-scored pass, per-query rank window, a broadcast label
     rollup onto the eval rows."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("q_label"),
+    q, c = _sides(
+        read_table(spark, sf_dir, "embeddings"),
+        embedding=("qe", "ce"),
+        label=("q_label", "c_label"),
     )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("c_label"),
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "q_label",
-        "neighbor_id",
-        "c_label",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= EVAL_K
-    )
-    from ..functions.numerics import _nearest_long_away
-
+    scored = _cosine_scored(q, c)
+    topk = _top_k(scored, EVAL_K, F.col("cosine").desc(), "neighbor_id")
     gain = _nearest_long_away(
         F.lit(float(_NDCG_SCALE))
         / F.log2(F.col("rank").cast("double") + F.lit(1.0))
@@ -2514,10 +2299,7 @@ def sim_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dcg_s"),
         F.sum(F.when(rel, 1).otherwise(0)).cast("long").alias("n_hits"),
     )
-    label_tot = c.groupBy(F.col("c_label").alias("q_label")).agg(
-        F.count(F.lit(1)).alias("n_rel_total")
-    )
-    j = per_q.join(F.broadcast(label_tot), "q_label")
+    j = _label_totals(per_q, c)
     m = F.least(F.lit(EVAL_K).cast("long"), F.col("n_rel_total"))
     idcg_s = F.aggregate(
         F.sequence(F.lit(1).cast("long"), m),
@@ -2604,26 +2386,12 @@ def sim_eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same physical shape as `sim_eval_ndcg` — one broadcast-
     scored pass, one per-query rank window (the running sum rides the
     SAME window sort), a broadcast label rollup."""
-    from ..functions.numerics import _nearest_long_away
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("q_label"),
+    q, c = _sides(
+        read_table(spark, sf_dir, "embeddings"),
+        embedding=("qe", "ce"),
+        label=("q_label", "c_label"),
     )
-    c = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("label").alias("c_label"),
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "q_label",
-        "neighbor_id",
-        "c_label",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
+    scored = _cosine_scored(q, c)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), "neighbor_id"
     )
@@ -2647,10 +2415,7 @@ def sim_eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(term).cast("long").alias("ap_s"),
         F.sum("rel").cast("long").alias("n_hits"),
     )
-    label_tot = c.groupBy(F.col("c_label").alias("q_label")).agg(
-        F.count(F.lit(1)).alias("n_rel_total")
-    )
-    j = per_q.join(F.broadcast(label_tot), "q_label")
+    j = _label_totals(per_q, c)
     denom = F.least(F.lit(EVAL_K).cast("long"), F.col("n_rel_total"))
     return j.select(
         "query_id",
@@ -2731,12 +2496,7 @@ def sim_eval_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast-codebook scan (n·k scored rows), one
     per-point rank window, one cluster-count rollup — no pairwise
     work anywhere."""
-    from ..functions.numerics import _nearest_long_away
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    cand = emb.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
+    _, cand = _sides(read_table(spark, sf_dir, "embeddings"))
     cent = _train_kmeans_codebook_exact(cand, IVF_K, KMEANS_ITERS)
     scored = cand.join(F.broadcast(cent)).select(
         "neighbor_id",
@@ -2849,8 +2609,6 @@ def sim_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the scored stream + one per-vector rank + a ≤10-row bin
     rollup."""
-    from ..functions.numerics import _nearest_long_away
-
     scored = _centroid_scored(spark, sf_dir)
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cos").desc(), F.col("cls")
@@ -2981,26 +2739,10 @@ def _exact_cosine_topk_64(emb: DataFrame) -> DataFrame:
     same corpus the PQ and Hamming searches operate on (their filter is
     part of the operator contract; the truth side must match it or
     recall would be measured against neighbors the ANN never saw)."""
-    e = emb.filter(F.size("embedding") >= 64)
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
-    scored = c.join(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    q, c = _sides(emb.filter(F.size("embedding") >= 64))
+    return _top_k(
+        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
+    ).select("query_id", "neighbor_id")
 
 
 def _ann_recall_vs_exact(ann: DataFrame, truth: DataFrame) -> DataFrame:

@@ -30,7 +30,7 @@ from ..functions.numerics import (
     dsum,
     dsum_sql,
 )
-from ..io import read_table, table_bytes
+from ..io import broadcastable, read_table
 
 _REVENUE_SQL = "l_extendedprice * (1 - l_discount)"
 
@@ -316,7 +316,7 @@ def tpch_q21_suppliers_kept_waiting(
 
     The status-F orders projection is roughly HALF of orders (a
     fact-derived relation, not a dim), so its broadcast is size-gated on
-    ``io.table_bytes`` exactly like q8/scd2 — an unconditional hint would
+    ``io.broadcastable`` exactly like q8/scd2 — an unconditional hint would
     bypass AQE demotion and the broadcast size limit and OOM the driver
     at large SF. Past the gate it degrades to a plain equi-join and AQE
     picks the physical strategy."""
@@ -329,7 +329,7 @@ def tpch_q21_suppliers_kept_waiting(
         "INTERVAL 90 DAYS"
     )
     of_keys = orders_f.select("o_orderkey", "o_orderdate")
-    if table_bytes(sf_dir, "orders") <= 256 << 20:
+    if broadcastable(sf_dir, "orders"):
         of_keys = F.broadcast(of_keys)
     lo = (
         li.join(
@@ -545,7 +545,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
       arithmetic to ``dsum`` of the masked value (mask ∈ {0,1}, round(0)
       = 0), half the ties-away rounding work in the hot loop.
     - **Size-gated broadcast of the reduced orders side** (a poor-man's
-      CBO via ``io.table_bytes`` file stats): the static planner can't
+      CBO via ``io.broadcastable`` file stats): the static planner can't
       see the 5x dim-chain reduction (join cardinality estimates without
       CBO stats explode, so no autoBroadcastJoinThreshold catches it),
       and AQE's runtime conversion only fires AFTER the probe side's
@@ -567,7 +567,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stay bounded because the build side is the 5x-reduced relation and
     # AQE splits skewed partitions). Recurring q8 at rest skips all of
     # this via the bucketed layout (SCALE.md, measure_bucketed_q8.py).
-    if table_bytes(sf_dir, "orders") <= 256 << 20:
+    if broadcastable(sf_dir, "orders"):
         asia_orders = F.broadcast(asia_orders)
     else:
         asia_orders = asia_orders.hint("SHUFFLE_HASH")
