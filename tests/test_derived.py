@@ -23,7 +23,13 @@ DERIVED_KEYS = sorted({*layout.ORACLE, *incremental.ORACLE})
 def test_derived_state_follows_upsert(spark, tmp_path):
     """Build every oracle-backed layout/incremental key's state on a
     copy of ``orders``, upsert the copy, and check each key against its
-    DuckDB oracle on the NEW table."""
+    DuckDB oracle on the NEW table — and that the rebuild left one copy
+    per derived kind and build parameters, not one per table version."""
+    import collections
+    import os
+
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions import derived
+
     d = str(tmp_path)
     writable_orders_copy(d)
     queries = registry.queries()
@@ -41,3 +47,10 @@ def test_derived_state_follows_upsert(spark, tmp_path):
         != canon_frame(con.execute(oracles[k]).fetchdf())
     ]
     assert not stale, stale
+    tag = "".join(c if c.isalnum() else "_" for c in os.path.basename(d))
+    copies = collections.Counter(
+        name.rsplit("_", 1)[0]
+        for name in os.listdir(derived._base())
+        if f"_{tag}_" in name
+    )
+    assert copies and set(copies.values()) == {1}, copies

@@ -1923,44 +1923,52 @@ def test_monthly_partials_split_sums_and_descales(spark, rows, keyed):
     rows=st.lists(
         st.tuples(
             st.integers(0, 3),
-            st.integers(0, 20),
+            st.integers(0, 1),
+            st.integers(0, 40),
             st.sampled_from([0.0, 0.25, 0.5, 1.0]),
         ),
         max_size=16,
-        unique_by=lambda t: (t[0], t[1]),
+        unique_by=lambda t: t[2],
     ),
-    k=st.integers(1, 6),
+    by=st.sampled_from(["query_id", ("query_id", "sub"), ()]),
+    k=st.one_of(st.sampled_from([1, 2]), st.integers(1, 6)),
 )
-@example(rows=[], k=3)
+@example(rows=[], by="query_id", k=3)
+@example(rows=[(0, 0, 1, 0.5), (0, 1, 2, 0.5), (1, 0, 3, 1.0)], by=(), k=2)
+@example(
+    rows=[(0, 0, 1, 0.5), (0, 1, 2, 0.5), (0, 1, 3, 1.0)], by=("query_id", "sub"), k=1
+)
 @_settings
-def test_top_k_is_a_per_query_sorted_head(spark, rows, k):
-    """``similarity._top_k`` keeps each query's first ``k`` rows by
+def test_top_k_is_a_per_query_sorted_head(spark, rows, by, k):
+    """``ranks.top_k`` keeps each ``by`` group's first ``k`` rows by
     (score desc, neighbor_id), numbered 1..k in an int column: the same
-    rows as a pandas per-query sort + ``head(k)``, on frames with tied
-    scores, queries with fewer than ``k`` rows and no rows at all."""
+    rows as a pandas per-group sort + ``head(k)``, for a one-column, a
+    two-column and the global (``()``) group, on frames with tied
+    scores, groups with fewer than ``k`` rows and no rows at all."""
     import pandas as pd
 
-    from u_s__non_farm_payrolls_an_olap_analysis_spark.operators.similarity import (
-        _top_k,
-    )
+    from u_s__non_farm_payrolls_an_olap_analysis_spark.functions.ranks import top_k
 
-    schema = "query_id long, neighbor_id long, score double"
-    got = _top_k(
-        spark.createDataFrame(rows, schema), k, F.col("score").desc(), "neighbor_id"
+    cols = ["query_id", "sub", "neighbor_id", "score"]
+    schema = "query_id long, sub long, neighbor_id long, score double"
+    got = top_k(
+        spark.createDataFrame(rows, schema), by, k, F.col("score").desc(), "neighbor_id"
     )
-    assert dict(got.dtypes)["rank"] == "int"
+    assert dict(got.dtypes)["rn"] == "int"
 
-    pdf = pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
-    head = (
-        pdf.sort_values(
-            ["query_id", "score", "neighbor_id"], ascending=[True, False, True]
-        )
-        .groupby("query_id")
-        .head(k)
+    keys = [by] if isinstance(by, str) else list(by)
+    pdf = pd.DataFrame(rows, columns=cols).sort_values(
+        [*keys, "score", "neighbor_id"],
+        ascending=[*(True for _ in keys), False, True],
     )
-    head = head.assign(rank=head.groupby("query_id").cumcount() + 1)
+    if keys:
+        head = pdf.groupby(keys).head(k)
+        head = head.assign(rn=head.groupby(keys).cumcount() + 1)
+    else:
+        head = pdf.head(k)
+        head = head.assign(rn=range(1, len(head) + 1))
     want = sorted(
-        (int(q), int(n), float(s), int(r))
-        for q, n, s, r in head.itertuples(index=False, name=None)
+        (int(q), int(g), int(n), float(s), int(r))
+        for q, g, n, s, r in head.itertuples(index=False, name=None)
     )
     assert sorted(tuple(r) for r in got.collect()) == want

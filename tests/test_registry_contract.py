@@ -277,6 +277,52 @@ def test_derived_state_has_one_owner():
     assert not problems, "\n".join(problems)
 
 
+def _engine_walk(src: str, rel: str, hit) -> list[str]:
+    """The one-owner tests' shared AST walker: visit every node of one
+    engine module and emit ``rel:lineno: fn`` (plus the tag ``hit``
+    returns) for each node ``hit(node, scope)`` flags, where ``fn``
+    names the innermost enclosing function (``<module>`` at top level)
+    and ``scope`` is that function's node. ``hit`` returns None to pass
+    a node, ``""`` or `` <tag>`` to flag it."""
+    import ast
+
+    out = []
+
+    def visit(node, fn, scope):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, child)
+                continue
+            tag = hit(child, scope)
+            if tag is not None:
+                out.append(f"{rel}:{child.lineno}: {fn}{tag}")
+            visit(child, fn, scope)
+
+    tree = ast.parse(src)
+    visit(tree, "<module>", tree)
+    return out
+
+
+def _unowned(find, owners: set[str]) -> tuple[list[str], set[str]]:
+    """Run ``find(src, rel)`` over every engine module. A hit is owned
+    when its module (``rel``) or its ``rel:fn tag`` key is in ``owners``;
+    returns the unowned hits and the owners that were hit."""
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).resolve().parent
+    problems, owned = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for hit in find(path.read_text(), rel):
+            key = f"{rel}:{hit.split(': ', 1)[1]}"
+            owner = next((o for o in (rel, key) if o in owners), None)
+            if owner is None:
+                problems.append(hit)
+            else:
+                owned.add(owner)
+    return problems, owned
+
+
 def _convergence_loops(src: str, rel: str) -> list[str]:
     """Hand-rolled convergence loops: a ``for``/``while`` whose body both
     ``break``s and calls ``localCheckpoint`` — the round cap, per-round
@@ -284,26 +330,20 @@ def _convergence_loops(src: str, rel: str) -> list[str]:
     Each hit names its innermost enclosing function."""
     import ast
 
-    out = []
+    def hit(node, scope):
+        if not isinstance(node, (ast.For, ast.While)):
+            return None
+        inner = list(ast.walk(node))
+        if any(isinstance(n, ast.Break) for n in inner) and any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "localCheckpoint"
+            for n in inner
+        ):
+            return ""
+        return None
 
-    def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
-                continue
-            if isinstance(child, (ast.For, ast.While)):
-                inner = list(ast.walk(child))
-                if any(isinstance(n, ast.Break) for n in inner) and any(
-                    isinstance(n, ast.Call)
-                    and isinstance(n.func, ast.Attribute)
-                    and n.func.attr == "localCheckpoint"
-                    for n in inner
-                ):
-                    out.append(f"{rel}:{child.lineno}: {fn}")
-            visit(child, fn)
-
-    visit(ast.parse(src), "<module>")
-    return out
+    return _engine_walk(src, rel, hit)
 
 
 def test_convergence_loop_has_one_owner():
@@ -311,7 +351,6 @@ def test_convergence_loop_has_one_owner():
     through ``functions/iterate.fixpoint``: no other
     engine module may hand-roll a loop that checkpoints each round and
     ``break``s on convergence. Self-tested against a synthetic repro."""
-    import pathlib
 
     repro = (
         "def f(df):\n"
@@ -325,12 +364,7 @@ def test_convergence_loop_has_one_owner():
         "        df = df.localCheckpoint(eager=True)\n"
     )
     assert _convergence_loops(repro, "x.py") == ["x.py:2: f"]
-    pkg = pathlib.Path(registry.__file__).resolve().parent
-    problems = []
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
-        if rel != "functions/iterate.py":
-            problems += _convergence_loops(path.read_text(), rel)
+    problems, _ = _unowned(_convergence_loops, {"functions/iterate.py"})
     assert not problems, "\n".join(problems)
 
 
@@ -367,24 +401,17 @@ def _monthly_orders_groupbys(src: str, rel: str) -> list[str]:
         parts = orderdate_parts(args)
         return "month_start" in parts or {"year", "month"} <= parts
 
-    out = []
+    def hit(node, scope):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "groupBy"
+            and monthly(node.args)
+        ):
+            return ""
+        return None
 
-    def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
-                continue
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "groupBy"
-                and monthly(child.args)
-            ):
-                out.append(f"{rel}:{child.lineno}: {fn}")
-            visit(child, fn)
-
-    visit(ast.parse(src), "<module>")
-    return out
+    return _engine_walk(src, rel, hit)
 
 
 def test_monthly_series_has_one_owner():
@@ -395,7 +422,6 @@ def test_monthly_series_has_one_owner():
     every spelling (and of those that must pass: a month of another
     column, a day of ``o_orderdate``, a month of the year alone, a year
     with another column's month)."""
-    import pathlib
 
     repro = (
         "def f(orders, ev):\n"
@@ -420,12 +446,7 @@ def test_monthly_series_has_one_owner():
         "x.py:9: f",
         "x.py:13: f",
     ]
-    pkg = pathlib.Path(registry.__file__).resolve().parent
-    problems = []
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
-        if rel != "functions/timeparts.py":
-            problems += _monthly_orders_groupbys(path.read_text(), rel)
+    problems, _ = _unowned(_monthly_orders_groupbys, {"functions/timeparts.py"})
     assert not problems, "\n".join(problems)
 
 
@@ -437,38 +458,31 @@ def _retrieval_copies(src: str, rel: str) -> list[str]:
     function."""
     import ast
 
-    out = []
+    def hit(node, scope):
+        if (
+            isinstance(node, ast.Compare)
+            and any(
+                isinstance(c, ast.Constant) and c.value == "vec_id"
+                for c in ast.walk(node.left)
+            )
+            and any(
+                isinstance(op, ast.Lt)
+                and isinstance(c, ast.Name)
+                and c.id == "N_QUERIES"
+                for op, c in zip(node.ops, node.comparators)
+            )
+        ):
+            return " split"
+        if (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Div)
+            and isinstance(node.right, ast.Constant)
+            and node.right.value == 127
+        ):
+            return " int8"
+        return None
 
-    def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(child, child.name)
-                continue
-            if (
-                isinstance(child, ast.Compare)
-                and any(
-                    isinstance(c, ast.Constant) and c.value == "vec_id"
-                    for c in ast.walk(child.left)
-                )
-                and any(
-                    isinstance(op, ast.Lt)
-                    and isinstance(c, ast.Name)
-                    and c.id == "N_QUERIES"
-                    for op, c in zip(child.ops, child.comparators)
-                )
-            ):
-                out.append(f"{rel}:{child.lineno}: {fn} split")
-            if (
-                isinstance(child, ast.BinOp)
-                and isinstance(child.op, ast.Div)
-                and isinstance(child.right, ast.Constant)
-                and child.right.value == 127
-            ):
-                out.append(f"{rel}:{child.lineno}: {fn} int8")
-            visit(child, fn)
-
-    visit(ast.parse(src), "<module>")
-    return out
+    return _engine_walk(src, rel, hit)
 
 
 def test_retrieval_stream_has_one_owner():
@@ -478,7 +492,6 @@ def test_retrieval_stream_has_one_owner():
     divides by 127. Self-tested against a synthetic repro (and spellings
     that must pass: the corpus-side cut, a codebook range, another
     column's compare, a division by another constant)."""
-    import pathlib
 
     repro = (
         "def f(emb, codes):\n"
@@ -501,17 +514,126 @@ def test_retrieval_stream_has_one_owner():
         "operators/similarity.py:_sides split",
         "operators/similarity.py:_int8_scaled int8",
     }
-    pkg = pathlib.Path(registry.__file__).resolve().parent
-    problems, owned = [], set()
-    for path in sorted(pkg.rglob("*.py")):
-        rel = path.relative_to(pkg).as_posix()
-        for hit in _retrieval_copies(path.read_text(), rel):
-            key = f"{rel}:{hit.split(': ', 1)[1]}"
-            if key in owners:
-                owned.add(key)
-            else:
-                problems.append(hit)
+    problems, owned = _unowned(_retrieval_copies, owners)
     assert owned == owners
+    assert not problems, "\n".join(problems)
+
+
+def _top_k_cuts(src: str, rel: str) -> list[str]:
+    """Hand-rolled per-group heads: a ``filter``/``where`` that compares a
+    column bound to ``row_number`` in the same function (by
+    ``withColumn``, or by ``alias`` in a ``select`` that computes no
+    other window function) with ``<=``, ``<`` or ``==`` against an int
+    constant or an ALL-CAPS constant name — the fixed-k cut
+    ``functions/ranks.top_k`` owns. A number that shares its window with
+    a running aggregate (average precision's hit count) is not a bare
+    cut. Each hit names its innermost enclosing function."""
+    import ast
+
+    def is_row_number(e) -> bool:
+        while (
+            isinstance(e, ast.Call)
+            and isinstance(e.func, ast.Attribute)
+            and e.func.attr in ("over", "cast")
+        ):
+            e = e.func.value
+        f = getattr(e, "func", None)
+        return isinstance(e, ast.Call) and "row_number" in (
+            getattr(f, "attr", None),
+            getattr(f, "id", None),
+        )
+
+    bound: dict[int, set[str]] = {}
+
+    def is_other_window(e) -> bool:
+        return (
+            isinstance(e, ast.Call)
+            and isinstance(e.func, ast.Attribute)
+            and e.func.attr == "over"
+            and not is_row_number(e)
+        )
+
+    def row_number_names(scope) -> set[str]:
+        if id(scope) not in bound:
+            names = bound[id(scope)] = set()
+            for n in ast.walk(scope):
+                if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                    continue
+                if n.func.attr == "withColumn" and is_row_number(n.args[1]):
+                    names.add(getattr(n.args[0], "value", None))
+                elif n.func.attr == "select" and not any(
+                    is_other_window(e) for a in n.args for e in ast.walk(a)
+                ):
+                    names.update(
+                        getattr(a.args[0], "value", None)
+                        for a in n.args
+                        if isinstance(a, ast.Call)
+                        and getattr(a.func, "attr", None) == "alias"
+                        and is_row_number(a.func.value)
+                    )
+        return bound[id(scope)]
+
+    def fixed_k(c) -> bool:
+        return (isinstance(c, ast.Constant) and type(c.value) is int) or (
+            isinstance(c, ast.Name) and c.id.isupper()
+        )
+
+    def hit(node, scope):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("filter", "where")
+        ):
+            return None
+        names = row_number_names(scope)
+        for cmp in (n for a in node.args for n in ast.walk(a)):
+            if not isinstance(cmp, ast.Compare):
+                continue
+            left = cmp.left
+            if not (
+                isinstance(left, ast.Call)
+                and left.args
+                and isinstance(left.args[0], ast.Constant)
+                and left.args[0].value in names
+            ):
+                continue
+            if any(
+                isinstance(op, (ast.LtE, ast.Lt, ast.Eq)) and fixed_k(c)
+                for op, c in zip(cmp.ops, cmp.comparators)
+            ):
+                return ""
+        return None
+
+    return _engine_walk(src, rel, hit)
+
+
+def test_top_k_cut_has_one_owner():
+    """Every "first k rows per group" cut goes through
+    ``functions/ranks.top_k``: no other engine module may number rows
+    with ``row_number`` and filter that number against a fixed k.
+    Self-tested against a synthetic repro (and spellings that must pass:
+    a ``max(when(rn == 1, ...))`` pivot, a per-row bound
+    ``rn <= F.col("n_min")``, a ``rn <= CAP`` flag used only inside
+    ``agg``, a filter on a column no ``row_number`` binds, and a number
+    that shares its window with a running sum)."""
+    repro = (
+        "def f(df, w):\n"
+        "    a = df.withColumn('rn', F.row_number().over(w)).filter(F.col('rn') == 1)\n"
+        "    b = df.select(F.row_number().over(w).cast('int').alias('rank'))\n"
+        "    c = b.filter(F.col('rank') <= TOP_K)\n"
+        "    d = b.where((F.col('rank') < 3) & (F.col('op') != 'D'))\n"
+        "    e = b.groupBy('g').agg(F.max(F.when(F.col('rn') == 1, F.col('v'))))\n"
+        "    g = b.filter(F.col('rn') <= F.col('n_min'))\n"
+        "    h = b.groupBy('g').agg(F.sum((F.col('rn') <= CAP).cast('int')))\n"
+        "    i = b.filter(F.col('score') <= 3)\n"
+        "    j = df.select(\n"
+        "        F.row_number().over(w).alias('pos'), F.sum('rel').over(w).alias('h')\n"
+        "    ).filter(F.col('pos') <= EVAL_K)\n"
+        "def g(df, w):\n"
+        "    return df.filter(F.col('rank') == 1)\n"
+    )
+    assert _top_k_cuts(repro, "x.py") == ["x.py:2: f", "x.py:4: f", "x.py:5: f"]
+    problems, _ = _unowned(_top_k_cuts, {"functions/ranks.py"})
     assert not problems, "\n".join(problems)
 
 

@@ -9,7 +9,8 @@ content signature of the source tables the state was built from. The
 path is the memo: a write to a source (an upsert swapped in at the same
 path) changes its signature, so the builder finds no state at the new
 path and rebuilds — no invalidation call exists, and none is needed.
-Unchanged sources find their finished state where they left it.
+Unchanged sources find their finished state where they left it; the
+rebuild removes the copy of the superseded version.
 
 Builders mark completion LAST — Spark's ``_SUCCESS``, a catalog entry,
 or a hand-written marker — so a half-written directory is rebuilt, never
@@ -80,23 +81,35 @@ def table_sig(path: str) -> tuple:
         return ()
 
 
+def _md5_12(x) -> str:
+    return hashlib.md5(repr(x).encode()).hexdigest()[:12]
+
+
 def derived_path(sf_dir: str, kind: str, tables: tuple[str, ...], *extra) -> str:
     """Directory for ``kind`` state built from ``tables`` of ``sf_dir``
     (plus the build parameters in ``extra``). The name carries the sf
-    basename for readability and one hash over (absolute sf dir, every
-    named table's content signature, extra): two sf dirs sharing a
-    basename never share state, and a rewritten source gets a new path.
-    The directory is not created."""
+    basename for readability and two hashes: the SLOT (kind, absolute sf
+    dir, table names, extra), so two sf dirs sharing a basename never
+    share state, and the content signature of every named table, so a
+    rewritten source gets a new path. The directory is not created.
+
+    A miss (no directory at the returned path yet: the caller is about
+    to build) removes the slot's copies of other source versions — one
+    copy per slot survives a write, while copies with other build
+    parameters (two MV cutoffs) are other slots and stay."""
     ap = os.path.abspath(sf_dir)
-    sig = hashlib.md5(
-        repr((
-            ap,
-            tuple(table_sig(os.path.join(ap, f"{t}.parquet")) for t in tables),
-            extra,
-        )).encode()
-    ).hexdigest()[:12]
+    slot = _md5_12((kind, ap, tables, extra))
+    src = _md5_12(
+        tuple(table_sig(os.path.join(ap, f"{t}.parquet")) for t in tables)
+    )
     tag = "".join(c if c.isalnum() else "_" for c in os.path.basename(ap))
-    return os.path.join(_base(), f"{kind}_{tag}_{sig}")
+    prefix = f"{kind}_{tag}_{slot}_"
+    path = os.path.join(_base(), prefix + src)
+    if not os.path.exists(path):
+        for old in os.listdir(_base()):
+            if old.startswith(prefix):
+                shutil.rmtree(os.path.join(_base(), old), ignore_errors=True)
+    return path
 
 
 def scratch_path(name: str) -> str:

@@ -1,4 +1,12 @@
-"""Distributed rank / prefix-sum devices (round 14).
+"""Rank devices: the per-group top-k cut and the distributed rank /
+prefix-sum devices (round 14).
+
+``top_k`` is the engine's one "first k rows per group" cut (a
+``row_number`` window and a ``<= k`` filter, which Spark plans as a
+``WindowGroupLimit`` pair); a no-Spark test
+(``tests/test_registry_contract.py::test_top_k_cut_has_one_owner``)
+rejects a hand-rolled copy anywhere else. The rest of this module
+serves rank statistics over fact-scale rows:
 
 ``Window.partitionBy().orderBy(v)`` over fact-scale rows plans a SINGLE
 sort task no matter how many executors exist — the one window shape that
@@ -45,6 +53,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 N_BUCKETS = 1024
+
+
+def top_k(
+    df: DataFrame, by: str | tuple[str, ...], k: int, *order, name: str = "rn"
+) -> DataFrame:
+    """Each ``by`` group's first ``k`` rows in ``order`` (which must end
+    in a unique tiebreak), numbered 1..k in the int column ``name``: one
+    ``row_number`` window per group. ``by`` is a column name or a tuple
+    of names; ``()`` is ONE global group, a single-task sort, so only for
+    driver-size frames (CLAUDE.md rule 5)."""
+    keys = (by,) if isinstance(by, str) else by
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return df.withColumn(name, F.row_number().over(w)).filter(F.col(name) <= k)
 
 
 def _with_value_bucket(

@@ -21,7 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .functions.ranks import top_k
 
 TABLES = (
     "region",
@@ -206,11 +207,8 @@ def upsert_by_key(
             for c in updates.columns
             if c not in key_cols and c in orderable
         )
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
+    return top_k(tagged, tuple(key_cols), 1, *order, name="__rn").drop(
+        "__rn", "__prio"
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 from ..functions.numerics import d38, davg, davg_sql, dround, dsum, dsum_sql
 from ..functions.timeparts import year_of
 from ..functions.plan_cache import plan_memo
+from ..functions.ranks import top_k
 from ..io import read_table
 
 
@@ -75,18 +76,13 @@ def window_rank_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     key. One shuffle on the partition key; with AQE the skewed-partition
     split keeps stragglers bounded. Deterministic tiebreak on o_orderkey."""
     orders = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), "o_orderkey"
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            dround("o_totalprice", 4).alias("o_totalprice"),
-            F.col("rn").cast("int").alias("rn"),
-        )
+    return top_k(
+        orders, "o_custkey", 3, F.col("o_totalprice").desc(), "o_orderkey"
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        dround("o_totalprice", 4).alias("o_totalprice"),
+        "rn",
     )
 
 

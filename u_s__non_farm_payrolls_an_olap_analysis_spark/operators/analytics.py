@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numerics import descale, dround, dsum, dsum_sql
+from ..functions.ranks import top_k
 from ..functions.timeparts import (
     epoch_micros_from_ntz,
     monthly_partials,
@@ -347,12 +348,8 @@ def agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = orders.groupBy(
         F.year("o_orderdate").alias("year"), "o_orderpriority"
     ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("year").orderBy(
-        F.col("n").desc(), "o_orderpriority"
-    )
     return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top_k(counts, "year", 1, F.col("n").desc(), "o_orderpriority")
         .select(
             F.col("year").cast("int").alias("year"),
             F.col("o_orderpriority").alias("mode_priority"),

@@ -17,6 +17,7 @@ from ..functions.numerics import (
     dsum,
     dsum_scaled,
 )
+from ..functions.ranks import top_k
 from ..functions.timeparts import (
     epoch_micros_from_ntz,
     monthly_partials,
@@ -3252,12 +3253,7 @@ def agg_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("decimal(38,0)") * vd - F.col("s1")
     ).alias("dev")
     t2 = t.select("mon", "rev_s", "n", "s1", "q2", dev)
-    w_rank = Window.partitionBy().orderBy(
-        F.col("dev").desc(), F.col("mon").asc()
-    )
-    top = t2.select(
-        "*", F.row_number().over(w_rank).alias("rn")
-    ).filter(F.col("rn") == 1)
+    top = top_k(t2, (), 1, F.col("dev").desc(), F.col("mon").asc())
     n_d = F.col("n").cast("double")
     mean = F.col("s1").cast("double") / n_d / F.lit(10_000.0)
     m2 = (

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numerics import dround
 from ..functions.pairgen import posting_pairs, symmetrize
+from ..functions.ranks import top_k
 from ..functions.vectors import cosine_from_norms, cosine_sql, l2_norm
 from ..io import read_table
 
@@ -961,8 +962,6 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs reference: no analogue (the reference has no documents at all) —
     this is the BASELINE.json LLM-pipeline north star; the LSH-banded
     sibling is :func:`dedup_embedding_cosine_prod`."""
-    from pyspark.sql.window import Window
-
     from ..functions.vectors import cosine
     from .similarity import (
         IVF_K,
@@ -997,10 +996,8 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("cosine") >= SEMDEDUP_TAU)
     )
-    w = Window.partitionBy("drop_vec").orderBy(F.col("cosine").desc(), "keep_vec")
     return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top_k(pairs, "drop_vec", 1, F.col("cosine").desc(), "keep_vec")
         .select(
             "drop_vec",
             F.col("keep_vec").alias("witness_vec"),

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.iterate import fixpoint
 from ..functions.numerics import d38, dround
 from ..functions.pairgen import symmetrize
+from ..functions.ranks import top_k
 from ..io import read_table
 
 PR_DAMPING = 0.85
@@ -336,8 +337,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity gate needs; production runs to convergence with async
     sweeps.
     """
-    from pyspark.sql.window import Window
-
     directed = _token_edges(spark, sf_dir)
     und = (
         directed.filter(F.col("src") != F.col("dst"))
@@ -355,9 +354,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lbl = nbr.select("token").distinct().select(
         "token", F.col("token").alias("label")
     )
-    pick = Window.partitionBy("token").orderBy(
-        F.col("cnt").desc(), F.col("label")
-    )
     for _ in range(LPA_ITERS):
         votes = (
             nbr.join(
@@ -366,11 +362,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("token", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        lbl = (
-            votes.withColumn("rn", F.row_number().over(pick))
-            .filter(F.col("rn") == 1)
-            .select("token", "label")
-        )
+        lbl = top_k(
+            votes, "token", 1, F.col("cnt").desc(), F.col("label")
+        ).select("token", "label")
     return lbl.select("token", F.col("label").alias("community")).orderBy(
         "token"
     )
@@ -1331,8 +1325,6 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vs reference: no analogue (no graph surface in `dashboard_nfp.py`).
     """
-    from pyspark.sql.window import Window
-
     from ..functions.numerics import _nearest_long_away, l1_quantize
 
     orders = read_table(spark, sf_dir, "orders").select(
@@ -1419,25 +1411,17 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust",
             HITS_SCALE,
         )
-    wa = Window.orderBy(F.col("q").desc(), "part")
-    wh = Window.orderBy(F.col("q").desc(), "cust")
-    auth = (
-        a.select(
-            F.lit("authority").alias("side"),
-            F.col("part").cast("long").alias("node_id"),
-            "q",
-            F.row_number().over(wa).alias("pos"),
-        )
-        .filter(F.col("pos") <= HITS_TOP_K)
+    auth = top_k(a, (), HITS_TOP_K, F.col("q").desc(), "part", name="pos").select(
+        F.lit("authority").alias("side"),
+        F.col("part").cast("long").alias("node_id"),
+        "q",
+        "pos",
     )
-    hubs = (
-        h.select(
-            F.lit("hub").alias("side"),
-            F.col("cust").cast("long").alias("node_id"),
-            "q",
-            F.row_number().over(wh).alias("pos"),
-        )
-        .filter(F.col("pos") <= HITS_TOP_K)
+    hubs = top_k(h, (), HITS_TOP_K, F.col("q").desc(), "cust", name="pos").select(
+        F.lit("hub").alias("side"),
+        F.col("cust").cast("long").alias("node_id"),
+        "q",
+        "pos",
     )
     return (
         auth.unionByName(hubs)
@@ -1537,8 +1521,6 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vs reference: no analogue (no graph surface in `dashboard_nfp.py`).
     """
-    from pyspark.sql.window import Window
-
     # posting-list pair generation — one lineitem scan, one exchange
     # (round 15; was a two-scan self-join, see _copurchase_pairs)
     pairs = _copurchase_pairs(spark, sf_dir)
@@ -1552,11 +1534,8 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint(eager=True)
     )
-    w_seed = Window.orderBy(F.col("outdeg").desc(), "src")
-    seed = (
-        deg.select("src", F.row_number().over(w_seed).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(F.col("src").alias("part"), F.lit(1).alias("is_seed"))
+    seed = top_k(deg, (), 1, F.col("outdeg").desc(), "src").select(
+        F.col("src").alias("part"), F.lit(1).alias("is_seed")
     )
     nodes = (
         und.select(F.col("src").alias("part"))
@@ -1578,17 +1557,14 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0.0))
     for _ in range(PR_ITERS):
         pr = _pagerank_step(und, deg, nodes, pr, "part", teleport)
-    w = Window.orderBy(F.col("pr_r").desc(), "part")
-    return (
-        pr.select("part", dround(F.col("pr"), 6).alias("pr_r"))
-        .select(
-            "part",
-            F.col("pr_r").alias("ppr"),
-            F.row_number().over(w).cast("int").alias("pos"),
-        )
-        .filter(F.col("pos") <= PPR_TOP_K)
-        .orderBy("pos")
-    )
+    return top_k(
+        pr.select("part", dround(F.col("pr"), 6).alias("ppr")),
+        (),
+        PPR_TOP_K,
+        F.col("ppr").desc(),
+        "part",
+        name="pos",
+    ).orderBy("pos")
 
 
 QUERIES["graph_pagerank_personalized"] = graph_pagerank_personalized

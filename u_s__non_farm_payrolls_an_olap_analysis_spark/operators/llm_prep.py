@@ -867,10 +867,6 @@ ORACLE["vocab_bpe_pair_counts"] = (
 # and >= 2 of a small required-stopword set must appear.
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
-GOPHER_MIN_MEAN_LEN = 3.0
-GOPHER_MAX_MEAN_LEN = 10.0
-GOPHER_MAX_SYMBOL_RATIO = 0.1
-GOPHER_MIN_ALPHA_RATIO = 0.8
 GOPHER_REQUIRED_STOPS = (
     "the", "be", "to", "of", "and", "that", "have", "with",
 )

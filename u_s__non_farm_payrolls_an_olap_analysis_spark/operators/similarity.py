@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from ..functions.iterate import fixpoint
 from ..functions.numerics import _nearest_long_away, d38, dround, dsum_scaled
+from ..functions.ranks import top_k
 from ..functions.vectors import cosine, cosine_sql, dot
 from ..io import read_table
 
@@ -68,16 +69,6 @@ def _cosine_scored(q: DataFrame, c: DataFrame) -> DataFrame:
         "neighbor_id",
         *[x for x in c.columns if x not in ("neighbor_id", "ce")],
         dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
-    )
-
-
-def _top_k(scored: DataFrame, k: int, *order, name: str = "rank") -> DataFrame:
-    """Each query's first ``k`` rows in ``order`` (which must end in a
-    unique tiebreak), numbered 1..k in the int column ``name``: one
-    ``row_number`` window per query."""
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return scored.withColumn(name, F.row_number().over(w)).filter(
-        F.col(name) <= k
     )
 
 
@@ -147,8 +138,13 @@ def sim_search_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X12 — exact brute-force cosine top-k per query (the correctness
     baseline every ANN variant is measured against)."""
     q, c = _sides(read_table(spark, sf_dir, "embeddings"))
-    return _top_k(
-        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
+    return top_k(
+        _cosine_scored(q, c),
+        "query_id",
+        TOP_K,
+        F.col("cosine").desc(),
+        "neighbor_id",
+        name="rank",
     )
 
 
@@ -180,13 +176,8 @@ def assign_to_codebook(cand: DataFrame, cent: DataFrame) -> DataFrame:
         "cent_id",
         dround(cosine(F.col("ce"), F.col("cent_e")), 6).alias("cc"),
     )
-    w_assign = Window.partitionBy("neighbor_id").orderBy(
-        F.col("cc").desc(), "cent_id"
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("neighbor_id", "ce", F.col("cent_id").alias("list_id"))
+    return top_k(scored, "neighbor_id", 1, F.col("cc").desc(), "cent_id").select(
+        "neighbor_id", "ce", F.col("cent_id").alias("list_id")
     )
 
 
@@ -204,7 +195,9 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
         "cent_id",
         dround(cosine(F.col("qe"), F.col("cent_e")), 6).alias("qc"),
     )
-    probes = _top_k(q_scored, IVF_PROBES, F.col("qc").desc(), "cent_id").select(
+    probes = top_k(
+        q_scored, "query_id", IVF_PROBES, F.col("qc").desc(), "cent_id", name="rank"
+    ).select(
         "query_id", "qe", F.col("cent_id").alias("list_id")
     )
 
@@ -214,7 +207,9 @@ def _ivf_search(q: DataFrame, cand: DataFrame, cent: DataFrame) -> DataFrame:
         "neighbor_id",
         dround(cosine(F.col("qe"), F.col("ce")), 6).alias("cosine"),
     )
-    return _top_k(scored, TOP_K, F.col("cosine").desc(), "neighbor_id")
+    return top_k(
+        scored, "query_id", TOP_K, F.col("cosine").desc(), "neighbor_id", name="rank"
+    )
 
 
 KMEANS_ITERS = 3
@@ -388,7 +383,9 @@ def sim_search_int8_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole top-k is oracle-checked, scores included. Zero vectors
     (scale 0) are dropped on both sides."""
     scored = _int8_scored(read_table(spark, sf_dir, "embeddings"))
-    return _top_k(scored, TOP_K, F.col("score").desc(), "neighbor_id")
+    return top_k(
+        scored, "query_id", TOP_K, F.col("score").desc(), "neighbor_id", name="rank"
+    )
 
 
 QUERIES = {
@@ -729,7 +726,9 @@ def sim_search_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = _cosine_scored(q, c).filter(
         (F.col("cosine") >= HN_LO) & (F.col("cosine") < HN_HI)
     )
-    return _top_k(band, HN_K, F.col("cosine").desc(), "neighbor_id")
+    return top_k(
+        band, "query_id", HN_K, F.col("cosine").desc(), "neighbor_id", name="rank"
+    )
 
 
 QUERIES["sim_search_hard_negatives"] = sim_search_hard_negatives
@@ -805,7 +804,7 @@ def sim_search_hamming_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.bit_count(F.col("q1").bitwiseXOR(F.col("c1")))
         ).cast("int").alias("hamming"),
     )
-    return _top_k(scored, TOP_K, "hamming", "neighbor_id")
+    return top_k(scored, "query_id", TOP_K, "hamming", "neighbor_id", name="rank")
 
 
 QUERIES["sim_search_hamming_binary"] = sim_search_hamming_binary
@@ -954,7 +953,9 @@ def sim_search_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         score.alias("score"),
     )
-    return _top_k(ranked, TOP_K, F.col("score").desc(), "neighbor_id")
+    return top_k(
+        ranked, "query_id", TOP_K, F.col("score").desc(), "neighbor_id", name="rank"
+    )
 
 
 QUERIES["sim_search_pq_adc"] = sim_search_pq_adc
@@ -1032,15 +1033,28 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding=("qe", "ce"),
         label=("true_label", "nb_label"),
     )
-    nn = _top_k(
-        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
+    nn = top_k(
+        _cosine_scored(q, c),
+        "query_id",
+        TOP_K,
+        F.col("cosine").desc(),
+        "neighbor_id",
+        name="rank",
     )
     votes = nn.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("votes"),
         F.max("cosine").alias("best_cos"),
     )
     return (
-        _top_k(votes, 1, F.col("votes").desc(), F.col("best_cos").desc(), "nb_label")
+        top_k(
+            votes,
+            "query_id",
+            1,
+            F.col("votes").desc(),
+            F.col("best_cos").desc(),
+            "nb_label",
+            name="rank",
+        )
         .select(
             "query_id",
             F.col("nb_label").alias("predicted_label"),
@@ -1139,7 +1153,14 @@ def sim_search_mmr_diversified(
         .alias("rel_s"),
     )
     cand = (
-        _top_k(scored, MMR_POOL, F.col("rel_s").desc(), "neighbor_id")
+        top_k(
+            scored,
+            "query_id",
+            MMR_POOL,
+            F.col("rel_s").desc(),
+            "neighbor_id",
+            name="rank",
+        )
         .drop("rank")
         .localCheckpoint(eager=True)
     )
@@ -1195,7 +1216,7 @@ def sim_search_mmr_diversified(
             - F.lit(MMR_D_NUM) * F.col("ms_s")
         )
         pick = (
-            _top_k(sc, 1, score_s.desc(), "neighbor_id")
+            top_k(sc, "query_id", 1, score_s.desc(), "neighbor_id", name="rank")
             .select("query_id", "neighbor_id", "rel_s", "ms_s")
             # cut lineage per stage: stage t references selected_{t-1}
             # TWICE (anti-join + max-sim join), so without the cut the
@@ -1341,7 +1362,9 @@ def sim_eval_mrr_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         label=("q_label", "c_label"),
     )
     scored = _cosine_scored(q, c)
-    topk = _top_k(scored, EVAL_K, F.col("cosine").desc(), "neighbor_id")
+    topk = top_k(
+        scored, "query_id", EVAL_K, F.col("cosine").desc(), "neighbor_id", name="rank"
+    )
     rel = F.col("c_label") == F.col("q_label")
     hits = topk.groupBy("query_id", "q_label").agg(
         F.sum(F.when(rel, F.lit(1)).otherwise(F.lit(0))).alias("n_hits"),
@@ -1655,21 +1678,12 @@ def sim_eval_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cl = assigned.groupBy("list_id", "lab").agg(
         F.count(F.lit(1)).alias("c")
     )
-    w_maj = Window.partitionBy("list_id").orderBy(
-        F.col("c").desc(), "lab"
-    )
-    per = (
-        cl.withColumn("rn", F.row_number().over(w_maj))
-        .withColumn(
-            "size", F.sum("c").over(Window.partitionBy("list_id"))
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("list_id").alias("cluster_id"),
-            F.col("size").cast("long").alias("size"),
-            F.col("lab").cast("int").alias("majority_label"),
-            F.col("c").cast("long").alias("majority_count"),
-        )
+    sized = cl.withColumn("size", F.sum("c").over(Window.partitionBy("list_id")))
+    per = top_k(sized, "list_id", 1, F.col("c").desc(), "lab").select(
+        F.col("list_id").alias("cluster_id"),
+        F.col("size").cast("long").alias("size"),
+        F.col("lab").cast("int").alias("majority_label"),
+        F.col("c").cast("long").alias("majority_count"),
     )
     tot = per.agg(
         F.sum("majority_count").alias("maj_tot"),
@@ -1777,6 +1791,23 @@ def _centroid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _centroid_top(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The classifier's ``k`` nearest centroids per vector, numbered in
+    ``rn`` under the total order (cosine DESC 6-dp, class ASC), each
+    with its cosine as an exact 1e-6-unit integer ``ci``."""
+    scored = _centroid_scored(spark, sf_dir).withColumn(
+        "ci", dround(F.col("cos") * F.lit(1e6), 0).cast("long")
+    )
+    return top_k(scored, "vec_id", k, F.col("cos").desc(), "cls")
+
+
+def _centroid_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each vector's true label ``t`` and nearest-centroid prediction ``p``."""
+    return _centroid_top(spark, sf_dir, 1).select(
+        F.col("label").alias("t"), F.col("cls").alias("p")
+    )
+
+
 _CENTROID_SQL = (
     "x AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e "
     "FROM embeddings), "
@@ -1810,15 +1841,7 @@ def sim_eval_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: centroids are a k×d aggregate broadcast back; the corpus is
     scanned once for scoring; the confusion algebra runs on ≤k² rows."""
-    scored = _centroid_scored(spark, sf_dir)
-    w_pred = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cls")
-    )
-    pred = (
-        scored.withColumn("rn", F.row_number().over(w_pred))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("t"), F.col("cls").alias("p"))
-    )
+    pred = _centroid_pred(spark, sf_dir)
     n_true = pred.groupBy(F.col("t").alias("label")).agg(
         F.count(F.lit(1)).alias("n_true")
     )
@@ -1981,15 +2004,7 @@ def sim_eval_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the scored stream + per-vector argmax (the confusion
     operator's shape); the κ algebra runs on k-row marginals."""
-    scored = _centroid_scored(spark, sf_dir)
-    w_pred = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cls")
-    )
-    pred = (
-        scored.withColumn("rn", F.row_number().over(w_pred))
-        .filter(F.col("rn") == 1)
-        .select(F.col("label").alias("t"), F.col("cls").alias("p"))
-    )
+    pred = _centroid_pred(spark, sf_dir)
     n_true = pred.groupBy(F.col("t").alias("lbl")).agg(
         F.count(F.lit(1)).alias("r")
     )
@@ -2081,20 +2096,7 @@ def sim_eval_margin_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the scored stream + one per-vector rank, then a ≤5-row
     rollup."""
-    scored = _centroid_scored(spark, sf_dir)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cls")
-    )
-    top2 = (
-        scored.select(
-            "vec_id",
-            "label",
-            "cls",
-            dround(F.col("cos") * F.lit(1e6), 0).cast("long").alias("ci"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 2)
-    )
+    top2 = _centroid_top(spark, sf_dir, 2)
     per_vec = top2.groupBy("vec_id", "label").agg(
         F.sum(F.when(F.col("rn") == 1, F.col("ci"))).alias("c1"),
         F.sum(F.when(F.col("rn") == 2, F.col("ci"))).alias("c2"),
@@ -2194,8 +2196,9 @@ def sim_search_cascade_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the entire economics of cascaded retrieval at billion-vector
     scale."""
     emb = read_table(spark, sf_dir, "embeddings")
-    survivors = _top_k(
+    survivors = top_k(
         _int8_scored(emb).withColumnRenamed("score", "coarse_score"),
+        "query_id",
         CASCADE_L1,
         F.col("coarse_score").desc(),
         "neighbor_id",
@@ -2214,7 +2217,9 @@ def sim_search_cascade_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "coarse_score",
         "coarse_rank",
     )
-    return _top_k(reranked, TOP_K, F.col("cosine").desc(), "neighbor_id")
+    return top_k(
+        reranked, "query_id", TOP_K, F.col("cosine").desc(), "neighbor_id", name="rank"
+    )
 
 
 QUERIES["sim_search_cascade_rerank"] = sim_search_cascade_rerank
@@ -2287,7 +2292,9 @@ def sim_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         label=("q_label", "c_label"),
     )
     scored = _cosine_scored(q, c)
-    topk = _top_k(scored, EVAL_K, F.col("cosine").desc(), "neighbor_id")
+    topk = top_k(
+        scored, "query_id", EVAL_K, F.col("cosine").desc(), "neighbor_id", name="rank"
+    )
     gain = _nearest_long_away(
         F.lit(float(_NDCG_SCALE))
         / F.log2(F.col("rank").cast("double") + F.lit(1.0))
@@ -2503,12 +2510,7 @@ def sim_eval_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cent_id",
         dround(cosine(F.col("ce"), F.col("cent_e")), 6).alias("cc"),
     )
-    w = Window.partitionBy("neighbor_id").orderBy(
-        F.col("cc").desc(), "cent_id"
-    )
-    r2 = scored.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= 2
-    )
+    r2 = top_k(scored, "neighbor_id", 2, F.col("cc").desc(), "cent_id")
     pv = r2.groupBy("neighbor_id").agg(
         F.max(F.when(F.col("rn") == 1, F.col("cent_id"))).alias("cluster"),
         F.max(F.when(F.col("rn") == 1, F.col("cc"))).alias("cc1"),
@@ -2609,20 +2611,7 @@ def sim_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the scored stream + one per-vector rank + a ≤10-row bin
     rollup."""
-    scored = _centroid_scored(spark, sf_dir)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("cls")
-    )
-    top1 = (
-        scored.select(
-            "vec_id",
-            "label",
-            "cls",
-            dround(F.col("cos") * F.lit(1e6), 0).cast("long").alias("ci"),
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-    )
+    top1 = _centroid_top(spark, sf_dir, 1)
     binw = int(2_000_000 // ECE_NBINS)
     binned = top1.select(
         F.least(
@@ -2740,8 +2729,13 @@ def _exact_cosine_topk_64(emb: DataFrame) -> DataFrame:
     part of the operator contract; the truth side must match it or
     recall would be measured against neighbors the ANN never saw)."""
     q, c = _sides(emb.filter(F.size("embedding") >= 64))
-    return _top_k(
-        _cosine_scored(q, c), TOP_K, F.col("cosine").desc(), "neighbor_id"
+    return top_k(
+        _cosine_scored(q, c),
+        "query_id",
+        TOP_K,
+        F.col("cosine").desc(),
+        "neighbor_id",
+        name="rank",
     ).select("query_id", "neighbor_id")
 
 

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from ..functions.derived import scratch_path
 from ..functions.numerics import descale, dround
+from ..functions.ranks import top_k
 from ..functions.timeparts import month_of, monthly_partials, pct_change, year_of
 from ..io import read_table, upsert_by_key
 
@@ -198,10 +199,9 @@ def _orders_change_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fold_change_log(log: DataFrame) -> DataFrame:
     """Latest-per-key fold with tombstone drop: one shuffle on the key."""
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("seq").desc())
     return (
-        log.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
+        top_k(log, "o_orderkey", 1, F.col("seq").desc())
+        .filter(F.col("op") != "D")
         .select("o_orderkey", F.col("price").alias("o_totalprice"))
         .orderBy("o_orderkey")
     )

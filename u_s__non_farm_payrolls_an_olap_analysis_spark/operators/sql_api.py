@@ -317,20 +317,22 @@ def sql_distinct_on_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one exchange by customer, rank-1 filter — no global sort
     before the output ORDER BY."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     from ..functions.numerics import dround
+    from ..functions.ranks import top_k
     from ..io import read_table
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
-    )
     return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top_k(
+            orders,
+            "o_custkey",
+            1,
+            F.col("o_orderdate").desc(),
+            F.col("o_orderkey").desc(),
+        )
         .select(
             F.col("o_custkey").alias("custkey"),
             F.col("o_orderdate").alias("last_order_ts"),

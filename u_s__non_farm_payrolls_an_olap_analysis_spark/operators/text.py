@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numerics import d38, dround
+from ..functions.ranks import top_k
 from ..io import read_table
 
 # Stopword set for quality/langid heuristics: function words present in the
@@ -680,8 +681,6 @@ def text_langid_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     training + rank-distance classification) is what's exercised and
     hash-checked; on natural multilingual text the same plan is the
     published classifier."""
-    from pyspark.sql.window import Window
-
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.lower(F.col("text")).alias("t")
     )
@@ -711,23 +710,18 @@ def text_langid_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    w_lang = Window.partitionBy("lang").orderBy(
-        F.col("cnt").desc(), "tri"
-    )
-    prof = (
-        doc_tri.groupBy("lang", "tri")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("lang_rank", F.row_number().over(w_lang))
-        .filter(F.col("lang_rank") <= CT_PROF_K)
-        .select(F.col("lang").alias("cand_lang"), "tri", "lang_rank")
-    )
+    prof = top_k(
+        doc_tri.groupBy("lang", "tri").agg(F.sum("cnt").alias("cnt")),
+        "lang",
+        CT_PROF_K,
+        F.col("cnt").desc(),
+        "tri",
+        name="lang_rank",
+    ).select(F.col("lang").alias("cand_lang"), "tri", "lang_rank")
 
-    w_doc = Window.partitionBy("doc_id").orderBy(F.col("cnt").desc(), "tri")
-    doc_prof = (
-        doc_tri.withColumn("doc_rank", F.row_number().over(w_doc))
-        .filter(F.col("doc_rank") <= CT_DOC_K)
-        .select("doc_id", "tri", "doc_rank")
-    )
+    doc_prof = top_k(
+        doc_tri, "doc_id", CT_DOC_K, F.col("cnt").desc(), "tri", name="doc_rank"
+    ).select("doc_id", "tri", "doc_rank")
 
     langs = docs.select(F.col("lang").alias("cand_lang")).distinct()
     dist = (
@@ -743,11 +737,8 @@ def text_langid_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("distance")
         )
     )
-    w_pick = Window.partitionBy("doc_id").orderBy("distance", "cand_lang")
-    pred = (
-        dist.withColumn("rn", F.row_number().over(w_pick))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", F.col("cand_lang").alias("pred_lang"), "distance")
+    pred = top_k(dist, "doc_id", 1, "distance", "cand_lang").select(
+        "doc_id", F.col("cand_lang").alias("pred_lang"), "distance"
     )
     return (
         docs.select("doc_id", "lang")
@@ -1015,7 +1006,6 @@ ORACLE["text_bpe_encode_count"] = (
 # --- Association rules (Agrawal & Srikant, VLDB 1994) -----------------------
 
 AR_MINSUP = 0.30  # minimum pair support (fraction of documents)
-AR_MINCONF = 0.60  # minimum rule confidence
 
 
 def mine_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,15 +1304,18 @@ def text_keyword_extract_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_phrase = ps.groupBy("doc_id", "phrase").agg(
         F.max("s_scaled").alias("s_scaled")
     )
-    rk = Window.partitionBy("doc_id").orderBy(
-        F.col("s_scaled").desc(), "phrase"
-    )
     return (
-        per_phrase.withColumn("rank", F.row_number().over(rk))
-        .filter(F.col("rank") <= RAKE_TOPK)
+        top_k(
+            per_phrase,
+            "doc_id",
+            RAKE_TOPK,
+            F.col("s_scaled").desc(),
+            "phrase",
+            name="rank",
+        )
         .select(
             "doc_id",
-            F.col("rank").cast("int").alias("rank"),
+            "rank",
             "phrase",
             (F.col("s_scaled").cast("double") / RAKE_SCALE).alias("score"),
         )

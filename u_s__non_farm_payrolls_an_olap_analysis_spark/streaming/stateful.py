@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.ranks import top_k
 from ..functions.timeparts import ntz_from_epoch_micros
 from .stream_windows import _drain_to_memory, _events_stream
 
@@ -91,12 +92,8 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # last emission per user = final profile (update-mode memory sink keeps
     # every emission; dedup by max n_events which is monotone per user)
     out = _drain_to_memory(profiles, spark, output_mode="update")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        top_k(out, "user_id", 1, F.col("n_events").desc())
         .drop("rn")
         .withColumn("last_ts", ntz_from_epoch_micros("last_us"))
         .drop("last_us")
@@ -184,14 +181,8 @@ def stream_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = _drain_to_memory(totals, spark, output_mode="update")
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return top_k(out, "user_id", 1, F.col("n_events").desc()).drop("rn")
 
 
 QUERIES = {"stream_stateful_user_profile": stream_stateful_user_profile}
